@@ -1,5 +1,6 @@
 package graft
 
+import graft.streaming.LocalCheckpointFileManager
 import org.apache.spark.sql.SparkSession
 
 /** Shared local-mode SparkSession builder for the harness mains and tests.
@@ -12,6 +13,21 @@ import org.apache.spark.sql.SparkSession
   * disk carries TIMESTAMP(NANOS) (rounds ≤10 did; the conf is inert for
   * the micros fixtures shipped since, and the loader branches on the read
   * dtype either way — FixtureSchemaCanarySpec).
+  *
+  * Streaming checkpoints go through
+  * [[graft.streaming.LocalCheckpointFileManager]]. Without the native
+  * libhadoop (none ships with the bundled Hadoop client), Hadoop's local
+  * filesystem spawns a `chmod` child for every file and directory it
+  * creates and a `readlink` child for every FileContext rename: about
+  * 4,850 child processes in one run of the benchmark's stream_chain, and
+  * tens of milliseconds on every offset-log, commit-log and state-store
+  * write. The manager keeps Spark's write-temp-then-rename protocol and
+  * Hadoop's `.crc` sidecars (verified on read), sets permissions through
+  * `java.nio`, and leaves non-`file:` paths to Spark's default manager.
+  * Spark's state-store checksum files and commit validation stay at
+  * their defaults. To opt out, pass Spark's own
+  * `spark.sql.streaming.checkpointFileManagerClass` in `extra`, e.g. set
+  * to `org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager`.
   */
 object Sessions {
   def local(
@@ -84,6 +100,8 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      .config(LocalCheckpointFileManager.ConfKey,
+        classOf[LocalCheckpointFileManager].getName)
     extra.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -284,10 +284,13 @@ object TextOps {
   }
 
   /** Distributed global prefix sum: appends `cumName` = running sum of
-    * `valueCol` (must be LongType) over the TOTAL order `order` (include a
-    * unique tie-breaker). Two passes: range-partition by the order, window
-    * WITHIN each partition, then add per-partition prefix offsets (a
-    * partition-count-bounded driver collect) — never the single-partition
+    * `valueCol` (must be LongType; checked up front) over the TOTAL order
+    * `order` (include a unique tie-breaker). NULL values are skipped and
+    * rows before the first non-NULL value get a NULL cum, exactly as
+    * `SUM(x) OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)`. Two passes:
+    * range-partition by the order, window WITHIN each partition, then add
+    * per-partition prefix offsets (a partition-count-bounded driver
+    * collect) — never the single-partition
     * window Spark falls into for ORDER BY without PARTITION BY, so it
     * holds at any corpus size. localCheckpoint (eager), not persist: the
     * pid→offset map is only valid for THIS materialization — a persisted
@@ -312,6 +315,10 @@ object TextOps {
   def distributedCumsumSplit(df: org.apache.spark.sql.DataFrame, valueCol: String,
       cumName: String, order: org.apache.spark.sql.Column*)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val vType = df.schema(valueCol).dataType
+    require(vType == org.apache.spark.sql.types.LongType,
+      s"distributedCumsum: column `$valueCol` must be LongType, got " +
+        s"${vType.simpleString}; cast it to long first")
     // Persist the input across the range exchange's TWO executions of it
     // (boundary sampling + the real pass) — for callers whose frame is an
     // expensive projection (full-document tokenization in token_budget /
@@ -332,12 +339,19 @@ object TextOps {
       .repartitionByRange(order: _*)
       .withColumn("__pid", spark_partition_id())
       .localCheckpoint(false)
+    // Per partition: its total (0 when every value in it is NULL) and
+    // whether it holds any non-NULL value.
     val partTotals =
-      try ranged.groupBy("__pid").agg(sum(valueCol).as("t"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq.sortBy(_._1)
+      try ranged.groupBy("__pid")
+        .agg(coalesce(sum(valueCol), lit(0L)).as("t"), count(valueCol).as("c"))
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2) > 0))
+        .toSeq.sortBy(_._1)
       finally in.unpersist()
-    val offsets = partTotals.map(_._1)
-      .zip(partTotals.scanLeft(0L)(_ + _._2).dropRight(1)).toMap
+    // pid -> (sum of all earlier partitions, whether any earlier partition
+    // held a non-NULL value); the flag gives the window's leading NULLs.
+    val offsets = partTotals.map(_._1).zip(
+      partTotals.scanLeft((0L, false)) { case ((acc, seen), (_, t, c)) =>
+        (acc + t, seen || c) }.dropRight(1)).toMap
     // The cum pass (r22, guide §2.4 "remove shuffles outright"): the old
     // form spelled it `sum over Window.partitionBy("__pid")`, and because
     // a checkpointed LogicalRDD reports UnknownPartitioning, Catalyst
@@ -364,14 +378,18 @@ object TextOps {
           org.apache.spark.sql.types.LongType, nullable = true))
     val cum = sorted.mapPartitions { it =>
       var acc = 0L
+      var seen = false
       var init = false
       it.map { r =>
-        if (!init) { acc = bcOff.value.getOrElse(r.getInt(pidIdx), 0L); init = true }
-        if (!r.isNullAt(vIdx)) acc += r.getLong(vIdx)
+        if (!init) {
+          val (off, seenBefore) = bcOff.value.getOrElse(r.getInt(pidIdx), (0L, false))
+          acc = off; seen = seenBefore; init = true
+        }
+        if (!r.isNullAt(vIdx)) { acc += r.getLong(vIdx); seen = true }
         val vals = new Array[Any](keepIdx.length + 1)
         var i = 0
         while (i < keepIdx.length) { vals(i) = r.get(keepIdx(i)); i += 1 }
-        vals(keepIdx.length) = acc
+        vals(keepIdx.length) = if (seen) acc else null
         org.apache.spark.sql.Row.fromSeq(
           scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
       }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.SimilarityOps
+import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -62,17 +63,18 @@ class QuantizerHandleSpec extends AnyFunSuite {
       spark.sparkContext.addSparkListener(l)
       try {
         SimilarityOps.encodeWith(e, q).count()
-        Thread.sleep(300) // let listener events drain
+        ListenerDrain(spark.sparkContext)
         val first = jobs.get()
         SimilarityOps.encodeWith(e, q).count()
-        Thread.sleep(300) // let listener events drain
+        ListenerDrain(spark.sparkContext)
         val second = jobs.get() - first
         // An encode is one corpus pass (1-2 jobs with AQE); the training
         // chain alone is 3+ collects. Equal counts pin "no retrain".
         assert(second == first,
           s"second encode ran $second jobs vs $first — a handle re-use " +
             "must not retrain")
-        assert(first <= 2, s"encode-only pass should be 1-2 jobs, ran $first")
+        assert(first >= 1 && first <= 2,
+          s"encode-only pass should be 1-2 jobs, ran $first")
       } finally spark.sparkContext.removeSparkListener(l)
     } finally e.unpersist()
   }

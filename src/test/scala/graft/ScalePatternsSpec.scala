@@ -423,6 +423,37 @@ class ScalePatternsSpec extends AnyFunSuite {
     assert(df.collect().nonEmpty)
   }
 
+  test("distributed cumsum equals the window sum on a nullable column with an all-NULL lead partition") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // 40 rows over 4 range partitions: ids 0-14 are NULL, so at least the
+    // first partition holds only NULLs; later NULLs are scattered
+    val df = (0L until 40L).map(i =>
+      (i, if (i < 15 || i % 7 == 0) None else Some(i * 3 - 20))).toDF("id", "x")
+    assert(df.schema("x").nullable)
+    var fold = Map.empty[Long, Option[Any]]
+    TestSpark.withConfs("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      val (base, cum) = graft.operators.TextOps.distributedCumsumSplit(df, "x", "cum", col("id"))
+      val lead = base.filter(spark_partition_id() === 0)
+      assert(lead.count() > 0 && lead.filter(col("x").isNotNull).count() == 0,
+        "the leading range partition must hold only NULLs")
+      fold = cum.select("id", "cum").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    }
+    val window = df.withColumn("cum", sum("x").over(Window.orderBy("id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .select("id", "cum").collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(fold == window, s"fold diverged from window: ${(fold.toSet diff window.toSet).toSeq.sortBy(_._1)}")
+    assert((0L until 15L).forall(fold(_).isEmpty), "an all-NULL prefix must give NULL, not an offset")
+  }
+
+  test("distributed cumsum rejects a non-long value column before running") {
+    import spark.implicits._
+    val df = Seq((1L, 1), (2L, 2)).toDF("id", "x")
+    val e = intercept[IllegalArgumentException](
+      graft.operators.TextOps.distributedCumsum(df, "x", "cum", col("id")))
+    assert(e.getMessage.contains("LongType"), e.getMessage)
+  }
+
   test("heavy hitters scans the corpus exactly twice and never shuffles the vocabulary") {
     // q_heavy_hitters' claim is structural: pass 1 folds words into the
     // Misra–Gries sketch AND the total count in ONE map-side
