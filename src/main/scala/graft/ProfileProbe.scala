@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.ListenerDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
@@ -11,6 +13,9 @@ import scala.collection.mutable
   * line per Spark job with duration and call site, plus the query total —
   * so "4.4 s" decomposes into "N jobs of X ms each" and the optimization
   * target (fewer rounds vs cheaper rounds) is evidence, not a guess.
+  * The query line also carries `compiles`, the number of Janino compiles
+  * (driver and executor) the instrumented run paid: 0 means every
+  * generated class came from Spark's code cache.
   *
   * Usage: runMain graft.ProfileProbe <sfDir> <q_name> [q_name...]
   */
@@ -70,14 +75,17 @@ object ProfileProbe {
       q(spark, sfDir).write.format("noop").mode("overwrite").save() // warm
       spark.catalog.clearCache()
       jobs.clear(); stages.clear()
+      ListenerDrain(spark.sparkContext)
       collecting = true
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       q(spark, sfDir).write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      ListenerDrain(spark.sparkContext) // trailing job-end and stage events
       collecting = false
-      Thread.sleep(200) // let trailing job-end events drain
       val recs = jobs.values.toSeq
-      println(s"== $n wall=${f"$wall%.3f"}s jobs=${recs.size} " +
+      println(s"== $n wall=${f"$wall%.3f"}s jobs=${recs.size} compiles=$compiles " +
         s"jobs_ms_sum=${recs.filter(_.t1 > 0).map(r => r.t1 - r.t0).sum}")
       recs.foreach { r =>
         val d = if (r.t1 > 0) r.t1 - r.t0 else -1

@@ -30,17 +30,34 @@ object Tables {
     * still computes from the inputs. Keyed per SparkSession (weakly — a
     * stopped session's entries are collectable) because a schema belongs
     * to the session whose confs inferred it (e.g. the nanosAsLong branch
-    * below). Entries are keyed on the path's MODIFICATION TIME (r22,
-    * r21 ADVICE #3): a parquet read under a user-supplied schema resolves
-    * columns BY NAME and yields nulls for columns absent from a rewritten
-    * file — silent wrong rows, not a loud error — so a path regenerated
-    * in-session (a probe rewriting its corpus) must re-infer. The stat is
-    * one FileSystem.getFileStatus per table() call, microseconds against
-    * the ~20 ms footer job it replaces. */
+    * below). Entries are keyed on a FINGERPRINT of the path's file
+    * listing — every file's name, size and modification time — because a
+    * parquet read under a user-supplied schema resolves columns BY NAME
+    * and yields nulls for columns absent from a rewritten file: silent
+    * wrong rows, not a loud error. So a path regenerated in-session (a
+    * probe rewriting its corpus) must re-infer, even when the rewrite
+    * lands within the same second as the first write, where a
+    * 1 s-resolution directory mtime would not change.
+    * The fingerprint is one directory listing per table() call; it reads
+    * no permission bits, which Hadoop's local filesystem would fetch by
+    * spawning a child process. */
   private val schemaCatalog =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[
-        String, (Long, org.apache.spark.sql.types.StructType)]]()
+        String, (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType)]]()
+
+  /** (relative path, size, mtime) of every file under `root`, sorted. */
+  private def listingFingerprint(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] = {
+    val top = fs.getFileStatus(root)
+    val prefix = top.getPath.toUri.getPath.length
+    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toUri.getPath.drop(prefix), st.getLen,
+        st.getModificationTime))
+    walk(top).sorted
+  }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -49,14 +66,13 @@ object Tables {
         spark, _ => scala.collection.concurrent.TrieMap.empty)
     }
     val hPath = new org.apache.hadoop.fs.Path(path)
-    val mtime = hPath
-      .getFileSystem(spark.sessionState.newHadoopConf())
-      .getFileStatus(hPath).getModificationTime
+    val fingerprint = listingFingerprint(
+      hPath.getFileSystem(spark.sessionState.newHadoopConf()), hPath)
     val schema = perSession.get(path) match {
-      case Some((t, s)) if t == mtime => s
+      case Some((f, s)) if f == fingerprint => s
       case _ =>
         val s = spark.read.parquet(path).schema
-        perSession.put(path, (mtime, s))
+        perSession.put(path, (fingerprint, s))
         s
     }
     spark.read.schema(schema).parquet(path)

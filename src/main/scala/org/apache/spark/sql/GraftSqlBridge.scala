@@ -12,6 +12,23 @@ package org.apache.spark.sql
   *
   * Only valid for sessions sharing one SparkContext/SharedState (cache
   * manager, catalog listeners): `rebind` asserts it.
+  *
+  * The casts depend on Spark 4's `classic` namespace; GraftSqlBridgeSpec
+  * fails by name if it moves, if `rebind` stops carrying the source's
+  * analyzed plan to the target session, or if it stops refusing a session
+  * of another SparkContext. The fallback, should `classic.Dataset.ofRows`
+  * go away, is the body `ofRows` runs, which the spec checks against
+  * `rebind` (the same private-`sql` pattern as a connector's
+  * `withActive` + `executePlan` + `assertAnalyzed` constructor):
+  * {{{
+  * cs.withActive {
+  *   val qe = cs.sessionState.executePlan(cdf.logicalPlan)
+  *   qe.assertAnalyzed()
+  *   new classic.Dataset[Row](qe, RowEncoder.encoderFor(qe.analyzed.schema))
+  * }
+  * }}}
+  * If the session state moves too, the public `createDataFrame(df.rdd,
+  * schema)` route named above is correct but slower.
   */
 object GraftSqlBridge {
   def rebind(df: Dataset[Row], to: SparkSession): Dataset[Row] = {

@@ -196,25 +196,38 @@ class FixtureSchemaCanarySpec extends AnyFunSuite {
     }
   }
 
-  test("a path rewritten with a different schema re-infers (mtime key)") {
+  test("a path rewritten with a different schema re-infers, even within one mtime second") {
     // r21 ADVICE #3: a user-supplied schema resolves columns by name and
     // nulls out missing ones — a rewritten path read through a stale
     // catalog entry would return silent wrong rows. The catalog keys on
-    // the path's mtime, so a rewrite invalidates it.
+    // the path's file listing (names, sizes, mtimes). On a filesystem with
+    // 1 s mtime resolution a rewrite in the same second leaves every mtime
+    // unchanged; simulated by stamping the directory and all files of both
+    // generations with one whole second, so only the file names and sizes
+    // tell the generations apart.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("schema_canary").toString
+    import java.nio.file.{Files, Path}
+    import java.nio.file.attribute.FileTime
+    val dir = Files.createTempDirectory("schema_canary").toString
+    val table = Path.of(dir, "t.parquet")
+    val second = FileTime.fromMillis(1700000000000L)
+    def stamp(): Unit = {
+      val s = Files.walk(table)
+      try s.forEach(p => Files.setLastModifiedTime(p, second)) finally s.close()
+    }
     try {
       Seq((1L, "a")).toDF("id", "s")
-        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+        .write.mode("overwrite").parquet(table.toString)
+      stamp()
       val first = Tables.table(spark, dir, "t")
       assert(first.schema.fieldNames.sameElements(Array("id", "s")))
-      Thread.sleep(1100) // distinct mtime even on 1s-resolution filesystems
       Seq((2L, 3.5, "b")).toDF("id", "x", "s2")
-        .write.mode("overwrite").parquet(s"$dir/t.parquet")
-      val second = Tables.table(spark, dir, "t")
-      assert(second.schema.fieldNames.sameElements(Array("id", "x", "s2")),
-        s"stale catalog schema served after rewrite: ${second.schema}")
-      assert(second.count() == 1)
+        .write.mode("overwrite").parquet(table.toString)
+      stamp()
+      val again = Tables.table(spark, dir, "t")
+      assert(again.schema.fieldNames.sameElements(Array("id", "x", "s2")),
+        s"stale catalog schema served after a same-second rewrite: ${again.schema}")
+      assert(again.as[(Long, Double, String)].collect().toSeq == Seq((2L, 3.5, "b")))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

@@ -1,13 +1,9 @@
 package graft.streaming
 
-import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.TimeUnit
 
-import scala.jdk.CollectionConverters._
-
-import graft.Sessions
+import graft.{ChildJvm, Sessions}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,21 +22,9 @@ class CheckpointChildProcessSpec extends AnyFunSuite {
   test("windowedCounts micro-batches with a file: checkpoint spawn no child process") {
     assume(Files.exists(CheckpointChildProcessProbe.stat), "needs Linux /proc/self/stat")
     val ck = Files.createTempDirectory("graft_ck_children")
-    val log = ck.resolveSibling(ck.getFileName.toString + ".log")
-    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
-      .filterNot(_.startsWith("-Xmx"))
-    val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString) ++ jvmArgs ++
-      Seq("-Xmx1g", "-cp", sys.props("java.class.path"),
-        CheckpointChildProcessProbe.getClass.getName.stripSuffix("$"), ck.toUri.toString)
-    val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log.toFile).start()
-    if (!p.waitFor(300, TimeUnit.SECONDS)) {
-      p.destroyForcibly().waitFor()
-      fail(s"probe JVM did not finish in 300 s; output in $log")
-    }
-    val out = Files.readAllLines(log).asScala
-    assert(p.exitValue == 0, s"probe JVM failed:\n${out.takeRight(40).mkString("\n")}")
+    val out = ChildJvm.run(CheckpointChildProcessProbe, Seq(ck.toUri.toString))
     val grew = out.collectFirst { case s"cminflt_growth=$n" => n.toLong }
-      .getOrElse(fail(s"probe printed no cminflt_growth; output in $log"))
+      .getOrElse(fail(s"probe printed no cminflt_growth:\n${out.mkString("\n")}"))
     assert(grew == 0, s"cminflt grew by $grew over ${CheckpointChildProcessProbe.Measured} " +
       s"batches: about ${grew / 50} child processes were reaped")
     // the integrity layer is still there: Hadoop .crc sidecars on every
