@@ -36,14 +36,18 @@ import org.apache.spark.sql.SparkSession
   * separate entries. Sizing rule: the distinct entries one pass over every
   * registered query compiles when nothing is evicted, times about 3 for
   * headroom. Measured at sf0.01 on 4 cores: a first pass over the 124
-  * registered queries compiles 1,289 distinct entries; the benchmark's 13
-  * batch queries need about 270–290 per pass. At the default of 100 every
+  * registered queries compiles 1,147 distinct entries; the benchmark's 13
+  * batch queries need 255 at sf0.001. At the default of 100 every
   * warm pass recompiled them (2,051–2,052 Janino compiles
   * per warm pass over the 124 queries, with metaspace growing by about
-  * 18 MB a pass); at 4096 a warm pass compiles 10–20 (q_dedup_incremental
-  * every pass, q_agg_distinct or q_neardup_groups now and then) and
-  * metaspace holds at about 198 MB
-  * (`CodegenCacheSpec` guards the 13-query case). The conf is static and
+  * 18 MB a pass); at 4096 a warm pass compiles none and metaspace holds
+  * at about 197 MB (`CodegenCacheSpec` guards the 13-query case).
+  * `spark.sql.codegen.useIdInClassName` is off so that a pipeline's code
+  * text, and with it the cache key, does not carry the whole-stage codegen
+  * stage id: adaptive execution numbers stages in the order it plans them,
+  * which varies with timing, and with the id in the class name a warm pass
+  * recompiled 4–20 classes (q_dedup_incremental, q_agg_distinct,
+  * q_neardup_groups) whenever the numbering moved. The cache conf is static and
   * the cache is built once per JVM, so the value only takes effect when
   * this builder creates the JVM's first session; an `extra` entry
   * overrides it.
@@ -123,6 +127,10 @@ object Sessions {
       .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries.toString)
+      // Keeps the whole-stage codegen stage id out of the generated class
+      // name, so a pipeline's code text (the cache key) does not depend on
+      // the order in which adaptive execution happened to plan its stages.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config(LocalCheckpointFileManager.ConfKey,
         classOf[LocalCheckpointFileManager].getName)
     extra.foreach { case (k, v) => builder.config(k, v) }

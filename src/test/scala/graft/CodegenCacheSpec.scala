@@ -12,13 +12,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * recompiles everything. The passes run in a fresh JVM
   * ([[CodegenCacheProbe]]) because the conf is static and the cache is
   * JVM-wide: only the JVM's first session sizes it, and the shared test
-  * JVM's compile counter moves with every other spec. */
+  * JVM's compile counter moves with every other spec. The second pass
+  * only hits the cache because [[Sessions.local]] also keeps the codegen
+  * stage id out of generated class names. */
 class CodegenCacheSpec extends AnyFunSuite {
   test("the shared test session carries Sessions.local's codegen cache cap") {
     // Fails if some spec builds a session before Sessions.local does: the
     // static conf would then keep Spark's default in this JVM.
     assert(TestSpark.spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
       Sessions.CodegenCacheMaxEntries.toString)
+  }
+
+  test("the shared test session keeps codegen stage ids out of class names") {
+    // With the id in the class name, a pipeline's code text depends on the
+    // order in which adaptive execution planned its stages, which varies
+    // from run to run, so a warm pass could miss the cache.
+    assert(TestSpark.spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
   }
 
   test("a second pass of the batch-benchmark queries compiles no class (fresh JVM)") {

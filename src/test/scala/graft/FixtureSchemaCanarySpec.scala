@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -196,41 +197,53 @@ class FixtureSchemaCanarySpec extends AnyFunSuite {
     }
   }
 
-  test("a path rewritten with a different schema re-infers, even within one mtime second") {
+  /** Writes a one-row table, reads it through the schema catalog, rewrites
+    * it with a different schema and reads it again. The directory and every
+    * file of the first generation carry `firstMtime`, those of the second
+    * `secondMtime`, so a test picks whether the rewrite shows in the mtimes. */
+  private def rewriteAndReread(firstMtime: FileTime, secondMtime: FileTime): Unit = {
     // r21 ADVICE #3: a user-supplied schema resolves columns by name and
     // nulls out missing ones — a rewritten path read through a stale
     // catalog entry would return silent wrong rows. The catalog keys on
-    // the path's file listing (names, sizes, mtimes). On a filesystem with
-    // 1 s mtime resolution a rewrite in the same second leaves every mtime
-    // unchanged; simulated by stamping the directory and all files of both
-    // generations with one whole second, so only the file names and sizes
-    // tell the generations apart.
+    // the path's file listing (names, sizes, mtimes).
     import spark.implicits._
-    import java.nio.file.{Files, Path}
-    import java.nio.file.attribute.FileTime
     val dir = Files.createTempDirectory("schema_canary").toString
     val table = Path.of(dir, "t.parquet")
-    val second = FileTime.fromMillis(1700000000000L)
-    def stamp(): Unit = {
+    def stamp(t: FileTime): Unit = {
       val s = Files.walk(table)
-      try s.forEach(p => Files.setLastModifiedTime(p, second)) finally s.close()
+      try s.forEach(p => Files.setLastModifiedTime(p, t)) finally s.close()
     }
     try {
       Seq((1L, "a")).toDF("id", "s")
         .write.mode("overwrite").parquet(table.toString)
-      stamp()
+      stamp(firstMtime)
       val first = Tables.table(spark, dir, "t")
       assert(first.schema.fieldNames.sameElements(Array("id", "s")))
       Seq((2L, 3.5, "b")).toDF("id", "x", "s2")
         .write.mode("overwrite").parquet(table.toString)
-      stamp()
+      stamp(secondMtime)
       val again = Tables.table(spark, dir, "t")
       assert(again.schema.fieldNames.sameElements(Array("id", "x", "s2")),
-        s"stale catalog schema served after a same-second rewrite: ${again.schema}")
+        s"stale catalog schema served after rewrite: ${again.schema}")
       assert(again.as[(Long, Double, String)].collect().toSeq == Seq((2L, 3.5, "b")))
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
+  }
+
+  private val aSecond = FileTime.fromMillis(1700000000000L)
+
+  test("a path rewritten with a different schema re-infers (mtime key)") {
+    // The rewrite lands one whole second later: distinct mtimes even on a
+    // 1 s-resolution filesystem.
+    rewriteAndReread(aSecond, FileTime.fromMillis(aSecond.toMillis + 1000))
+  }
+
+  test("a path rewritten with a different schema re-infers, even within one mtime second") {
+    // On a filesystem with 1 s mtime resolution a rewrite in the same
+    // second leaves every mtime unchanged; both generations carry one
+    // whole second, so only the file names and sizes tell them apart.
+    rewriteAndReread(aSecond, aSecond)
   }
 
   test("real fixture loads and is micro-exact between ts and ts_ns") {
