@@ -1,14 +1,14 @@
 package graft.sources
 
-import java.io.{BufferedReader, IOException, InputStreamReader, PrintWriter}
+import java.io.{BufferedOutputStream, IOException}
 import java.net.Socket
 import java.nio.charset.StandardCharsets
 import java.util
-import java.util.Base64
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -57,9 +57,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Payload: base64-wrapped JSON `{"id":..,"n":..,"ts_us":..}` (the
   * reference's KnobsMessage shape, util/util.go:17-20, with the float
-  * epoch upgraded to integer micros). Malformed payloads are counted and
-  * skipped — the reference's log-and-continue containment
-  * (knobs.go:85-90).
+  * epoch upgraded to integer micros). Lines and payloads are decoded on
+  * bytes by [[WireCodec]] — no regex, charset decode or String per
+  * message; the wire format is unchanged. Malformed payloads (not
+  * Base64, or missing an integer field) are counted and skipped — the
+  * reference's log-and-continue containment (knobs.go:85-90).
   *
   * Options: `host`, `port`, `topic`, `subscription`, `maxRowsPerBatch`,
   * `numPartitions`.
@@ -100,63 +102,43 @@ object SocketEventsSource {
     * driver receiver thread; there is no driver receiver thread left to
     * record). */
   val readerThreads: java.util.Set[String] = ConcurrentHashMap.newKeySet[String]()
-
-  /** Strict 3-field extraction; None on anything missing/non-integer.
-    * Hand-rolled scan, not a regex: every partition reader parses its
-    * whole slice, and Match allocation was the top cost in the soak (the
-    * scan is ~6× faster; field order stays free). */
-  def parse(json: String): Option[(Long, Long, Long)] = {
-    def field(name: String): Option[Long] = {
-      val key = "\"" + name + "\""
-      val at = json.indexOf(key)
-      if (at < 0) return None
-      var i = at + key.length
-      while (i < json.length && (json.charAt(i) == ' ' || json.charAt(i) == ':'))
-        i += 1
-      val neg = i < json.length && json.charAt(i) == '-'
-      if (neg) i += 1
-      var v = 0L
-      var any = false
-      while (i < json.length && json.charAt(i) >= '0' && json.charAt(i) <= '9') {
-        v = v * 10 + (json.charAt(i) - '0'); i += 1; any = true
-      }
-      if (any) Some(if (neg) -v else v) else None
-    }
-    for (id <- field("id"); n <- field("n"); ts <- field("ts_us"))
-      yield (id, n, ts)
-  }
 }
 
-/** One line-framed request/response connection to the broker. Not
-  * thread-safe — callers own synchronization (the pool locks per lease;
-  * the control path locks the stream). */
-private[sources] final class BrokerClient(host: String, port: Int) {
+/** One line-framed request/response connection to the broker: lines go
+  * out through a buffered byte stream and come back through a
+  * [[WireLineReader]], so neither direction builds a `String` per line.
+  * Not thread-safe — callers own synchronization (the pool locks per
+  * lease; the control path locks the stream). */
+private[graft] final class BrokerClient(host: String, port: Int,
+    soTimeoutMs: Int = 60000) {
   private val sock = new Socket(host, port)
   // Bounded reads: the broker's FETCH waits at most 30 s server-side
   // before answering ERR, so 60 s of silence means the broker is hung or
   // the connection is half-dead — surface it as the IOException the
   // reconnect/fail-loudly paths already handle, never a silent stall
   // (the round-9 receiver-death ADVICE, applied to the pull design).
-  sock.setSoTimeout(60000)
-  // charset pinned to match the broker's UTF-8 readers (a bare
-  // PrintWriter writes the JVM default charset)
-  private val out = new PrintWriter(new java.io.OutputStreamWriter(
-    sock.getOutputStream, StandardCharsets.UTF_8), false)
-  private val in = new BufferedReader(
-    new InputStreamReader(sock.getInputStream, StandardCharsets.UTF_8))
+  sock.setSoTimeout(soTimeoutMs)
+  private val out = new BufferedOutputStream(sock.getOutputStream, 1 << 16)
+  /** The last line read: `line.buf[line.start, line.end)`. */
+  val line = new WireLineReader(sock.getInputStream)
 
-  def send(line: String): Unit = {
-    out.println(line)
-    out.flush()
-    if (out.checkError()) throw new IOException(s"broker write failed: $line")
+  /** Queue one protocol line (UTF-8, `\n`-terminated); [[flush]] sends. */
+  def write(l: String): Unit = {
+    out.write(l.getBytes(StandardCharsets.UTF_8))
+    out.write('\n')
   }
 
-  /** Next line; IOException on EOF so callers' reconnect paths fire. */
-  def readLine(): String = {
-    val l = in.readLine()
-    if (l == null) throw new IOException("broker connection closed")
-    l
-  }
+  /** Queue raw bytes — whole payload lines, terminators included. */
+  def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+
+  def flush(): Unit = out.flush()
+
+  def send(l: String): Unit = { write(l); flush() }
+
+  /** Next line into [[line]]; IOException on EOF so callers' reconnect
+    * paths fire. */
+  def readLine(): Unit =
+    if (!line.readLine()) throw new IOException("broker connection closed")
 
   def close(): Unit = try sock.close() catch { case _: Throwable => () }
 }
@@ -249,10 +231,10 @@ private class SocketMicroBatchStream(host: String, port: Int,
   private def connect(): BrokerClient = {
     val c = new BrokerClient(host, port)
     c.send(s"REG $topicName $subName")
-    val resp = c.readLine()
-    if (resp == null || !resp.startsWith("OK ")) {
+    c.readLine()
+    if (!c.line.startsWith(WireCodec.OkPrefix)) {
       c.close()
-      throw new IOException(s"unexpected REG response: $resp")
+      throw new IOException(s"unexpected REG response: ${c.line.text}")
     }
     c
   }
@@ -269,13 +251,14 @@ private class SocketMicroBatchStream(host: String, port: Int,
   }
 
   /** `STAT` → (latest topic seq, subscription's cumulative ack). */
+  private val statTokens = new LineTokens(3)
   private def stat(): (Long, Long) = withControl { c =>
     c.send(s"STAT $topicName $subName")
-    val resp = c.readLine()
-    val parts = resp.trim.split("\\s+")
-    if (parts.length != 3 || parts(0) != "SEQ")
-      throw new IOException(s"unexpected STAT response: $resp")
-    (parts(1).toLong, parts(2).toLong)
+    c.readLine()
+    val t = statTokens
+    if (t.split(c.line.buf, c.line.start, c.line.end) != 3 || !t.is(0, WireCodec.SeqTok))
+      throw new IOException(s"unexpected STAT response: ${c.line.text}")
+    (t.long(1), t.long(2))
   }
 
   /** A brand-new query run starts after the subscription's cumulative
@@ -347,9 +330,11 @@ private class SocketFetchReaderFactory extends PartitionReaderFactory {
 }
 
 /** Executor-side shard reader: STREAMS the shard's slice of the epoch off
-  * the FETCH lease — each next() parses the next MSG line, so network
+  * the FETCH lease — each next() decodes the next MSG line, so network
   * read, base64+JSON decode, and engine consumption overlap instead of
-  * double-buffering the slice (measured ~2× on the 1-lease soak).
+  * double-buffering the slice (measured ~2× on the 1-lease soak). The
+  * decode runs on the lease's bytes ([[WireCodec.FetchLineDecoder]]) into
+  * one reused row: no String, regex or row object per message.
   * Failure contract: a stale pooled lease is re-dialed once, but only
   * while ZERO lines have been consumed (the FETCH replays from scratch);
   * after rows start flowing a connection loss fails the TASK, and
@@ -364,7 +349,15 @@ private class SocketFetchReader(p: SocketFetchPartition)
   private var started = false
   private var sawAnyLine = false
   private var sawEof = false
-  private var cur: InternalRow = _
+  private val decoder = new WireCodec.FetchLineDecoder
+  // (id, n, ts) as three fixed-width longs; Spark projects every scanned
+  // row before it is kept, so the reader may overwrite it on next()
+  private val row = {
+    val r = new UnsafeRow(3)
+    val size = UnsafeRow.calculateBitSetWidthInBytes(3) + 3 * 8
+    r.pointTo(new Array[Byte](size), size)
+    r
+  }
 
   private def fetchLine: String =
     s"FETCH ${p.topic} ${p.shard} ${p.nShards} ${p.after} ${p.upTo}"
@@ -395,43 +388,38 @@ private class SocketFetchReader(p: SocketFetchPartition)
   override def next(): Boolean = {
     ensureStarted()
     while (!sawEof) {
-      val line =
-        try client.readLine()
-        catch {
-          case e: IOException =>
-            if (sawAnyLine) throw e // mid-stream: fail the task, replay
-            redial()
-            client.readLine()
-        }
+      try client.readLine()
+      catch {
+        case e: IOException =>
+          if (sawAnyLine) throw e // mid-stream: fail the task, replay
+          redial()
+          client.readLine()
+      }
       sawAnyLine = true
-      if (line.startsWith("EOF")) {
-        sawEof = true
-      } else {
-        val parts = line.trim.split("\\s+")
-        if (parts.length == 3 && parts(0) == "MSG") {
-          val payload = new String(Base64.getDecoder.decode(parts(2)),
-            StandardCharsets.UTF_8)
-          SocketEventsSource.parse(payload) match {
-            case Some((id, n, tsUs)) =>
-              cur = InternalRow(id, n, tsUs)
-              return true
-            case None =>
-              SocketEventsSource.malformed
-                .computeIfAbsent(p.sub, _ => new AtomicLong())
-                .incrementAndGet()
-          }
-        } else if (parts(0) == "ERR") {
+      val l = client.line
+      decoder.decode(l.buf, l.start, l.end) match {
+        case WireCodec.Eof => sawEof = true
+        case WireCodec.Row =>
+          row.setLong(0, decoder.id)
+          row.setLong(1, decoder.n)
+          row.setLong(2, decoder.tsUs)
+          return true
+        case WireCodec.Malformed =>
+          SocketEventsSource.malformed
+            .computeIfAbsent(p.sub, _ => new AtomicLong())
+            .incrementAndGet()
+        case WireCodec.Err =>
           // a broker-side refusal (trimmed range, timeout) is not a
           // transient socket fault: fail the task without any retry,
           // Spark surfaces it
-          throw new IllegalStateException(s"broker refused fetch: $line")
-        }
+          throw new IllegalStateException(s"broker refused fetch: ${l.text}")
+        case _ => () // blank or unknown line
       }
     }
     false
   }
 
-  override def get(): InternalRow = cur
+  override def get(): InternalRow = row
 
   override def close(): Unit = if (started && client != null) {
     if (sawEof) SocketFetchPool.release(leaseKey, client)

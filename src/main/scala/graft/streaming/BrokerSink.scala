@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.io.PrintWriter
-import java.net.Socket
-import java.nio.charset.StandardCharsets
-import java.util.Base64
+import scala.collection.mutable.ArrayBuffer
 
+import graft.sources.{BrokerClient, WireCodec}
 import org.apache.spark.sql.Dataset
 
 /** The other half of the wire: PUBLISH a streaming Dataset's rows to a
@@ -38,8 +36,14 @@ import org.apache.spark.sql.Dataset
   * collapses back to one logical row. Payloads are the KnobsMessage
   * JSON shape `{"id":..,"n":..,"ts_us":..}` (util/util.go:17-20), so a
   * chained stage parses them with the same codec as any other producer.
+  * Each payload is encoded straight to Base64 bytes ([[WireCodec]]) and
+  * the chunks go out through one buffered byte stream: no String per
+  * message.
   */
 object BrokerSink {
+  /** Payload lines per PUBA chunk. */
+  private final val Chunk = 1000
+
   /** Attach a broker-publishing sink to `events`; caller starts the
     * returned writer (checkpointing, trigger, etc. stay caller-owned). */
   def publishTo(host: String, port: Int, topic: String)(
@@ -62,24 +66,22 @@ object BrokerSink {
         val (host, port) = eps(
           org.apache.spark.TaskContext.getPartitionId() % eps.size)
         if (rows.hasNext) {
-          // buffer the partition's lines first: pushWithRetry may run the
-          // closure twice, and an Iterator can only be consumed once
-          val lines = rows.map { e =>
-            val tsUs = StreamOps.eventMicros(e.ts) // the one shared def
-            val payload = s"""{"id":${e.id},"n":${e.n},"ts_us":$tsUs}"""
-            Base64.getEncoder.encodeToString(
-              payload.getBytes(StandardCharsets.UTF_8))
-          }.toArray
+          // encode the partition first: pushWithRetry may run the closure
+          // twice, and an Iterator can only be consumed once. One byte
+          // run holds every payload line; chunkEnds(k) is where chunk k's
+          // lines end in it
+          val lines = new WireCodec.PayloadLines
+          val chunkEnds = ArrayBuffer.empty[Int]
+          var count = 0
+          rows.foreach { e =>
+            lines.addEvent(e.id, e.n, StreamOps.eventMicros(e.ts)) // the one shared def
+            count += 1
+            if (count % Chunk == 0) chunkEnds += lines.size
+          }
+          if (count % Chunk != 0) chunkEnds += lines.size
           RetrySink.pushWithRetry() { () =>
-            val sock = new Socket(host, port)
+            val c = new BrokerClient(host, port, soTimeoutMs = 30000)
             try {
-              sock.setSoTimeout(30000)
-              val out = new PrintWriter(new java.io.OutputStreamWriter(
-                sock.getOutputStream,
-                java.nio.charset.StandardCharsets.UTF_8), false)
-              val in = new java.io.BufferedReader(
-                new java.io.InputStreamReader(sock.getInputStream,
-                  java.nio.charset.StandardCharsets.UTF_8))
               // PUBA chunks: one broker-side lock per 1000 payloads, and
               // the payload lines are never tokenized (per-message PUB
               // measured ~25k msg/s under 4 producers; chunked bulk is
@@ -102,29 +104,28 @@ object BrokerSink {
               var nChunks = 0
               var acked = 0
               def readOk(): Unit = {
-                val resp = in.readLine()
-                if (resp == null || !resp.startsWith("OK "))
+                c.readLine()
+                if (!c.line.startsWith(WireCodec.OkPrefix))
                   throw new java.io.IOException(
-                    s"publish to $topic not acked (chunk $acked/$nChunks): $resp")
+                    s"publish to $topic not acked (chunk $acked/$nChunks): ${c.line.text}")
                 acked += 1
               }
-              lines.grouped(1000).foreach { chunk =>
-                out.println(s"PUBA $topic ${chunk.length}")
-                chunk.foreach(out.println)
+              var from = 0
+              chunkEnds.foreach { end =>
+                val n = math.min(Chunk, count - nChunks * Chunk)
+                c.write(s"PUBA $topic $n")
+                c.write(lines.bytes, from, end - from)
+                from = end
                 nChunks += 1
                 if (nChunks - acked >= window) {
                   // drain one receipt so both directions keep flowing
-                  out.flush()
-                  if (out.checkError())
-                    throw new java.io.IOException(s"publish to $topic failed")
+                  c.flush()
                   readOk()
                 }
               }
-              out.flush()
-              if (out.checkError())
-                throw new java.io.IOException(s"publish to $topic failed")
+              c.flush()
               while (acked < nChunks) readOk()
-            } finally sock.close()
+            } finally c.close()
           }
           ()
         }

@@ -308,13 +308,25 @@ class MiniBroker(dataDir: Option[String] = None,
       approxBytes.addAndGet(line.length + 1L)
     }
 
-    /** Batch form: n lines, ONE flush (one fdatasync in sync mode) —
-      * the PUBB/PUBA hot path. */
-    def appendAll(lines: Iterator[String]): Unit = synchronized {
+    private val lines = new LineChars // appendMsgs' buffer, guarded by this monitor
+
+    /** Batch form: the `M <topic> <seq> <b64>` lines of `n` consecutive
+      * seqs from `firstSeq`, ONE flush (one fdatasync in sync mode) — the
+      * PUBB/PUBA hot path. */
+    def appendMsgs(topic: String, firstSeq: Long, payloads: Array[String],
+        n: Int): Unit = synchronized {
       guard()
       var b = 0L
       try {
-        lines.foreach { l => out.write(l); out.write('\n'); b += l.length + 1 }
+        var j = 0
+        while (j < n) {
+          lines.add("M "); lines.add(topic); lines.add(' ')
+          lines.addSeq(firstSeq + j); lines.add(' ')
+          lines.add(payloads(j)); lines.add('\n')
+          if (lines.size >= LineChars.DrainAt) b += lines.drainTo(out)
+          j += 1
+        }
+        b += lines.drainTo(out)
         flushSync()
       } catch { case e: java.io.IOException => failed = true; throw e }
       approxBytes.addAndGet(b)
@@ -835,8 +847,7 @@ class MiniBroker(dataDir: Option[String] = None,
         // all n WAL lines land under ONE flush, BEFORE the seq counter
         // moves or the log grows: a kill inside the flush tears at most
         // the final line, and nothing torn was ever visible or OK'd
-        wal.foreach(_.appendAll(
-          Iterator.range(0, i).map(j => s"M ${parts(1)} ${s0 + j + 1} ${batch(j)}")))
+        wal.foreach(_.appendMsgs(parts(1), s0 + 1, batch, i))
         var j = 0
         while (j < i) {
           t.log += ((s0 + j + 1, batch(j)))
@@ -862,7 +873,7 @@ class MiniBroker(dataDir: Option[String] = None,
     }
     val t = topic(topicName)
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    val slice: Either[String, Array[(Long, String)]] = t.log.synchronized {
+    val slice: Either[String, Array[String]] = t.log.synchronized {
       while (t.seq.get() < upTo && System.nanoTime() < deadline &&
           running.get())
         t.log.wait(50)
@@ -873,23 +884,65 @@ class MiniBroker(dataDir: Option[String] = None,
         // range would break at-least-once — fail loudly instead
         Left(s"trimmed-below ${t.base}")
       else
-        Right(t.log.view
-          .slice((after - t.base).toInt, (upTo - t.base).toInt)
-          .filter { case (s, _) => s % nShards == shard }
-          .toArray)
+        Right(shardSlice(t, after, upTo, shard, nShards))
     }
     slice match {
       case Left(err) =>
         out.synchronized { out.println(s"ERR fetch $err"); out.flush() }
       case Right(msgs) =>
         out.synchronized {
-          msgs.foreach { case (s, b64) => out.println(s"MSG $s $b64") }
+          writeMsgs(out, firstShardSeq(after, shard, nShards),
+            nShards, msgs)
           out.println(s"EOF $upTo")
           out.flush()
         }
         fetchRows.computeIfAbsent(s"$topicName#$shard",
           _ => new AtomicLong()).addAndGet(msgs.length.toLong)
     }
+  }
+
+  /** The first seq after `after` with `seq % nShards == shard`. */
+  private def firstShardSeq(after: Long, shard: Int, nShards: Int): Long =
+    after + 1 + Math.floorMod(shard - Math.floorMod(after + 1, nShards.toLong),
+      nShards.toLong)
+
+  /** Payloads of the seqs in `(after, upTo]` with `seq % nShards ==
+    * shard`, in seq order; the k-th has seq `firstShardSeq(after, shard,
+    * nShards) + k * nShards`. log(i) holds seq `base + 1 + i`, so a
+    * shard's messages are every nShards-th entry: indexed directly, the
+    * other shards' entries are never touched. Caller holds the log
+    * monitor, with `base <= after` and `upTo <= base + log.length`. */
+  private def shardSlice(t: Topic, after: Long, upTo: Long, shard: Int,
+      nShards: Int): Array[String] = {
+    val first = firstShardSeq(after, shard, nShards)
+    if (first > upTo) return Array.empty
+    val msgs = new Array[String](((upTo - first) / nShards + 1).toInt)
+    var i = first - t.base - 1
+    var k = 0
+    while (k < msgs.length) {
+      msgs(k) = t.log(i.toInt)._2
+      i += nShards
+      k += 1
+    }
+    msgs
+  }
+
+  /** `MSG <seq> <b64>` lines for the shard seqs `first`, `first + step`,
+    * ..., handed to the writer in runs of [[LineChars.DrainAt]] chars: no
+    * String and no writer call per line. */
+  private def writeMsgs(out: PrintWriter, first: Long, step: Int,
+      msgs: Array[String]): Unit = {
+    val lines = new LineChars
+    var s = first
+    var k = 0
+    while (k < msgs.length) {
+      lines.add("MSG "); lines.addSeq(s); lines.add(' ')
+      lines.add(msgs(k)); lines.add(LineChars.Newline)
+      if (lines.size >= LineChars.DrainAt) lines.drainTo(out)
+      s += step
+      k += 1
+    }
+    lines.drainTo(out)
   }
 
   /** Push loop: stream every retained message of the sub's shard with
@@ -907,21 +960,20 @@ class MiniBroker(dataDir: Option[String] = None,
         // not an O(log) rescan. cursor >= acked >= trim point, so the
         // from-index is never negative; the backlog length is
         // Int-bounded by the ArrayBuffer itself (see class doc).
-        val (pending, newCursor) = t.log.synchronized {
+        val (from, pending, newCursor) = t.log.synchronized {
           val from = math.max(cursor, t.base)
           if (t.seq.get() <= from) {
             t.log.wait(50)
-            (Array.empty[(Long, String)], cursor)
+            (from, Array.empty[String], cursor)
           } else {
-            val p = t.log.view.slice((from - t.base).toInt, t.log.length)
-              .filter { case (s, _) => s % nShards == shard }
-              .toArray
-            (p, t.base + t.log.length)
+            val end = t.base + t.log.length
+            (from, shardSlice(t, from, end, shard, nShards), end)
           }
         }
         if (newCursor > cursor) {
           out.synchronized {
-            pending.foreach { case (s, b64) => out.println(s"MSG $s $b64") }
+            writeMsgs(out, firstShardSeq(from, shard, nShards),
+              nShards, pending)
             out.flush()
           }
           cursor = newCursor
@@ -929,4 +981,59 @@ class MiniBroker(dataDir: Option[String] = None,
       }
     } catch { case _: InterruptedException => () }
   }
+}
+
+/** A reusable run of chars that many protocol or WAL lines are built in
+  * and then written with one Writer call: per-line writes pay a lock
+  * and a flush check each, and an interpolated line a String. */
+private final class LineChars {
+  private var buf = new Array[Char](LineChars.DrainAt + 256)
+  var size = 0
+
+  private def ensure(k: Int): Unit =
+    if (size + k > buf.length)
+      buf = java.util.Arrays.copyOf(buf, math.max(size + k, buf.length * 2))
+
+  def add(s: String): Unit = {
+    ensure(s.length)
+    s.getChars(0, s.length, buf, size)
+    size += s.length
+  }
+
+  def add(c: Char): Unit = { ensure(1); buf(size) = c; size += 1 }
+
+  /** A non-negative seq in decimal. */
+  def addSeq(v: Long): Unit =
+    if (v > Int.MaxValue) add(v.toString)
+    else {
+      // one Int division (a multiply, for a constant divisor) per digit,
+      // and no division to count them
+      var x = v.toInt
+      var n = 1
+      while (n < 10 && x >= LineChars.Pow10(n)) n += 1
+      ensure(n)
+      var i = size + n - 1
+      while (i >= size) {
+        val q = x / 10
+        buf(i) = ('0' + (x - q * 10)).toChar
+        x = q
+        i -= 1
+      }
+      size += n
+    }
+
+  /** Write and forget the built chars; returns how many there were. */
+  def drainTo(w: java.io.Writer): Int = {
+    val n = size
+    size = 0
+    w.write(buf, 0, n)
+    n
+  }
+}
+
+private object LineChars {
+  final val DrainAt = 1 << 15
+  private val Pow10: Array[Int] = Array.iterate(1, 10)(_ * 10)
+  /** What `PrintWriter.println` ends a line with. */
+  val Newline: String = System.lineSeparator
 }

@@ -354,4 +354,50 @@ class MiniBrokerSpec extends AnyFunSuite {
       } finally c.close()
     } finally broker.stop()
   }
+
+  test("FETCH shard slices equal the full-range filter, across retention trims") {
+    val broker = new MiniBroker
+    val port = broker.start()
+    try {
+      val nMsgs = 240
+      for (i <- 1 to nMsgs) broker.publish("ts", s"p$i")
+      val c = new Cli(port)
+      try {
+        c.send("REG ts u"); assert(c.read() == "OK 0")
+        val rnd = new scala.util.Random(4242)
+        var fetches = 0
+        for (ack <- Seq(0, 1, 37, 100, 101, 239)) {
+          // ACK answers nothing; the STAT after it on the same connection
+          // is served only once the ACK (and its trim) is done
+          c.send(s"ACK ts u $ack")
+          c.send("STAT ts u"); assert(c.read() == s"SEQ $nMsgs $ack")
+          val base = broker.trimmedBelow("ts")
+          assert(base == ack)
+          // the retained log as the broker holds it: log(i) = seq base+1+i
+          val log = (base + 1 to nMsgs.toLong).map(s => (s, b64(s"p$s")))
+          val cases = Seq((base, nMsgs.toLong, 0, 1), (base, base, 0, 3),
+            (nMsgs.toLong, nMsgs.toLong, 0, 1)) ++
+            Seq.fill(60) {
+              val after = base + rnd.nextInt((nMsgs - base).toInt + 1)
+              val upTo = after + rnd.nextInt((nMsgs - after).toInt + 1)
+              // up to well past the range width: most shards then get 0 or 1
+              val nShards = 1 + rnd.nextInt((upTo - after).toInt + 8)
+              (after, upTo, rnd.nextInt(nShards), nShards)
+            }
+          for ((after, upTo, shard, nShards) <- cases) {
+            val expected = log.view
+              .slice((after - base).toInt, (upTo - base).toInt)
+              .filter { case (s, _) => s % nShards == shard }
+              .map { case (s, p) => s"MSG $s $p" }.toSeq
+            c.send(s"FETCH ts $shard $nShards $after $upTo")
+            val got = c.readUntil(nMsgs + 2)(_.startsWith("EOF"))
+            assert(got == expected :+ s"EOF $upTo",
+              s"FETCH ts $shard $nShards $after $upTo (base $base)")
+            fetches += 1
+          }
+        }
+        assert(fetches == 6 * 63)
+      } finally c.close()
+    } finally broker.stop()
+  }
 }

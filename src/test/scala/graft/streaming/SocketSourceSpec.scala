@@ -362,4 +362,39 @@ class SocketSourceSpec extends AnyFunSuite {
         "malformed counter must be loud")
     } finally broker.stop()
   }
+
+  test("a payload line that is not Base64 is counted and skipped; the query lives on") {
+    val broker = new MiniBroker
+    val port = broker.start()
+    try {
+      // PUBA stores payload lines as they come: the broker does not
+      // validate them, so the reader must
+      def b64(s: String): String = java.util.Base64.getEncoder
+        .encodeToString(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val sock = new java.net.Socket("127.0.0.1", port)
+      try {
+        sock.setSoTimeout(5000)
+        val out = new java.io.PrintWriter(sock.getOutputStream, false)
+        val in = new java.io.BufferedReader(
+          new java.io.InputStreamReader(sock.getInputStream))
+        out.print(Seq("PUBA tb64 3", b64(payload(1, 10, 1000000L)),
+          "not*base64!", b64(payload(2, 20, 2000000L))).mkString("", "\n", "\n"))
+        out.flush()
+        assert(in.readLine() == "OK 3")
+      } finally sock.close()
+      val src = new SocketEventSource("127.0.0.1", port, "tb64", "sb64")
+      val q = src.stream(spark).writeStream
+        .format("memory").queryName("tb64_sink")
+        .outputMode(OutputMode.Append()).start()
+      try {
+        assert(drain(q)(spark.table("tb64_sink").count() == 2),
+          s"valid rows not drained: ${q.exception}")
+        assert(q.isActive && q.exception.isEmpty, s"query died: ${q.exception}")
+      } finally q.stop()
+      val got = spark.table("tb64_sink").collect().map(_.getLong(0)).sorted
+      assert(got.sameElements(Seq(1L, 2L)), s"got ${got.mkString(",")}")
+      assert(graft.sources.SocketEventsSource.malformedCount("sb64") == 1L,
+        "a non-Base64 line must count as malformed")
+    } finally broker.stop()
+  }
 }
