@@ -15,7 +15,10 @@ import scala.collection.mutable
   * target (fewer rounds vs cheaper rounds) is evidence, not a guess.
   * The query line also carries `compiles`, the number of Janino compiles
   * (driver and executor) the instrumented run paid: 0 means every
-  * generated class came from Spark's code cache.
+  * generated class came from Spark's code cache; `jobs_union_ms`, the
+  * wall time during which at least one job ran; and `gap_ms`, wall
+  * minus that union: driver time outside any job (planning, collects,
+  * barriers between rounds).
   *
   * Usage: runMain graft.ProfileProbe <sfDir> <q_name> [q_name...]
   */
@@ -85,8 +88,9 @@ object ProfileProbe {
       ListenerDrain(spark.sparkContext) // trailing job-end and stage events
       collecting = false
       val recs = jobs.values.toSeq
+      val unionMs = jobUnionMs(recs.filter(_.t1 > 0).map(r => (r.t0, r.t1)))
       println(s"== $n wall=${f"$wall%.3f"}s jobs=${recs.size} compiles=$compiles " +
-        s"jobs_ms_sum=${recs.filter(_.t1 > 0).map(r => r.t1 - r.t0).sum}")
+        s"jobs_union_ms=$unionMs gap_ms=${math.round(wall * 1000) - unionMs}")
       recs.foreach { r =>
         val d = if (r.t1 > 0) r.t1 - r.t0 else -1
         println(f"  job ${r.id}%4d ${d}%6d ms tasks=${r.nTasks}%4d ${r.site}")
@@ -98,4 +102,13 @@ object ProfileProbe {
     }
     spark.stop()
   }
+
+  /** Milliseconds covered by at least one of the `[t0, t1]` job
+    * intervals: concurrent jobs overlap, so their durations' sum would
+    * count the shared time twice. */
+  private def jobUnionMs(iv: Seq[(Long, Long)]): Long =
+    iv.sortBy(_._1).foldLeft((0L, Long.MinValue)) {
+      case ((total, end), (t0, t1)) =>
+        (total + math.max(0L, t1 - math.max(t0, end)), math.max(end, t1))
+    }._1
 }

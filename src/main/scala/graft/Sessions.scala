@@ -98,10 +98,9 @@ object Sessions {
       // 64 KB keeps genuinely tiny exchanges (CC rounds, dashboard aggs)
       // coalesced while letting KB-scale-but-compute-heavy stages keep
       // parallelism. Scale-neutral by construction: any 100 TB exchange is
-      // GBs per partition and never sees either floor. Parameterised for
-      // cluster tuning; the env override keeps the driver bench comparable.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
+      // GBs per partition and never sees either floor. A cluster tunes it
+      // through `extra`.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       // Shuffle writer selection (guide §2.1): below this partition-count
       // threshold Spark uses the bypass-merge writer, which opens one
       // FILE PER REDUCE PARTITION per map task — at shuffle.partitions =
@@ -112,9 +111,8 @@ object Sessions {
       // file + index per map task, radix sort on partition ids) — the
       // writer every ≥200-partition production shuffle uses anyway, so
       // this aligns local behavior WITH the cluster path rather than away
-      // from it. Env-overridable for A/B.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
+      // from it.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "0")
       // Bucketed scans report their sortBy order only under this flag
       // (post-3.0 Spark drops the ordering claim because multi-file
       // buckets would need a merge-read). The engine's bucketed writes go

@@ -96,12 +96,11 @@ object GraphOps {
     * partition bound the loop derives its shuffle width from: a graph at
     * or under it would run its rounds 1-wide anyway, so the distributed
     * form degenerates to one task per stage PLUS a driver barrier per
-    * round — strictly worse than one task total. Env-overridable for
-    * cluster tuning; 0 forces the distributed loop (GraphProbe uses this
-    * to exercise the round machinery at probe scale). */
-  private[graft] val LocalFinishMaxEdges: Long =
-    sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES")
-      .flatMap(_.toLongOption).getOrElse(4000000L)
+    * round — strictly worse than one task total. A caller overrides it
+    * per call through `localFinishMaxEdges`; 0 forces the distributed
+    * loop (GraphProbe uses this to exercise the round machinery at probe
+    * scale). */
+  private[graft] val LocalFinishMaxEdges: Long = 4000000L
 
   /** As [[connectedComponents]], also returning the number of star rounds
     * it took to converge (exposed so tests can assert the O(log n) bound —

@@ -1191,8 +1191,8 @@ object SimilarityOps {
     // the way rrMatrix does. OpqSpec pins what the oracle would have:
     // bit-determinism across runs, exact orthonormality, the train/
     // encode chain's shape, and the published payoff (quantization
-    // error ≤ RR everywhere, strictly better on anisotropic data);
-    // OpqRecallProbe measures the recall A/B at 1M.
+    // error ≤ RR everywhere, strictly better on anisotropic data). The
+    // recall A/B at 1M is recorded in COVERAGE.md ("RR-vs-OPQ A/B at 1M").
     "q_opq_encode" -> ((s, d) => {
       val e = vecs(s, d)
       val r = opqTrainRotation(e, PqM, PqKsub, PqIters, OpqSweeps)
@@ -1810,7 +1810,7 @@ object SimilarityOps {
     * same carry rule the oracle's LEFT JOIN + coalesce spells. */
   /** Runs a quantizer-training body (driver-side collect loop over
     * map-only scans + fixed-group aggregates) under the conf those jobs
-    * actually want, restoring the session conf after (r21 optimization,
+    * actually want, without touching the session conf (r21 optimization,
     * guide §1.2/§2.2):
     *
     *  - AQE off: every training action here is scan → partial agg →
@@ -1845,35 +1845,38 @@ object SimilarityOps {
     * (A thread-local `SQLConf.withExistingConf` clone was tried first
     * and rejected by measurement: Spark 4.1's AQE insertion reads the
     * session conf, not the thread-local, so the override's main lever
-    * never engaged.) Clones are cached per (parent session, groups) —
-    * SessionState construction is not free, and the groups clamp keys
-    * the conf. TrainConfScopeSpec pins reach and isolation. */
+    * never engaged.) Clones are cached per (parent session, clamped
+    * partition count) — SessionState construction is not free. The clamp
+    * reads the parent's shuffle partitions at call time, so a parent
+    * whose partitions change gets a clone with the new clamp, never a
+    * stale one. TrainConfScopeSpec pins reach, isolation and the
+    * re-clamp. */
   private val trainSessions =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.mutable.Map[Int, SparkSession]]()
 
-  private def trainSession(s: SparkSession, groups: Int): SparkSession =
+  private def trainSession(s: SparkSession, groups: Int): SparkSession = {
+    val parts = math.max(1, math.min(
+      s.conf.get("spark.sql.shuffle.partitions")
+        .toIntOption.getOrElse(200), groups))
     trainSessions.synchronized {
-      var perGroups = trainSessions.get(s)
-      if (perGroups == null) {
-        perGroups = scala.collection.mutable.Map.empty[Int, SparkSession]
-        trainSessions.put(s, perGroups)
+      var perParts = trainSessions.get(s)
+      if (perParts == null) {
+        perParts = scala.collection.mutable.Map.empty[Int, SparkSession]
+        trainSessions.put(s, perParts)
       }
-      perGroups.getOrElseUpdate(groups, {
-        val parts = math.max(1, math.min(
-          s.conf.get("spark.sql.shuffle.partitions")
-            .toIntOption.getOrElse(200), groups))
+      perParts.getOrElseUpdate(parts, {
         val t = s.newSession()
         t.conf.set("spark.sql.adaptive.enabled", "false")
         t.conf.set("spark.sql.shuffle.partitions", parts.toString)
         t
       })
     }
+  }
 
   private[graft] def trainConf[T](e: DataFrame, groups: Int)(
       body: DataFrame => T): T =
-    if (sys.env.get("SPARK_GRAFT_TRAINCONF").contains("off")) body(e)
-    else body(org.apache.spark.sql.GraftSqlBridge.rebind(
+    body(org.apache.spark.sql.GraftSqlBridge.rebind(
       e, trainSession(e.sparkSession, groups)))
 
   private[graft] def kmCentroids(
@@ -2554,10 +2557,11 @@ object SimilarityOps {
     * the RR baseline by at least `minDrop` (default 15%). Measured
     * rationale, not an assumption: the alternation optimizes
     * RECONSTRUCTION, not neighbor ORDERING — on variance-balanced data
-    * (OpqRecallProbe's mixture corpus) it bought only ~6% qerr and
+    * (a 1M gaussian-mixture corpus) it bought only ~6% qerr and
     * consistently COST recall vs RR (one-signed at every shortlist,
-    * r18–r19 probes), while on anisotropic data it cleared 30%+ qerr
-    * and ~+9pt recall@256. The threshold sits between the regimes: a
+    * r18–r19 measurements, COVERAGE.md "ADJUDICATED — the OPQ
+    * mixture-recall regression is REAL"), while on anisotropic data it
+    * cleared 30%+ qerr and ~+9pt recall@256. The threshold sits between the regimes: a
     * qerr drop big enough to clear it means the rotation found real
     * covariance structure, which is exactly when the recall win
     * follows. Both inputs come free at train time (one encode/decode

@@ -70,12 +70,13 @@ import graft.operators.SimilarityOps
   * migration to a rotated generation re-encodes through R. Because R
   * is orthonormal, every generation's ADC estimates the same true
   * ‖p − v‖², so the mixed-generation top-k stays valid mid-rollout —
-  * the deployment path for the measured OPQ recall win (IvfPqOpqProbe:
-  * recall@256 0.748 → 0.922 on the anisotropic corpus, delivered
-  * through migrateBatch/migrate). Deploy per the ARMING RULE
-  * ([[SimilarityOps.opqArmed]]): only when the train-time qerr drop vs
-  * the RR baseline clears the threshold — on variance-balanced data
-  * the rotation can cost recall (measured, r18–r19).
+  * the deployment path for the measured OPQ recall win (recall@256
+  * 0.748 → 0.922 on a 200k anisotropic corpus, delivered through
+  * migrateBatch/migrate; COVERAGE.md "The rollout measured at scale").
+  * Deploy per the ARMING RULE ([[SimilarityOps.opqArmed]]): only when
+  * the train-time qerr drop vs the RR baseline clears the threshold —
+  * on variance-balanced data the rotation can cost recall (measured,
+  * r18–r19).
   *
   * ==Deletion==
   *
@@ -818,9 +819,9 @@ object IvfPqIngest {
     *     [[beginGeneration]];
     *  4. flagged batches migrate FIRST, worst drift first, through the
     *     incremental [[migrateBatch]] (the store stays serviceable and
-    *     heals where retrieval is actually degraded — the
-    *     IvfPqMigrateProbe choreography), then the remainder in one
-    *     bulk [[migrate]] job.
+    *     heals where retrieval is actually degraded — the order
+    *     COVERAGE.md "Migration lifecycle at scale" measured), then the
+    *     remainder in one bulk [[migrate]] job.
     *
     * Idempotent and crash-convergent at every window: a crash before
     * the marker re-runs from the drift signal and REUSES the persisted
@@ -1271,7 +1272,8 @@ object IvfPqIngest {
     *    ascending-(m, j) fold — BIT-IDENTICAL doubles to the LUT path).
     *    ~8× the per-pair FLOPs, but the store is read ONCE: at 10M ×
     *    1000 probes the chunked-LUT path's 4 full scans absorbed most
-    *    of the nprobe pruning win (measured, PqRecallProbe r19), which
+    *    of the nprobe pruning win (measured r19; COVERAGE.md "MEASURED —
+    *    the IVF-pruned batch face at the 10M decade"), which
     *    is exactly the regime this path exists for.
     *
     * "auto" uses decode when the LUT frame would exceed one bounded
@@ -1518,7 +1520,7 @@ object IvfPqIngest {
     * scored stream — size `spark.sql.shuffle.partitions` so
     * probes × nprobe × (rows/nlist) / partitions stays ≲ 10M pairs
     * (measured: 16B pairs over 32 partitions = ~1.5 GB per-task sorts
-    * and a heap cliff; IvfPqBatchScaleProbe encodes the rule).
+    * and a heap cliff; COVERAGE.md "…and at HALF THE CORPUS AS PROBES").
     *
     * Tombstones, shadowed crash-window batches, and mixed
     * rotated/unrotated generations are handled exactly as

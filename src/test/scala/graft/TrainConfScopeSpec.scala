@@ -40,6 +40,23 @@ class TrainConfScopeSpec extends AnyFunSuite {
       s"groups above the session cap must clamp to it ($sessParts), got $parts")
   }
 
+  test("the clamp follows the parent's current shuffle partitions") {
+    // Same `groups` both times: only the parent's current partition
+    // count may decide the clamp, not the clone cached by the first call.
+    val parent = spark.newSession()
+    val df = parent.range(0, 100).select(
+      (col("id") % 8).as("k"), col("id").as("x"))
+    def trainParts(): Int = SimilarityOps.trainConf(df, 8) { e =>
+      e.groupBy("k").agg(sum("x")).rdd.getNumPartitions
+    }
+    parent.conf.set("spark.sql.shuffle.partitions", "4")
+    assert(trainParts() == 4)
+    parent.conf.set("spark.sql.shuffle.partitions", "2")
+    val parts = trainParts()
+    assert(parts == 2,
+      s"training must re-clamp to the parent's current 2 partitions, got $parts")
+  }
+
   test("session conf is never mutated; concurrent queries keep AQE") {
     val aqeKey = "spark.sql.adaptive.enabled"
     val sessionAqe = spark.conf.get(aqeKey, "true")

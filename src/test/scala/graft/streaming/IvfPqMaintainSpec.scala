@@ -21,7 +21,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     persisted structures instead of retraining;
   *  4. the persisted-structures sidecar round-trips bit for bit and
   *     is marker-verified on load.
-  * IvfPqMaintainProbe drives the same loop at scale. */
+  * The same loop at scale is recorded in COVERAGE.md ("maintain() at
+  * scale through the UNATTENDED path"). */
 class IvfPqMaintainSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 

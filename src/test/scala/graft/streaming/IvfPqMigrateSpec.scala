@@ -19,7 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     ids refuses instead of silently shrinking the batch;
   *  5. post-migration qerr on the drifted distribution returns toward
   *     the in-distribution band (the signal's loop actually closes —
-  *     IvfPqMigrateProbe measures the full trajectory at scale). */
+  *     the full trajectory at scale is recorded in COVERAGE.md,
+  *     "Migration lifecycle at scale"). */
 class IvfPqMigrateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 

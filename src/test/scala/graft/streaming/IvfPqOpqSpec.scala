@@ -21,8 +21,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *  3. the codebook marker pins the rotation: the same (cents, cb)
   *     with and without R are INCOMPARABLE structures and must fail
   *     loud, never silently mix codes from different spaces.
-  * IvfPqOpqProbe drives the recall payoff at scale on the anisotropic
-  * corpus; this spec pins the arithmetic. */
+  * The recall payoff at scale on the anisotropic corpus is recorded in
+  * COVERAGE.md ("The rollout measured at scale"); this spec pins the
+  * arithmetic. */
 class IvfPqOpqSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
