@@ -1800,14 +1800,6 @@ object SimilarityOps {
       .toDF("vec_id", "v", "cid", "d")
   }
 
-  /** k centroids after `iters` full Lloyd's rounds (assign + mean update),
-    * means rounded to 1e-4 per component (see the family comment above).
-    * Each round is one corpus scan + a k-row codegen'd aggregate (64
-    * per-component sums partial-aggregate map-side; the UDAF alternative
-    * forces ObjectHashAggregate — measured 3.6× slower in the IVF build)
-    * and a k-row collect for the next broadcast — the canonical scalable
-    * iterative shape. An emptied cluster keeps its previous centroid, the
-    * same carry rule the oracle's LEFT JOIN + coalesce spells. */
   /** Runs a quantizer-training body (driver-side collect loop over
     * map-only scans + fixed-group aggregates) under the conf those jobs
     * actually want, without touching the session conf (r21 optimization,
@@ -1879,6 +1871,14 @@ object SimilarityOps {
     body(org.apache.spark.sql.GraftSqlBridge.rebind(
       e, trainSession(e.sparkSession, groups)))
 
+  /** k centroids after `iters` full Lloyd's rounds (assign + mean update),
+    * means rounded to 1e-4 per component (see the family comment above).
+    * Each round is one corpus scan + a k-row codegen'd aggregate (64
+    * per-component sums partial-aggregate map-side; the UDAF alternative
+    * forces ObjectHashAggregate — measured 3.6× slower in the IVF build)
+    * and a k-row collect for the next broadcast — the canonical scalable
+    * iterative shape. An emptied cluster keeps its previous centroid, the
+    * same carry rule the oracle's LEFT JOIN + coalesce spells. */
   private[graft] def kmCentroids(
       eIn: DataFrame, k: Int, iters: Int): Array[(Int, Array[Double])] = trainConf(eIn, k) { e =>
     val spark = e.sparkSession
@@ -2350,9 +2350,8 @@ object SimilarityOps {
     * replayed q_rrpq_encode path. */
   private[graft] def rrRotate(e: DataFrame): DataFrame = rotateBy(e, rrMatrix)
 
-  /** (vec_id, v → R·v): one map-side pass, R rides one broadcast. Row i
-    * of the rotated vector is the ascending-j left fold Σ R(i)(j)·v(j) —
-    * the same order the oracle's list_sum fold replays. */
+  /** (vec_id, v → R·v): one map-side pass of [[rotateVec]], R rides one
+    * broadcast. */
   private[graft] def rotateBy(
       e: DataFrame, r0: Array[Array[Double]]): DataFrame = {
     val spark = e.sparkSession
@@ -2362,25 +2361,32 @@ object SimilarityOps {
       .as[(Long, Array[Double])]
       .mapPartitions { it =>
         val r = bc.value
-        val n = r.length
-        it.map { case (id, v) =>
-          require(v.length == n,
-            s"rotateBy: ${v.length}-dim vector under a $n-dim rotation " +
-              "— a mismatched rotation must fail loud, not truncate")
-          val out = new Array[Double](n)
-          var i = 0
-          while (i < n) {
-            val ri = r(i)
-            var s = 0.0
-            var j = 0
-            while (j < n) { s += ri(j) * v(j); j += 1 }
-            out(i) = s
-            i += 1
-          }
-          (id, out)
-        }
+        it.map { case (id, v) => (id, rotateVec(r, v)) }
       }
       .toDF("vec_id", "v")
+  }
+
+  /** y = R·v, row i the ascending-j left fold Σ R(i)(j)·v(j) — the order
+    * the oracle's list_sum fold replays. The one R·v fold: [[rotateBy]],
+    * the IVF-PQ encode pass and the store's probe rotation all call it,
+    * so a rotated vector has the same doubles on every path. */
+  private[graft] def rotateVec(
+      r: Array[Array[Double]], v: Array[Double]): Array[Double] = {
+    val n = r.length
+    require(v.length == n,
+      s"${v.length}-dim vector under a $n-dim rotation — a mismatched " +
+        "rotation must fail loud, not truncate")
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      val ri = r(i)
+      var s = 0.0
+      var j = 0
+      while (j < n) { s += ri(j) * v(j); j += 1 }
+      out(i) = s
+      i += 1
+    }
+    out
   }
 
   // ---- OPQ proper (Ge et al., Optimized Product Quantization, CVPR
@@ -2737,30 +2743,69 @@ object SimilarityOps {
   // [[CentIndex]] for cells, [[pqTrain]] for codebooks); these helpers
   // only compose them.
 
-  /** (vec_id, cid, v, r = v − centroid(cid)): the frame PQ codebooks
-    * train on. One map-side pass, centroids ride one broadcast. */
-  private[graft] def ivfPqResiduals(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
+  /** The one IVF-PQ encode pass, shared by the batch queries and the
+    * streaming store: per row of a (vec_id, v[, batch]) frame, rotate by
+    * R when present ([[rotateVec]]), assign via [[CentIndex]], residual
+    * r = v − centroid(cid), then per subspace the strict-< argmin code
+    * and its ascending-j squared distance, summed ascending in m into
+    * qerr (exactly ‖r − decode(code)‖²). An empty `cb` stops at the
+    * residual (the codebook-training input). One fold order for every
+    * caller, so codes, residuals and qerr agree bit for bit across them.
+    *
+    * Returns (vec_id, batch, cid, v, r, code, qerr) — `v` as encoded
+    * (rotated under `rot`), `batch` carried through when the input has
+    * one (the store's migration pass) and 0 otherwise; callers select
+    * what they need and Catalyst prunes the rest from the serializer —
+    * plus a thunk releasing the structures' broadcast, for callers that
+    * run the pass per micro-batch. */
+  private[graft] def ivfPqPass(
+      e: DataFrame, cents: Array[(Int, Array[Double])],
+      cb: Array[Array[Array[Double]]],
+      rot: Option[Array[Array[Double]]] = None): (DataFrame, () => Unit) = {
     val spark = e.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new CentIndex(cents))
-    val bcC = spark.sparkContext.broadcast(cents.toMap)
-    e.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
+    val bc = spark.sparkContext.broadcast((new CentIndex(cents), cents.toMap, cb, rot))
+    val batch = if (e.columns.contains("batch")) col("batch") else lit(0L)
+    val out = e
+      .select(col("vec_id").cast("long"), batch.cast("long"),
+        col("v").cast("array<double>"))
+      .as[(Long, Long, Array[Double])]
       .mapPartitions { it =>
-        val idx = bc.value
-        val cm = bcC.value
-        it.map { case (id, v) =>
+        val (idx, cm, books, rOpt) = bc.value
+        val ds = if (books.isEmpty) 0 else books(0)(0).length
+        it.map { case (id, b, v0) =>
+          val v = rOpt.fold(v0)(rotateVec(_, v0))
           val (cid, _) = idx.assign(v)
           val c = cm(cid)
           val r = new Array[Double](v.length)
           var j = 0
           while (j < v.length) { r(j) = v(j) - c(j); j += 1 }
-          (id, cid, v, r)
+          val code = new Array[Short](books.length)
+          var qerr = 0.0
+          var m = 0
+          while (m < books.length) {
+            val best = pqNearest(books(m), r, m * ds)
+            code(m) = best.toByte.toShort // low 8 bits, as in pqEncode
+            val ce = books(m)(best)
+            var dd = 0.0
+            var k = 0
+            while (k < ds) { val t = r(m * ds + k) - ce(k); dd += t * t; k += 1 }
+            qerr += dd
+            m += 1
+          }
+          (id, b, cid, v, r, code, qerr)
         }
       }
-      .toDF("vec_id", "cid", "v", "r")
+      .toDF("vec_id", "batch", "cid", "v", "r", "code", "qerr")
+      .withColumn("code", col("code").cast("array<tinyint>"))
+    (out, () => bc.destroy())
   }
+
+  /** (vec_id, cid, v, r = v − centroid(cid)): the frame PQ codebooks
+    * train on. */
+  private[graft] def ivfPqResiduals(
+      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame =
+    ivfPqPass(e, cents, Array.empty)._1.select("vec_id", "cid", "v", "r")
 
   /** (vec_id, cid, v, code): coarse-assign + residual + PQ-encode fused
     * into ONE corpus pass (the produce-the-index job at 100 TB — the
@@ -2768,38 +2813,8 @@ object SimilarityOps {
     * low 8 bits, as in [[pqEncode]]. */
   private[graft] def ivfPqEncode(
       e: DataFrame, cents: Array[(Int, Array[Double])],
-      cb: Array[Array[Array[Double]]]): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new CentIndex(cents))
-    val bcC = spark.sparkContext.broadcast(cents.toMap)
-    val bcCb = spark.sparkContext.broadcast(cb)
-    e.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val idx = bc.value
-        val cm = bcC.value
-        val books = bcCb.value
-        val n = books.length
-        val ds = books(0)(0).length
-        it.map { case (id, v) =>
-          val (cid, _) = idx.assign(v)
-          val c = cm(cid)
-          val r = new Array[Double](v.length)
-          var j = 0
-          while (j < v.length) { r(j) = v(j) - c(j); j += 1 }
-          val code = new Array[Short](n)
-          var m = 0
-          while (m < n) {
-            code(m) = pqNearest(books(m), r, m * ds).toByte.toShort
-            m += 1
-          }
-          (id, cid, v, code)
-        }
-      }
-      .toDF("vec_id", "cid", "v", "code")
-      .withColumn("code", col("code").cast("array<tinyint>"))
-  }
+      cb: Array[Array[Array[Double]]]): DataFrame =
+    ivfPqPass(e, cents, cb)._1.select("vec_id", "cid", "v", "code")
 
   /** Caller-owned trained quantizer handle (r22, the honest Lloyd's-chain
     * cut — r21 "not yet optimized" #2): a long-lived pipeline trains ONCE
@@ -2855,42 +2870,8 @@ object SimilarityOps {
     * the same order, so the 1e-4-scaled qerr is cross-engine EXACT. */
   private[graft] def ivfPqQerr(
       e: DataFrame, cents: Array[(Int, Array[Double])],
-      cb: Array[Array[Array[Double]]]): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new CentIndex(cents))
-    val bcC = spark.sparkContext.broadcast(cents.toMap)
-    val bcCb = spark.sparkContext.broadcast(cb)
-    e.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val idx = bc.value
-        val cm = bcC.value
-        val books = bcCb.value
-        val n = books.length
-        val ds = books(0)(0).length
-        it.map { case (id, v) =>
-          val (cid, _) = idx.assign(v)
-          val c = cm(cid)
-          val r = new Array[Double](v.length)
-          var j = 0
-          while (j < v.length) { r(j) = v(j) - c(j); j += 1 }
-          var qerr = 0.0
-          var m = 0
-          while (m < n) {
-            val best = pqNearest(books(m), r, m * ds)
-            val ce = books(m)(best)
-            var dd = 0.0
-            var k = 0
-            while (k < ds) { val t = r(m * ds + k) - ce(k); dd += t * t; k += 1 }
-            qerr += dd
-            m += 1
-          }
-          (id, cid, qerr)
-        }
-      }
-      .toDF("vec_id", "cid", "qerr")
-  }
+      cb: Array[Array[Array[Double]]]): DataFrame =
+    ivfPqPass(e, cents, cb)._1.select("vec_id", "cid", "qerr")
 
   /** The probe's nprobe nearest cells by the SAME arithmetic the data
     * side assigns with — [[CentIndex.assign]]'s expanded

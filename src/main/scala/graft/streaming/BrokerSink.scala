@@ -3,7 +3,8 @@ package graft.streaming
 import scala.collection.mutable.ArrayBuffer
 
 import graft.sources.{BrokerClient, WireCodec}
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.functions.{col, unix_micros}
 
 /** The other half of the wire: PUBLISH a streaming Dataset's rows to a
   * [[MiniBroker]] topic. The reference's stages compose THROUGH topics —
@@ -62,7 +63,12 @@ object BrokerSink {
       events: Dataset[KnobEvent]): org.apache.spark.sql.streaming.DataStreamWriter[KnobEvent] =
     events.writeStream.foreachBatch { (batch: Dataset[KnobEvent], _: Long) =>
       val eps = endpoints.toIndexedSeq
-      batch.foreachPartition { rows: Iterator[KnobEvent] =>
+      // `ts` leaves as the row's internal micros (proleptic Gregorian,
+      // what SocketEventsSource writes back): a KnobEvent would build a
+      // java.sql.Timestamp per row, which costs a TimeZone clone and
+      // rebases pre-1582 instants to the hybrid Julian calendar.
+      val wire = batch.toDF().select(col("id"), col("n"), unix_micros(col("ts")))
+      wire.foreachPartition { rows: Iterator[Row] =>
         val (host, port) = eps(
           org.apache.spark.TaskContext.getPartitionId() % eps.size)
         if (rows.hasNext) {
@@ -73,8 +79,8 @@ object BrokerSink {
           val lines = new WireCodec.PayloadLines
           val chunkEnds = ArrayBuffer.empty[Int]
           var count = 0
-          rows.foreach { e =>
-            lines.addEvent(e.id, e.n, StreamOps.eventMicros(e.ts)) // the one shared def
+          rows.foreach { r =>
+            lines.addEvent(r.getLong(0), r.getLong(1), r.getLong(2))
             count += 1
             if (count % Chunk == 0) chunkEnds += lines.size
           }

@@ -45,8 +45,8 @@ import graft.operators.SimilarityOps
   * same state), while ingest and retrieval keep operating:
   *
   *  - the store is MIXED-GENERATION during the interval, and
-  *    [[retrieve]] is correct across the mix — per-generation probed
-  *    cells and residual LUTs ride one broadcast frame joined on
+  *    [[retrieve]] is correct across the mix — each probe's
+  *    per-generation probed cells ride a dispatch frame joined on
   *    (gen, cid), so each code row is scored against exactly its own
   *    generation's arithmetic; ADC scores from both generations
   *    estimate the same true distance ‖p − v‖², so one global top-k
@@ -66,7 +66,7 @@ import graft.operators.SimilarityOps
   * A generation may carry a trained orthonormal rotation
   * ([[SimilarityOps.opqTrainRotation]] — Ge et al., CVPR 2013): ingest
   * then assigns + residual-encodes in ROTATED space, retrieval rotates
-  * the probe per generation before building cells and LUTs, and
+  * the probe per generation before choosing cells and scoring, and
   * migration to a rotated generation re-encodes through R. Because R
   * is orthonormal, every generation's ADC estimates the same true
   * ‖p − v‖², so the mixed-generation top-k stays valid mid-rollout —
@@ -99,12 +99,14 @@ import graft.operators.SimilarityOps
   *
   * ==Batch retrieval==
   *
-  * [[retrieveBatch]] serves driver-sized probe batches (two physical
-  * strategies, LUT vs one-pass decode); [[retrieveBatchDf]] is the
-  * same decode arithmetic with the probe set as a DATAFRAME — nothing
-  * probe-count-sized ever touches the driver, which is what lets the
-  * corpus itself be the probe set (SemDeDup / knn-graph construction
-  * over the compressed store).
+  * Retrieval is ONE scan: [[retrieveBatch]] takes the probe set as a
+  * DATAFRAME, reads the (gen, cid)-pruned codes once, and scores every
+  * (probe, code) pair decode-side in a per-partition loop, with a
+  * per-probe top-k through the WindowGroupLimit partial. Nothing
+  * probe-count-sized touches the driver, which lets the corpus itself
+  * be the probe set (SemDeDup / knn-graph construction over the
+  * compressed store). The single-probe [[retrieve]] is the same scan
+  * over a one-row probe frame.
   *
   * Encoding arithmetic is BIT-IDENTICAL to the batch
   * [[SimilarityOps.ivfPqEncode]] (same CentIndex assign, same residual
@@ -123,7 +125,7 @@ object IvfPqIngest {
     * (Ge et al., CVPR 2013): when present, every vector is rotated
     * y = R·v BEFORE coarse assignment and residual encoding — centroids
     * and codebooks are then structures OVER ROTATED SPACE, and retrieval
-    * rotates the probe by the same R before building its LUTs. R is
+    * rotates the probe by the same R before scoring. R is
     * orthonormal, so ‖R·p − R·v‖ = ‖p − v‖: ADC scores from rotated and
     * unrotated generations estimate the SAME true distance, which is
     * what keeps one global top-k over a mixed-generation store valid. */
@@ -183,35 +185,17 @@ object IvfPqIngest {
   /** Total flat-PQ quantization error of `e` under rotation `rot` —
     * the arming signal: train per-subspace codebooks on the rotated
     * frame, then one distributed encode/decode pass summing
-    * ‖y − decode(encode(y))‖². */
+    * ‖y − decode(encode(y))‖² (the shared encode pass around a single
+    * zero centroid, whose residual is y itself). */
   private def flatQerr(
       e: DataFrame, rot: Option[Rot],
       nSub: Int, ksub: Int, pqIters: Int): Double = {
-    val spark = e.sparkSession
-    import spark.implicits._
+    import e.sparkSession.implicits._
     val frame = rot.map(SimilarityOps.rotateBy(e, _)).getOrElse(e)
     val cb = SimilarityOps.pqTrain(frame, nSub, ksub, pqIters)
-    val bcCb = spark.sparkContext.broadcast(cb)
-    val out = frame.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val books = bcCb.value
-        val ds = books(0)(0).length
-        it.map { case (_, y) =>
-          var err = 0.0
-          var m = 0
-          while (m < books.length) {
-            val best = SimilarityOps.pqNearest(books(m), y, m * ds)
-            val ce = books(m)(best)
-            var j = 0
-            while (j < ds) { val t = y(m * ds + j) - ce(j); err += t * t; j += 1 }
-            m += 1
-          }
-          err
-        }
-      }.reduce(_ + _)
-    bcCb.destroy()
-    out
+    val origin = Array((0, new Array[Double](SimilarityOps.Dim)))
+    val (coded, release) = SimilarityOps.ivfPqPass(frame, origin, cb)
+    try coded.select("qerr").as[Double].reduce(_ + _) finally release()
   }
 
   /** Starts the ingest on a streaming (vec_id: long, v: array<double>)
@@ -369,91 +353,21 @@ object IvfPqIngest {
     checkCodebookMarker(spark, indexDir, gen, codebookId(cents, cb, rot))
   }
 
-  /** One shared encode pass: assign → residual → per-subspace argmin
-    * code, PLUS the quantization error (Σ over subspaces of the argmin
-    * distance — exactly ‖residual − decode(code)‖², free at encode
-    * time). Same arithmetic as SimilarityOps.ivfPqEncode, spec-pinned
-    * bit-identical. Input carries a `batch` column (a literal for
-    * single-batch ingest; per-row for the bulk migration pass) that
-    * rides through untouched. Returns the coded frame and a cleanup
-    * thunk that releases the three broadcasts — a long-running stream
-    * creates them per micro-batch, and leaving them to the
-    * ContextCleaner means thousands of retained broadcast blocks at
-    * production codebook sizes before a GC happens to notice. */
+  /** The store's encode pass: [[SimilarityOps.ivfPqPass]] — the batch
+    * [[SimilarityOps.ivfPqEncode]]'s own row loop, spec-pinned
+    * bit-identical — narrowed to (vec_id, batch, cid, code, qerr); qerr
+    * is ‖residual − decode(code)‖², free at encode time. Input carries
+    * a `batch` column (a literal for single-batch ingest; per-row for
+    * the bulk migration pass). Returns the coded frame and a cleanup
+    * thunk that releases the broadcast — a long-running stream creates
+    * one per micro-batch, and leaving them to the ContextCleaner means
+    * thousands of retained broadcast blocks at production codebook
+    * sizes before a GC happens to notice. */
   private def encodeFrame(
       vecs: DataFrame, cents: Cents, cb: Books,
       rot: Option[Rot] = None): (DataFrame, () => Unit) = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val bcIdx = spark.sparkContext.broadcast(new SimilarityOps.CentIndex(cents))
-    val bcC = spark.sparkContext.broadcast(cents.toMap)
-    val bcCb = spark.sparkContext.broadcast(cb)
-    val bcR = spark.sparkContext.broadcast(rot)
-    val coded = vecs
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("batch").cast("long").as("batch"),
-        col("v").cast("array<double>").as("v"))
-      .as[(Long, Long, Array[Double])]
-      .mapPartitions { it =>
-        val idx = bcIdx.value
-        val cm = bcC.value
-        val books = bcCb.value
-        val rOpt = bcR.value
-        val n = books.length
-        val ds = books(0)(0).length
-        it.map { case (id, b, v0) =>
-          // OPQ generation: assign + residual-encode in ROTATED space
-          // (same loop-local matvec as SimilarityOps.rotateBy).
-          val v = rOpt match {
-            case Some(r) => rotated(r, v0)
-            case None => v0
-          }
-          val (cid, _) = idx.assign(v)
-          val c = cm(cid)
-          val r = new Array[Double](v.length)
-          var j = 0
-          while (j < v.length) { r(j) = v(j) - c(j); j += 1 }
-          val code = new Array[Short](n)
-          var qerr = 0.0
-          var m = 0
-          while (m < n) {
-            val best = SimilarityOps.pqNearest(books(m), r, m * ds)
-            code(m) = best.toByte.toShort
-            val ce = books(m)(best)
-            var dd = 0.0
-            var k = 0
-            while (k < ds) { val t = r(m * ds + k) - ce(k); dd += t * t; k += 1 }
-            qerr += dd
-            m += 1
-          }
-          (id, b, cid, code, qerr)
-        }
-      }
-      .toDF("vec_id", "batch", "cid", "code", "qerr")
-      .withColumn("code", col("code").cast("array<tinyint>"))
-    (coded,
-      () => { bcIdx.destroy(); bcC.destroy(); bcCb.destroy(); bcR.destroy() })
-  }
-
-  /** y = R·v, ascending-j fold per row — bit-identical to
-    * [[SimilarityOps.rotateBy]]'s loop, so a store fed through this path
-    * equals a batch `rotateBy → ivfPqEncode` build bit for bit. */
-  private def rotated(r: Rot, v: Array[Double]): Array[Double] = {
-    val n = r.length
-    require(v.length == n,
-      s"rotated: ${v.length}-dim vector under a $n-dim rotation — a " +
-        "mismatched GenStructs.rot must fail loud, not truncate")
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val ri = r(i)
-      var s = 0.0
-      var j = 0
-      while (j < n) { s += ri(j) * v(j); j += 1 }
-      out(i) = s
-      i += 1
-    }
-    out
+    val (coded, cleanup) = SimilarityOps.ivfPqPass(vecs, cents, cb, rot)
+    (coded.select("vec_id", "batch", "cid", "code", "qerr"), cleanup)
   }
 
   /** Writes one batch's codes + stats dirs under a generation (Overwrite
@@ -1168,324 +1082,39 @@ object IvfPqIngest {
       .orderBy("gen", "batch")
   }
 
-  /** ADC retrieval over the ACCUMULATED, possibly MIXED-GENERATION
-    * store: per generation, probed cells from that generation's frozen
-    * centroids and per-cell residual LUTs, all riding ONE broadcast
-    * frame joined on (gen, cid) — each code row is scored against
-    * exactly its own generation's arithmetic; the (gen, cid) filter
-    * partition-prunes the codes scan (gen, batch and cid are all
-    * partition columns); ADC top-k from codes alone — 8 B/row, no
-    * vectors fetched. Returns (vec_id, adc) ascending. */
-  def retrieveGens(
+  /** ADC retrieval for ONE probe vector: [[retrieveBatch]] over a
+    * one-row probe frame, as a lazy (vec_id, adc) frame ascending by
+    * (adc, vec_id). */
+  def retrieve(
       spark: SparkSession,
       indexDir: String,
       gens: Map[Int, GenStructs],
       pv: Array[Double],
       nprobe: Int,
-      k: Int): DataFrame = {
-    require(gens.nonEmpty, "retrieve needs at least one generation")
-    val shapes = gens.values.map(s => (s.cb.length, s.cb(0).length))
-    require(shapes.toSet.size == 1,
-      s"generations disagree on (nSub, ksub): ${shapes.toSet} — codes " +
-        "of different shapes cannot share one ADC scan")
-    val (nSub, ksub) = shapes.head
-    gens.foreach { case (g, s) =>
-      checkCodebookMarker(spark, indexDir, g, codebookId(s.cents, s.cb, s.rot))
-    }
-    val byGen = listBatches(spark, indexDir)
-    val present = byGen.collect { case (g, bs) if bs.nonEmpty => g }.toSet
-    require(present.subsetOf(gens.keySet),
-      s"store holds generations $present but structures were passed " +
-        s"only for ${gens.keySet} — a retrieval that silently skips a " +
-        "generation's codes is wrong, not approximate")
-    // An OPQ generation probes in ITS OWN rotated space: cells and LUTs
-    // come from R·p against rotated-space structures, and because R is
-    // orthonormal the resulting ADC still estimates ‖p − v‖² — directly
-    // comparable with every other generation's scores in one top-k.
-    val probed = gens.toSeq.map { case (g, s) =>
-      val pg = s.rot.map(rotated(_, pv)).getOrElse(pv)
-      g -> SimilarityOps.ivfPqProbedCells(s.cents, pg, nprobe).map {
-        case (cid, c) =>
-          (cid, SimilarityOps.pqLut(s.cb,
-            Array.tabulate(pg.length)(j => pg(j) - c(j))))
-      }
-    }
-    val lutRows = probed.flatMap { case (g, cells) =>
-      cells.map { case (cid, lut) => (g, cid, lut) }
-    }
-    val lutDf = broadcast(
-      spark.createDataFrame(lutRows).toDF("gen", "cid", "lut"))
-    // Partition pruning: one disjunct per generation, each pinning that
-    // generation's own probed cells.
-    val prune = probed.map { case (g, cells) =>
-      col("gen") === g && col("cid").isin(cells.map(_._1): _*)
-    }.reduce(_ || _)
-    // Crash-window dup resolution: a batch present in two generations
-    // counts only at the higher one. The shadow set is empty except
-    // mid-migration-crash, so the filter is a no-op in steady state.
-    val shadowed = shadowedBatches(byGen)
-    val dedup = shadowed.foldLeft(lit(true)) { case (acc, (g, b)) =>
-      acc && !(col("gen") === g && col("batch") === b)
-    }
-    val scanned = spark.read.parquet(s"$indexDir/codes")
-      .filter(prune)
-      .filter(dedup)
-    // Tombstoned rows never reach the shortlist: one broadcast anti-join
-    // (deletions are sparse by contract), skipped entirely when the
-    // store has none — the common case pays nothing.
-    val alive = readDeletes(spark, indexDir) match {
-      case Some(del) => scanned.join(broadcast(del), Seq("vec_id"), "left_anti")
-      case None => scanned
-    }
-    alive
-      .join(lutDf, Seq("gen", "cid"))
-      .withColumn("adc",
-        SimilarityOps.pqAdcColOf(col("lut"), col("code"), ksub, nSub))
-      .orderBy(col("adc").asc, col("vec_id"))
-      .limit(k)
+      k: Int): DataFrame =
+    retrieveBatch(spark, indexDir, gens,
+      spark.createDataFrame(Seq((0L, pv))).toDF("probe_id", "v"), nprobe, k)
       .select("vec_id", "adc")
-  }
-
-  /** BATCH ADC retrieval over the store — the q_ivfpq_knn_join shape
-    * as a first-class store method: one top-k ADC shortlist per probe,
-    * per-(probe, generation, cell) residual LUTs riding broadcast
-    * frames, the join on (gen, cid) doing every probe's nprobe filter
-    * AND its LUT dispatch at once, per-probe top-k through Catalyst's
-    * WindowGroupLimit partial (the shuffle carries ≤ k × probes ×
-    * partitions rows, never the scored product). Mixed generations and
-    * rotations are handled exactly as [[retrieveGens]] — each
-    * generation scores in its own space, one global per-probe top-k.
-    *
-    * Two physical strategies, picked by `strategy` (default "auto"):
-    *
-    *  - `"lut"` — per-(probe, gen, cell) LUT broadcasts with the
-    *    codegen'd ADC lookup, processed in `chunkProbes`-sized CHUNKS
-    *    because the LUT frame grows as probes × nprobe × (nSub·ksub)
-    *    doubles (~260 MB at 1000 × 16 × 2048) and each chunk pays a
-    *    full store scan. The right shape for SMALL probe batches.
-    *  - `"decode"` — ONE store pass for the whole batch: broadcast the
-    *    raw (per-generation-rotated) probe vectors plus each
-    *    generation's centroids/codebooks — O(probes·dim) + O(structures)
-    *    bytes, no ksub factor — and compute each scored pair's ADC
-    *    DECODE-SIDE (residual = R·p − centroid(cid), minus the decoded
-    *    code entry, squared, summed in pqLut/pqAdcColOf's exact
-    *    ascending-(m, j) fold — BIT-IDENTICAL doubles to the LUT path).
-    *    ~8× the per-pair FLOPs, but the store is read ONCE: at 10M ×
-    *    1000 probes the chunked-LUT path's 4 full scans absorbed most
-    *    of the nprobe pruning win (measured r19; COVERAGE.md "MEASURED —
-    *    the IVF-pruned batch face at the 10M decade"), which
-    *    is exactly the regime this path exists for.
-    *
-    * "auto" uses decode when the LUT frame would exceed one bounded
-    * broadcast (~32 MB). The result is MATERIALIZED either way
-    * (probes × k rows — the answer's natural size, driver-small by
-    * construction) and returned as a local-backed frame of
-    * (probe_id, vec_id, adc) ascending per probe. */
-  def retrieveBatch(
-      spark: SparkSession,
-      indexDir: String,
-      gens: Map[Int, GenStructs],
-      probes: Seq[(Long, Array[Double])],
-      nprobe: Int,
-      k: Int,
-      chunkProbes: Int = 250,
-      strategy: String = "auto"): DataFrame = {
-    require(gens.nonEmpty, "retrieveBatch needs at least one generation")
-    require(chunkProbes > 0, s"chunkProbes must be positive: $chunkProbes")
-    // Duplicate probe ids would build duplicate (probe, gen, cid)
-    // LUT/dispatch rows, score each candidate once per duplicate, and
-    // cut the effective per-probe k roughly in half (r19 advisor) —
-    // refuse at entry instead of silently mis-ranking.
-    require(probes.iterator.map(_._1).toSet.size == probes.size,
-      "duplicate probe_ids in the batch — each candidate would score " +
-        "once per duplicate and the per-probe top-k would repeat rows; " +
-        "dedupe the probe list")
-    require(Set("auto", "lut", "decode")(strategy),
-      s"unknown strategy '$strategy' (auto|lut|decode)")
-    val shapes = gens.values.map(s => (s.cb.length, s.cb(0).length))
-    require(shapes.toSet.size == 1,
-      s"generations disagree on (nSub, ksub): ${shapes.toSet} — codes " +
-        "of different shapes cannot share one ADC scan")
-    val (nSub, ksub) = shapes.head
-    gens.foreach { case (g, s) =>
-      checkCodebookMarker(spark, indexDir, g, codebookId(s.cents, s.cb, s.rot))
-    }
-    val byGen = listBatches(spark, indexDir)
-    val present = byGen.collect { case (g, bs) if bs.nonEmpty => g }.toSet
-    require(present.subsetOf(gens.keySet),
-      s"store holds generations $present but structures were passed " +
-        s"only for ${gens.keySet} — a retrieval that silently skips a " +
-        "generation's codes is wrong, not approximate")
-    val shadowed = shadowedBatches(byGen)
-    val del = readDeletes(spark, indexDir)
-    import spark.implicits._
-    val perProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id"))
       .orderBy(col("adc").asc, col("vec_id"))
-    val lutBytes = probes.size.toLong * nprobe * gens.size * nSub * ksub * 8
-    val useDecode = strategy == "decode" ||
-      (strategy == "auto" && lutBytes > 32L * 1024 * 1024)
-    if (useDecode) {
-      val rows = decodeBatchRows(
-        spark, indexDir, gens, probes, nprobe, k, shadowed, del)
-      return spark.createDataFrame(rows).toDF("probe_id", "vec_id", "adc")
-        .orderBy(col("probe_id"), col("adc").asc, col("vec_id"))
-    }
-    val rows = probes.grouped(chunkProbes).flatMap { chunk =>
-      val probed = chunk.map { case (pid, pv) =>
-        pid -> gens.toSeq.map { case (g, s) =>
-          val pg = s.rot.map(rotated(_, pv)).getOrElse(pv)
-          g -> SimilarityOps.ivfPqProbedCells(s.cents, pg, nprobe).map {
-            case (cid, c) =>
-              (cid, SimilarityOps.pqLut(s.cb,
-                Array.tabulate(pg.length)(j => pg(j) - c(j))))
-          }
-        }
-      }
-      val lutRows = probed.flatMap { case (pid, perGen) =>
-        perGen.flatMap { case (g, cells) =>
-          cells.map { case (cid, lut) => (pid, g, cid, lut) }
-        }
-      }
-      val lutDf = broadcast(spark.createDataFrame(lutRows)
-        .toDF("probe_id", "gen", "cid", "lut"))
-      // Chunk-level partition prune: per generation, the union of every
-      // chunk probe's cells — static, so it reaches the scan; the join
-      // below then narrows to each probe's own cells.
-      val prune = gens.keySet.toSeq.sorted.map { g =>
-        val cids = probed.flatMap(_._2.collect {
-          case (`g`, cells) => cells.map(_._1)
-        }.flatten).distinct
-        col("gen") === g && col("cid").isin(cids: _*)
-      }.reduce(_ || _)
-      val dedup = shadowed.foldLeft(lit(true)) { case (acc, (g, b)) =>
-        acc && !(col("gen") === g && col("batch") === b)
-      }
-      val scanned = spark.read.parquet(s"$indexDir/codes")
-        .filter(prune).filter(dedup)
-      val alive = del match {
-        case Some(d) => scanned.join(broadcast(d), Seq("vec_id"), "left_anti")
-        case None => scanned
-      }
-      alive
-        .join(lutDf, Seq("gen", "cid"))
-        .select(col("probe_id"), col("vec_id"),
-          SimilarityOps.pqAdcColOf(col("lut"), col("code"), ksub, nSub)
-            .as("adc"))
-        .withColumn("rk", row_number().over(perProbe))
-        .filter(col("rk") <= k)
-        .select("probe_id", "vec_id", "adc")
-        .as[(Long, Long, Double)].collect()
-    }.toSeq
-    spark.createDataFrame(rows).toDF("probe_id", "vec_id", "adc")
-      .orderBy(col("probe_id"), col("adc").asc, col("vec_id"))
-  }
 
-  /** [[retrieveBatch]]'s ONE-PASS decode-side ADC: broadcast the
-    * per-generation-rotated probe vectors + each generation's
-    * centroids/codebooks (KBs–MBs, independent of ksub·nprobe), join
-    * the codes scan against the tiny (probe, gen, cid) dispatch table,
-    * and compute each pair's ADC in a per-partition loop —
-    * t = (R·p − centroid) − decode(code) squared and summed in the
-    * exact ascending-(m, j) fold [[SimilarityOps.pqLut]]/`pqAdcColOf`
-    * replay, so the two strategies return BIT-IDENTICAL doubles
-    * (IvfPqOpqSpec pins it). ~8× the per-pair FLOPs of a LUT lookup,
-    * ONE store read for any batch size. */
-  private def decodeBatchRows(
-      spark: SparkSession,
-      indexDir: String,
-      gens: Map[Int, GenStructs],
-      probes: Seq[(Long, Array[Double])],
-      nprobe: Int,
-      k: Int,
-      shadowed: Seq[(Int, Long)],
-      del: Option[DataFrame]): Seq[(Long, Long, Double)] = {
-    import spark.implicits._
-    val rotProbes: Map[(Long, Int), Array[Double]] =
-      probes.flatMap { case (pid, pv) =>
-        gens.toSeq.map { case (g, s) =>
-          (pid, g) -> s.rot.map(rotated(_, pv)).getOrElse(pv)
-        }
-      }.toMap
-    val pairRows = probes.flatMap { case (pid, _) =>
-      gens.toSeq.flatMap { case (g, s) =>
-        SimilarityOps.ivfPqProbedCells(s.cents, rotProbes((pid, g)), nprobe)
-          .map { case (cid, _) => (pid, g, cid) }
-      }
-    }
-    val pairDf = broadcast(spark.createDataFrame(pairRows)
-      .toDF("probe_id", "gen", "cid"))
-    val prune = gens.keySet.toSeq.sorted.map { g =>
-      val cids = pairRows.collect { case (_, `g`, cid) => cid }.distinct
-      col("gen") === g && col("cid").isin(cids: _*)
-    }.reduce(_ || _)
-    val dedup = shadowed.foldLeft(lit(true)) { case (acc, (g, b)) =>
-      acc && !(col("gen") === g && col("batch") === b)
-    }
-    val scanned = spark.read.parquet(s"$indexDir/codes")
-      .filter(prune).filter(dedup)
-    val alive = del match {
-      case Some(d) => scanned.join(broadcast(d), Seq("vec_id"), "left_anti")
-      case None => scanned
-    }
-    val sc = spark.sparkContext
-    val bcProbes = sc.broadcast(rotProbes)
-    val bcCents = sc.broadcast(gens.map { case (g, s) => g -> s.cents.toMap })
-    val bcBooks = sc.broadcast(gens.map { case (g, s) => g -> s.cb })
-    val perProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("probe_id"))
-      .orderBy(col("adc").asc, col("vec_id"))
-    try {
-      alive
-        .join(pairDf, Seq("gen", "cid"))
-        .select(col("probe_id").cast("long"), col("gen").cast("int"),
-          col("cid").cast("int"), col("vec_id").cast("long"), col("code"))
-        .as[(Long, Int, Int, Long, Seq[Byte])]
-        .mapPartitions { it =>
-          val pm = bcProbes.value
-          val cm = bcCents.value
-          val bm = bcBooks.value
-          it.map { case (pid, g, cid, vid, code) =>
-            val pg = pm((pid, g))
-            val c = cm(g)(cid)
-            val books = bm(g)
-            val ds = books(0)(0).length
-            var adc = 0.0
-            var m = 0
-            while (m < books.length) {
-              val ce = books(m)(code(m) & 0xFF)
-              var dd = 0.0
-              var j = 0
-              while (j < ds) {
-                // (pg − c) first, then − ce: the same two IEEE
-                // subtractions, in the same order, as pqLut's residual
-                // array followed by its distance fold — bit-identical.
-                val t = (pg(m * ds + j) - c(m * ds + j)) - ce(j)
-                dd += t * t
-                j += 1
-              }
-              adc += dd
-              m += 1
-            }
-            (pid, vid, adc)
-          }
-        }
-        .toDF("probe_id", "vec_id", "adc")
-        .withColumn("rk", row_number().over(perProbe))
-        .filter(col("rk") <= k)
-        .select("probe_id", "vec_id", "adc")
-        .as[(Long, Long, Double)].collect().toSeq
-    } finally { bcProbes.destroy(); bcCents.destroy(); bcBooks.destroy() }
-  }
-
-  /** DATAFRAME-NATIVE batch ADC retrieval — [[retrieveBatch]]'s decode
-    * strategy with the probe set as a FRAME (r19 judge #2): probes are
-    * never materialized on the driver, so the batch can be the corpus
-    * itself — the SemDeDup/knn-graph construction shape, where every
-    * indexed vector is a probe. `probes` is (probe_id: long,
-    * v: array<double>); returns (probe_id, vec_id, adc), ≤ k rows per
-    * probe, UNSORTED across probes (a global order over a corpus-sized
-    * result is the caller's to pay for).
+  /** ADC retrieval over the ACCUMULATED, possibly MIXED-GENERATION
+    * store — the store's one retrieval path. `probes` is
+    * (probe_id: long, v: array<double>); returns (probe_id, vec_id, adc),
+    * ≤ k rows per probe, UNSORTED across probes (a global order over a
+    * corpus-sized result is the caller's to pay for). Probes are never
+    * materialized on the driver, so the batch can be the corpus itself —
+    * the SemDeDup/knn-graph construction shape, where every indexed
+    * vector is a probe. ADC from codes alone — 8 B/row, no vectors
+    * fetched.
+    *
+    * Each code row is scored against exactly its own generation's
+    * arithmetic: an OPQ generation probes in ITS OWN rotated space
+    * (cells and residuals from R·p against rotated-space structures),
+    * and because R is orthonormal every generation's ADC estimates the
+    * same ‖p − v‖², so one per-probe top-k over the union is the IVFADC
+    * shortlist contract. Shadowed crash-window batches count only at
+    * their highest generation, and tombstoned rows never reach the
+    * shortlist.
     *
     * Plan, frame to frame:
     *  1. one map-side pass over the probe frame (each generation's
@@ -1496,21 +1125,29 @@ object IvfPqIngest {
     *     probe frame is evaluated ONCE (persisted for the pass, then
     *     released) and the dispatch frame is locally checkpointed, so
     *     an expensive — or nondeterministic — probe plan is computed
-    *     exactly once and every downstream consumer sees the same rows
-    *     (r20 advice #4);
+    *     exactly once and every downstream consumer sees the same rows;
     *  2. the codes scan partition-prunes to the UNION of probed cells —
     *     a distinct over the checkpointed dispatch frame, driver-bounded
     *     by generations × nlist ints REGARDLESS of probe count (at
     *     knn-graph scale every cell is probed and the filter is a
-    *     no-op, which is exactly when pruning stops mattering);
-    *  3. codes ⋈ dispatch ON (gen, cid) — a shuffle join (the dispatch
-    *     side is probe-count-sized; AQE splits skewed hot cells), each
-    *     matched pair carrying its probe's rotated vector through the
-    *     pipelined iterator;
-    *  4. per-pair ADC in a per-partition loop against broadcast
-    *     centroids/codebooks — the EXACT fold of [[retrieveBatch]]'s
-    *     decode strategy, so the two faces return bit-identical doubles
-    *     (spec-pinned);
+    *     no-op, which is exactly when pruning stops mattering) — and
+    *     drops shadowed batches and tombstones (one broadcast anti-join;
+    *     deletions are sparse by contract, and a store without any pays
+    *     nothing);
+    *  3. codes ⋈ dispatch ON (gen, cid) — each probe's nprobe filter AND
+    *     its per-generation dispatch at once (the dispatch side is
+    *     probe-count-sized; AQE splits skewed hot cells), each matched
+    *     pair carrying its probe's rotated vector through the pipelined
+    *     iterator;
+    *  4. per-pair ADC DECODE-SIDE against broadcast centroids/codebooks:
+    *     t = (R·p − centroid(cid)) − decode(code) squared and summed in
+    *     [[SimilarityOps.pqLut]]'s ascending-(m, j) fold, so every score
+    *     is bit-identical to a driver-side LUT replay (IvfPqOpqSpec
+    *     pins it). No per-probe LUT is built: the broadcasts are
+    *     O(structures), with no probes × nprobe × ksub factor, and the
+    *     store is read ONCE for any batch size (COVERAGE.md measured
+    *     this scan 3.3× faster than chunked per-probe LUTs at 10M ×
+    *     1000 probes);
     *  5. per-probe top-k through Catalyst's WindowGroupLimit partial —
     *     the exchange carries ≤ k × probes × partitions rows, never the
     *     scored product.
@@ -1520,19 +1157,15 @@ object IvfPqIngest {
     * scored stream — size `spark.sql.shuffle.partitions` so
     * probes × nprobe × (rows/nlist) / partitions stays ≲ 10M pairs
     * (measured: 16B pairs over 32 partitions = ~1.5 GB per-task sorts
-    * and a heap cliff; COVERAGE.md "…and at HALF THE CORPUS AS PROBES").
-    *
-    * Tombstones, shadowed crash-window batches, and mixed
-    * rotated/unrotated generations are handled exactly as
-    * [[retrieveGens]]. */
-  def retrieveBatchDf(
+    * and a heap cliff; COVERAGE.md "…and at HALF THE CORPUS AS PROBES"). */
+  def retrieveBatch(
       spark: SparkSession,
       indexDir: String,
       gens: Map[Int, GenStructs],
       probes: DataFrame,
       nprobe: Int,
       k: Int): DataFrame = {
-    require(gens.nonEmpty, "retrieveBatchDf needs at least one generation")
+    require(gens.nonEmpty, "retrieve needs at least one generation")
     val shapes = gens.values.map(s => (s.cb.length, s.cb(0).length))
     require(shapes.toSet.size == 1,
       s"generations disagree on (nSub, ksub): ${shapes.toSet} — codes " +
@@ -1546,45 +1179,35 @@ object IvfPqIngest {
       s"store holds generations $present but structures were passed " +
         s"only for ${gens.keySet} — a retrieval that silently skips a " +
         "generation's codes is wrong, not approximate")
-    val shadowed = shadowedBatches(byGen)
-    val del = readDeletes(spark, indexDir)
     import spark.implicits._
     val p = probes.select(col("probe_id").cast("long").as("probe_id"),
       col("v").cast("array<double>").as("v"))
       // The probe frame may be an expensive (and possibly
       // nondeterministic: sample(), rand-derived) upstream plan — the
       // SemDeDup corpus-as-probes shape. It is evaluated ONCE into this
-      // cache (r20 verdict "what's wrong" #1 / advice #4): the duplicate
-      // check populates it, the dispatch pass reads it, and everything
-      // downstream reads the CHECKPOINTED dispatch, so the cell prune can
-      // never disagree with the rows the join actually scores.
+      // cache: the duplicate check populates it, the dispatch pass reads
+      // it, and everything downstream reads the CHECKPOINTED dispatch,
+      // so the cell prune can never disagree with the rows the join
+      // actually scores.
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Duplicate probe ids would score each candidate once per duplicate
-    // (the Seq face refuses them too); one aggregate over the probe
-    // frame is noise next to the retrieval itself.
-    require(p.groupBy("probe_id").count()
-      .filter(col("count") > 1).limit(1).count() == 0,
-      "duplicate probe_ids in the probe frame — each candidate would " +
-        "score once per duplicate; dedupe before retrieval")
+    // and cut the effective per-probe k — refuse instead of mis-ranking;
+    // one aggregate over the probe frame is noise next to the retrieval.
+    val dup = p.groupBy("probe_id").count()
+      .filter(col("count") > 1).limit(1).count() > 0
+    if (dup) p.unpersist()
+    require(!dup, "duplicate probe_ids in the probe frame — each candidate " +
+      "would score once per duplicate; dedupe before retrieval")
     val sc = spark.sparkContext
-    // Broadcasts are leased to the returned lazy frame — ContextCleaner
-    // reclaims them (unlike encodeFrame's per-micro-batch loop, this is
-    // a one-shot call).
+    // Broadcasts and checkpoint blocks are leased to the returned lazy
+    // frame — ContextCleaner reclaims them when the caller drops it.
     val bcAssign = sc.broadcast(gens.map { case (g, s) => g -> (s.cents, s.rot) })
-    // ONE dispatch pass (was: a pg-free replay for the cell union plus a
-    // second full pass for the join — the per-probe nprobe argmax over
-    // nlist cells ran twice, and an expensive unpersisted probe plan
-    // recomputed wholesale). localCheckpoint truncates the lineage, so
-    // the cell-union collect below materializes the blocks and the
-    // dispatch join reads the SAME rows; the blocks are leased to the
-    // returned frame like the broadcasts (ContextCleaner reclaims them
-    // when the caller drops it).
     val dispatch = p.as[(Long, Array[Double])]
       .mapPartitions { it =>
         val gm = bcAssign.value
         it.flatMap { case (pid, pv) =>
           gm.iterator.flatMap { case (g, (cents, rot)) =>
-            val pg = rot.map(rotated(_, pv)).getOrElse(pv)
+            val pg = rot.fold(pv)(SimilarityOps.rotateVec(_, pv))
             SimilarityOps.ivfPqProbedCells(cents, pg, nprobe).map {
               case (cid, _) => (pid, g, cid, pg)
             }
@@ -1598,16 +1221,18 @@ object IvfPqIngest {
     // dispatch is materialized and lineage-truncated past this point; the
     // probe cache has served both its consumers.
     p.unpersist()
+    // Partition pruning: one disjunct per generation, each pinning that
+    // generation's probed cells (gen, batch and cid are all partition
+    // columns).
     val prune = gens.keySet.toSeq.sorted.map { g =>
       val cids = cellSet.collect { case (`g`, cid) => cid }.toSeq
       col("gen") === g && col("cid").isin(cids: _*)
     }.reduce(_ || _)
-    val dedup = shadowed.foldLeft(lit(true)) { case (acc, (g, b)) =>
+    val live = shadowedBatches(byGen).foldLeft(lit(true)) { case (acc, (g, b)) =>
       acc && !(col("gen") === g && col("batch") === b)
     }
-    val scanned = spark.read.parquet(s"$indexDir/codes")
-      .filter(prune).filter(dedup)
-    val alive = del match {
+    val scanned = spark.read.parquet(s"$indexDir/codes").filter(prune).filter(live)
+    val alive = readDeletes(spark, indexDir) match {
       case Some(d) => scanned.join(broadcast(d), Seq("vec_id"), "left_anti")
       case None => scanned
     }
@@ -1636,8 +1261,9 @@ object IvfPqIngest {
             var dd = 0.0
             var j = 0
             while (j < ds) {
-              // The decode strategy's exact IEEE fold — see
-              // decodeBatchRows; the two faces are bit-identical.
+              // (pg − c) first, then − ce: the same two IEEE
+              // subtractions, in the same order, as pqLut's residual
+              // array followed by its distance fold — bit-identical.
               val t = (pg(m * ds + j) - c(m * ds + j)) - ce(j)
               dd += t * t
               j += 1
@@ -1653,29 +1279,4 @@ object IvfPqIngest {
       .filter(col("rk") <= k)
       .select("probe_id", "vec_id", "adc")
   }
-
-  /** Mixed-generation retrieval over unrotated structures (the
-    * pre-OPQ tuple surface — delegates to [[retrieveGens]]). */
-  def retrieve(
-      spark: SparkSession,
-      indexDir: String,
-      gens: Map[Int, (Cents, Books)],
-      pv: Array[Double],
-      nprobe: Int,
-      k: Int): DataFrame =
-    retrieveGens(spark, indexDir,
-      gens.map { case (g, (ce, bo)) => g -> GenStructs(ce, bo) },
-      pv, nprobe, k)
-
-  /** Single-generation retrieval (the pre-migration surface). */
-  def retrieve(
-      spark: SparkSession,
-      indexDir: String,
-      cents: Cents,
-      cb: Books,
-      pv: Array[Double],
-      nprobe: Int,
-      k: Int): DataFrame =
-    retrieveGens(spark, indexDir, Map(0 -> GenStructs(cents, cb)),
-      pv, nprobe, k)
 }

@@ -229,17 +229,22 @@ class ScalePatternsSpec extends AnyFunSuite {
     // difference is shuffling k × probes × partitions rows vs the whole
     // probes × corpus cross product — assert the rewrite actually engages
     // so a regression (e.g. a rank expression Catalyst can't match)
-    // cannot silently fall back to the full-shuffle window.
-    val df = SparkEntry.queries("q_knn_join")(spark, TestSpark.sf)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit") && plan.contains("Partial"),
-      s"no partial window-group-limit in knn plan:\n$plan")
-    val rows = df.collect()
-    // 10 probes × exactly 5 neighbors, ranks 1..5 in emitted order
-    assert(rows.length == 50)
-    assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
-      (0L until 10L).flatMap(p => (1L to 5L).map(r => (p, r))))
-    spark.catalog.clearCache()
+    // cannot silently fall back to the full-shuffle window. The PQ and
+    // IVF-PQ batch retrievals rank their ADC shortlists through the same
+    // rewrite.
+    for (q <- Seq("q_knn_join", "q_pq_knn_join", "q_ivfpq_knn_join")) {
+      val df = SparkEntry.queries(q)(spark, TestSpark.sf)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l =>
+        l.contains("WindowGroupLimit") && l.contains("Partial")),
+        s"no partial window-group-limit in the $q plan:\n$plan")
+      val rows = df.collect()
+      // 10 probes × exactly 5 neighbors, ranks 1..5 in emitted order
+      assert(rows.length == 50, s"$q returned ${rows.length} rows")
+      assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+        (0L until 10L).flatMap(p => (1L to 5L).map(r => (p, r))), q)
+      spark.catalog.clearCache()
+    }
   }
 
   test("cluster sample plans a map-side partial WindowGroupLimit before the exchange") {

@@ -66,7 +66,8 @@ class IvfPqDeleteSpec extends AnyFunSuite {
 
   private def topIds(dir: String, k: Int = 20): Set[Long] = {
     val (cents, cb) = structures
-    IvfPqIngest.retrieve(spark, dir, cents, cb, fixture._1(7)._2, 3, k)
+    IvfPqIngest.retrieve(spark, dir, Map(0 -> IvfPqIngest.GenStructs(cents, cb)),
+      fixture._1(7)._2, 3, k)
       .collect().map(_.getLong(0)).toSet
   }
 
@@ -227,7 +228,8 @@ class IvfPqDeleteSpec extends AnyFunSuite {
       .take((cellIds.size * 0.6).toInt)
     IvfPqIngest.delete(spark, dir, idsDf(victims))
     val k = 10
-    val got = IvfPqIngest.retrieve(spark, dir, cents, cb, pv, 3, k)
+    val got = IvfPqIngest.retrieve(spark, dir,
+      Map(0 -> IvfPqIngest.GenStructs(cents, cb)), pv, 3, k)
       .collect().map(_.getLong(0))
     assert(got.length == k,
       s"top-$k under-filled to ${got.length} with live rows available")

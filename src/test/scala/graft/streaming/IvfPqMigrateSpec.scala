@@ -77,6 +77,9 @@ class IvfPqMigrateSpec extends AnyFunSuite {
   // deployment retrains on when qerr flags.
   private lazy val gen1 = train((fixture._2(1) ++ fixture._2(2)).map(_._2))
 
+  private def structs(s: (IvfPqIngest.Cents, IvfPqIngest.Books)) =
+    IvfPqIngest.GenStructs(s._1, s._2)
+
   /** Ingest boot + all batches into a fresh dir at generation `gen`. */
   private def build(dir: String, s: (IvfPqIngest.Cents, IvfPqIngest.Books),
       gen: Int): Unit = {
@@ -128,7 +131,7 @@ class IvfPqMigrateSpec extends AnyFunSuite {
 
     val pv = fixture._1(7)._2
     val got = IvfPqIngest.retrieve(spark, dir,
-      Map(0 -> gen0, 1 -> gen1), pv, 3, 20)
+      Map(0 -> structs(gen0), 1 -> structs(gen1)), pv, 3, 20)
     // The (gen, cid) filter must reach the scan as partition pruning.
     val plan = got.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [") &&
@@ -145,7 +148,8 @@ class IvfPqMigrateSpec extends AnyFunSuite {
     // Passing structures for only one generation of a mixed store must
     // fail loud, not silently skip the other generation's codes.
     val ex = intercept[IllegalArgumentException] {
-      IvfPqIngest.retrieve(spark, dir, gen1._1, gen1._2, pv, 3, 20).collect()
+      IvfPqIngest.retrieve(spark, dir, Map(1 -> structs(gen1)), pv, 3, 20)
+        .collect()
     }
     assert(ex.getMessage.contains("generation"))
   }
@@ -169,7 +173,7 @@ class IvfPqMigrateSpec extends AnyFunSuite {
       s"manifest shadowed flags wrong: $shadowRows")
     val pv = fixture._1(7)._2
     val ids = IvfPqIngest.retrieve(spark, dir,
-      Map(0 -> gen0, 1 -> gen1), pv, 3, 20)
+      Map(0 -> structs(gen0), 1 -> structs(gen1)), pv, 3, 20)
       .collect().map(_.getLong(0))
     assert(ids.length == ids.distinct.length,
       s"crash-window batch double-counted: ${ids.toSeq}")

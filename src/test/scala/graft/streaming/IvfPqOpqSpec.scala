@@ -141,7 +141,7 @@ class IvfPqOpqSpec extends AnyFunSuite {
     assert(byGen(0) == Set(2L, 3L) && byGen(1) == Set(0L, 1L))
 
     val pv = fixture._1(7)._2
-    val got = IvfPqIngest.retrieveGens(spark, dir,
+    val got = IvfPqIngest.retrieve(spark, dir,
       Map(0 -> gen0, 1 -> gen1), pv, 3, 20)
     // The (gen, cid) filter must still reach the scan as partition
     // pruning — the rotation must not cost the store its prune.
@@ -170,7 +170,8 @@ class IvfPqOpqSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("incomparable"))
     // And retrieval with the rotation dropped must refuse too.
     val ex2 = intercept[IllegalArgumentException] {
-      IvfPqIngest.retrieve(spark, dir, s.cents, s.cb, fixture._1(7)._2, 3, 5)
+      IvfPqIngest.retrieve(spark, dir, Map(0 -> IvfPqIngest.GenStructs(s.cents, s.cb)),
+        fixture._1(7)._2, 3, 5)
         .collect()
     }
     assert(ex2.getMessage.contains("incomparable"))
@@ -204,62 +205,41 @@ class IvfPqOpqSpec extends AnyFunSuite {
     assert(flatB(disarmed.cb) == flatB(gen0.cb))
   }
 
-  test("retrieveBatch == per-probe retrieveGens on the mixed rotated store") {
-    val dir = freshDir("batch")
-    build(dir, gen0, 0)
-    IvfPqIngest.beginGeneration(spark, dir, 1, gen1.cents, gen1.cb, gen1.rot)
-    IvfPqIngest.migrateBatch(spark, dir, 0L, df(allRows), 0, 1,
-      gen1.cents, gen1.cb, gen1.rot)
-    IvfPqIngest.migrateBatch(spark, dir, 1L, df(allRows), 0, 1,
-      gen1.cents, gen1.cb, gen1.rot)
-    val gens = Map(0 -> gen0, 1 -> gen1)
-    val probes = Seq(7L, 20L, 55L).map(i => i -> fixture._1(i.toInt)._2)
-    // chunkProbes = 2 forces the chunked path (2 + 1).
-    val got = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-      chunkProbes = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .groupBy(_._1)
-    probes.foreach { case (pid, pv) =>
-      val single = IvfPqIngest.retrieveGens(spark, dir, gens, pv, 3, 15)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val batch = got(pid).map(t => (t._2, t._3)).toSeq
-      assert(batch == single,
-        s"probe $pid: batch face diverged from single retrieval\n" +
-          s"batch:  $batch\nsingle: $single")
-    }
-    // The one-pass DECODE strategy returns BIT-IDENTICAL rows to the
-    // chunked-LUT strategy — same residual arithmetic in the same fold
-    // order, so the choice is purely a cost decision.
-    val decoded = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-      strategy = "decode")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val lutRows = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-      strategy = "lut", chunkProbes = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(decoded == lutRows,
-      s"decode-side ADC diverged from the LUT path\n$decoded\nvs\n$lutRows")
-
-    // Tombstones are respected by the batch face too (both strategies).
-    val victim = got(7L).head._2
-    IvfPqIngest.delete(spark, dir,
-      spark.createDataFrame(Seq(Tuple1(victim))).toDF("vec_id"))
-    for (strat <- Seq("lut", "decode")) {
-      val after = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-        chunkProbes = 2, strategy = strat)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(!after.exists(_._2 == victim),
-        s"[$strat] tombstoned $victim leaked into the batch shortlist")
-      assert(after.count(_._1 == 7L) == 15,
-        s"[$strat] batch top-k under-filled after a tombstone with live rows")
-    }
+  /** Driver-side reference for the store's ADC scan: every live,
+    * unshadowed code in a probe's probed cells, scored with
+    * [[SimilarityOps.pqLut]] for its generation and the probe rotated
+    * into that generation's space, top-k by (adc, vec_id). */
+  private def replay(
+      codes: Seq[(Int, Long, Long, Int, Seq[Byte])],
+      gens: Map[Int, IvfPqIngest.GenStructs],
+      deleted: Set[Long],
+      pv: Array[Double], nprobe: Int, k: Int): Seq[(Long, Double)] = {
+    val batchGens = codes.groupBy(_._2).map { case (b, rs) => b -> rs.map(_._1).max }
+    val live = codes.filter { case (g, b, vid, _, _) =>
+      batchGens(b) == g && !deleted(vid) }
+    gens.toSeq.flatMap { case (g, s) =>
+      // R·p as the ascending-j fold (identity when unrotated)
+      val pg = s.rot.fold(pv)(_.map(row =>
+        row.indices.foldLeft(0.0)((acc, j) => acc + row(j) * pv(j))))
+      val ksub = s.cb(0).length
+      SimilarityOps.ivfPqProbedCells(s.cents, pg, nprobe).toSeq.flatMap {
+        case (cid, c) =>
+          val lut = SimilarityOps.pqLut(s.cb,
+            Array.tabulate(pg.length)(j => pg(j) - c(j)))
+          live.collect { case (`g`, _, vid, `cid`, code) =>
+            vid -> code.indices.map(m => lut(m * ksub + (code(m) & 0xFF)))
+              .reduce(_ + _)
+          }
+      }
+    }.sortBy { case (vid, adc) => (adc, vid) }.take(k)
   }
 
-  test("retrieveBatchDf == retrieveBatch(decode) bit for bit on the mixed rotated store") {
-    // The DataFrame-native face (probes as a frame, nothing driver-
-    // materialized) must return EXACTLY the Seq face's decode-strategy
-    // rows — same candidates, bit-identical ADC doubles — across the
-    // hardest store state: mixed rotated/unrotated generations, a
-    // shadowed crash-window batch, and tombstones.
+  test("retrieveBatch == a driver-side LUT replay bit for bit on the mixed rotated store") {
+    // The store's one ADC scan (probes as a frame, nothing
+    // driver-materialized) must return EXACTLY the reference's rows —
+    // same candidates, bit-identical ADC doubles — across the hardest
+    // store state: mixed rotated/unrotated generations, a shadowed
+    // crash-window batch, and tombstones.
     val dir = freshDir("dfbatch")
     build(dir, gen0, 0)
     IvfPqIngest.beginGeneration(spark, dir, 1, gen1.cents, gen1.cb, gen1.rot)
@@ -270,36 +250,56 @@ class IvfPqOpqSpec extends AnyFunSuite {
       gen1.cents, gen1.cb, 1, gen1.rot)
     assert(IvfPqIngest.shadowedBatches(IvfPqIngest.listBatches(spark, dir))
       .nonEmpty, "fixture must exercise the shadowed-batch filter")
+    val deleted = Set(20L, 3100L)
     IvfPqIngest.delete(spark, dir,
-      spark.createDataFrame(Seq(Tuple1(20L), Tuple1(3100L))).toDF("vec_id"))
+      spark.createDataFrame(deleted.toSeq.map(Tuple1(_))).toDF("vec_id"))
     val gens = Map(0 -> gen0, 1 -> gen1)
     val probes = Seq(7L, 20L, 55L, 100L).map(i => i -> fixture._1(i.toInt)._2)
-    val seqRows = IvfPqIngest.retrieveBatch(spark, dir, gens, probes, 3, 15,
-      strategy = "decode")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, t._3, t._2)).toSeq
+    val codes = spark.read.parquet(s"$dir/codes")
+      .select("gen", "batch", "vec_id", "cid", "code").collect()
+      .map(r => (r.getInt(0), r.getAs[Number](1).longValue, r.getLong(2),
+        r.getInt(3), r.getSeq[Byte](4).toSeq)).toSeq
     val probesDf = spark.createDataFrame(probes).toDF("probe_id", "v")
-    val dfRows = IvfPqIngest.retrieveBatchDf(spark, dir, gens, probesDf, 3, 15)
+    val got = IvfPqIngest.retrieveBatch(spark, dir, gens, probesDf, 3, 15)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(t => (t._1, t._3, t._2)).toSeq
-    assert(dfRows == seqRows,
-      s"DataFrame face diverged from the Seq decode face\n$dfRows\nvs\n$seqRows")
-    assert(!dfRows.exists(t => t._2 == 20L || t._2 == 3100L),
-      "tombstoned ids leaked through the DataFrame face")
-    assert(probes.forall { case (pid, _) => dfRows.count(_._1 == pid) == 15 },
-      "per-probe top-k under-filled")
-    // The per-probe top-k must run through the WindowGroupLimit partial
-    // — the exchange carries k×probes×partitions rows, never the scored
+      .groupBy(_._1).map { case (pid, rs) =>
+        pid -> rs.map(t => (t._2, t._3)).sortBy { case (v, a) => (a, v) }.toSeq }
+    probes.foreach { case (pid, pv) =>
+      val want = replay(codes, gens, deleted, pv, 3, 15)
+      assert(got(pid) == want,
+        s"probe $pid: store scan diverged from the LUT replay\n" +
+          s"store:  ${got(pid)}\nreplay: $want")
+      assert(want.length == 15, s"probe $pid: top-k under-filled")
+    }
+    // The tombstones bite: without them the replay would return both.
+    assert(replay(codes, gens, Set.empty, probes(0)._2, 3, 15).exists(_._1 == 3100L) &&
+      replay(codes, gens, Set.empty, probes(1)._2, 3, 15).exists(_._1 == 20L),
+      "fixture must put the tombstoned ids in a top-k")
+    assert(!got.values.flatten.exists(t => deleted(t._1)),
+      "tombstoned ids leaked through the scan")
+    // The single-probe face is the same scan, sorted ascending.
+    val single = IvfPqIngest.retrieve(spark, dir, gens, probes(2)._2, 3, 15)
+    assert(single.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
+      replay(codes, gens, deleted, probes(2)._2, 3, 15))
+    // The (gen, cid) prune reaches the scan as partition pruning, the
+    // per-probe top-k runs through the WindowGroupLimit partial — the
+    // exchange carries k×probes×partitions rows, never the scored
     // product — and duplicate probe ids are refused, not mis-ranked.
-    val plan = IvfPqIngest.retrieveBatchDf(spark, dir, gens, probesDf, 3, 15)
+    val plan = IvfPqIngest.retrieveBatch(spark, dir, gens, probesDf, 3, 15)
       .queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters: [") &&
+      plan.split("PartitionFilters:")(1).takeWhile(_ != ']').contains("cid"),
+      s"(gen, cid) pruning not in PartitionFilters:\n$plan")
     assert(plan.contains("WindowGroupLimit") && plan.contains("Partial"),
       s"batch top-k lost the WindowGroupLimit partial:\n$plan")
     val dup = probesDf.unionByName(probesDf.limit(1))
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[IllegalArgumentException] {
-      IvfPqIngest.retrieveBatchDf(spark, dir, gens, dup, 3, 15)
+      IvfPqIngest.retrieveBatch(spark, dir, gens, dup, 3, 15)
     }
     assert(ex.getMessage.contains("duplicate probe_ids"))
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- cached).isEmpty,
+      "a refused probe frame must not stay cached")
   }
 
   test("rotated single-generation retrieval surfaces planted twins") {
@@ -310,7 +310,7 @@ class IvfPqOpqSpec extends AnyFunSuite {
     // re-ranks it exactly); with ksub=16 spec-scale codebooks on the
     // anisotropic fixture the twins land in the top-40, not the top-20
     // — the re-rank contract, not a correctness bar, sets k here.
-    val ids = IvfPqIngest.retrieveGens(spark, dir, Map(0 -> gen1), pv, 3, 40)
+    val ids = IvfPqIngest.retrieve(spark, dir, Map(0 -> gen1), pv, 3, 40)
       .collect().map(_.getLong(0)).toSet
     val twins = (0 until 5).map(i => 3100L + i).toSet
     assert(twins.subsetOf(ids), s"twins missing under rotated ADC: ${twins -- ids}")

@@ -312,6 +312,43 @@ class SocketSourceSpec extends AnyFunSuite {
     } finally { b0.stop(); b1.stop() }
   }
 
+  test("publish sink sends ts_us as Spark's internal micros, pre-1582 included") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.functions.{col, lit, timestamp_micros, unix_micros}
+    import spark.implicits._
+    // Proleptic-Gregorian micros (java.time's calendar, and Spark's):
+    // one instant before the 1582 cutover, where a java.sql.Timestamp
+    // round trip rebases to the Julian calendar, and one modern instant.
+    def us(t: String): Long = {
+      val i = java.time.Instant.parse(t)
+      i.getEpochSecond * 1000000L + i.getNano / 1000
+    }
+    val sent = Map(1L -> us("1000-01-01T00:00:00.123456Z"),
+      2L -> us("2024-05-06T07:08:09.654321Z"))
+    val broker = new MiniBroker
+    val port = broker.start()
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = MemoryStream[(Long, Long)]
+    // timestamp_micros makes the internal value exactly the sent micros
+    val events = input.toDF().select(col("_1").as("id"), lit(1L).as("n"),
+      timestamp_micros(col("_2")).as("ts")).as[KnobEvent]
+    val qa = BrokerSink.publishTo("127.0.0.1", port, "ts")(events)
+      .outputMode(OutputMode.Append()).start()
+    val qb = new SocketEventSource("127.0.0.1", port, "ts", "r").stream(spark)
+      .select(col("id"), unix_micros(col("ts")).as("ts_us"))
+      .writeStream.format("memory").queryName("sink_ts_us")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      input.addData(sent.toSeq: _*)
+      qa.processAllAvailable()
+      assert(drain(qb)(spark.table("sink_ts_us").count() == 2),
+        s"drained ${spark.table("sink_ts_us").count()} of 2")
+      val got = spark.table("sink_ts_us").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == sent, s"ts_us changed on the wire: sent $sent, read $got")
+    } finally { qa.stop(); qb.stop(); broker.stop() }
+  }
+
   test("publish sink fails the batch loudly when the broker is gone (bounded retry)") {
     import spark.implicits._
     def ts(s: Long): java.sql.Timestamp = new java.sql.Timestamp(s * 1000L)
