@@ -205,6 +205,51 @@ class IvfPqOpqSpec extends AnyFunSuite {
     assert(flatB(disarmed.cb) == flatB(gen0.cb))
   }
 
+  test("retrieveBatch == per-probe retrieveGens on the mixed rotated store") {
+    // Batching probes changes no probe's answer: each probe's rows from
+    // one multi-probe scan equal that probe retrieved alone through
+    // `retrieve` (the per-probe retrieval over the generations map,
+    // formerly retrieveGens) — same candidates, same ADC doubles, same
+    // (adc, vec_id) order — before and after a tombstone.
+    val dir = freshDir("batch")
+    build(dir, gen0, 0)
+    IvfPqIngest.beginGeneration(spark, dir, 1, gen1.cents, gen1.cb, gen1.rot)
+    IvfPqIngest.migrateBatch(spark, dir, 0L, df(allRows), 0, 1,
+      gen1.cents, gen1.cb, gen1.rot)
+    IvfPqIngest.migrateBatch(spark, dir, 1L, df(allRows), 0, 1,
+      gen1.cents, gen1.cb, gen1.rot)
+    val gens = Map(0 -> gen0, 1 -> gen1)
+    val probes = Seq(7L, 20L, 55L).map(i => i -> fixture._1(i.toInt)._2)
+    val probesDf = spark.createDataFrame(probes).toDF("probe_id", "v")
+    def batch(): Map[Long, Seq[(Long, Double)]] =
+      IvfPqIngest.retrieveBatch(spark, dir, gens, probesDf, 3, 15)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        .groupBy(_._1).map { case (pid, rs) =>
+          pid -> rs.map(t => (t._2, t._3)).sortBy { case (v, a) => (a, v) }.toSeq }
+    def single(pv: Array[Double]): Seq[(Long, Double)] =
+      IvfPqIngest.retrieve(spark, dir, gens, pv, 3, 15)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val got = batch()
+    probes.foreach { case (pid, pv) =>
+      val one = single(pv)
+      assert(got(pid) == one,
+        s"probe $pid: batch face diverged from single retrieval\n" +
+          s"batch:  ${got(pid)}\nsingle: $one")
+    }
+    val victim = got(7L).head._1
+    IvfPqIngest.delete(spark, dir,
+      spark.createDataFrame(Seq(Tuple1(victim))).toDF("vec_id"))
+    val after = batch()
+    probes.foreach { case (pid, pv) =>
+      assert(after(pid) == single(pv),
+        s"probe $pid: batch face diverged from single retrieval after a tombstone")
+      assert(after(pid).length == 15,
+        s"probe $pid: batch top-k under-filled after a tombstone with live rows")
+    }
+    assert(!after.values.flatten.exists(_._1 == victim),
+      s"tombstoned $victim leaked into the batch shortlist")
+  }
+
   /** Driver-side reference for the store's ADC scan: every live,
     * unshadowed code in a probe's probed cells, scored with
     * [[SimilarityOps.pqLut]] for its generation and the probe rotated
@@ -234,12 +279,14 @@ class IvfPqOpqSpec extends AnyFunSuite {
     }.sortBy { case (vid, adc) => (adc, vid) }.take(k)
   }
 
-  test("retrieveBatch == a driver-side LUT replay bit for bit on the mixed rotated store") {
-    // The store's one ADC scan (probes as a frame, nothing
-    // driver-materialized) must return EXACTLY the reference's rows —
-    // same candidates, bit-identical ADC doubles — across the hardest
-    // store state: mixed rotated/unrotated generations, a shadowed
-    // crash-window batch, and tombstones.
+  test("retrieveBatchDf == retrieveBatch(decode) bit for bit on the mixed rotated store") {
+    // The store's one ADC scan — `retrieveBatch` over a probe frame,
+    // the decode-side scan once named retrieveBatchDf, nothing
+    // driver-materialized — must return EXACTLY the rows of the
+    // driver-side LUT replay (`replay`): same candidates, bit-identical
+    // ADC doubles, across the hardest store state: mixed
+    // rotated/unrotated generations, a shadowed crash-window batch, and
+    // tombstones.
     val dir = freshDir("dfbatch")
     build(dir, gen0, 0)
     IvfPqIngest.beginGeneration(spark, dir, 1, gen1.cents, gen1.cb, gen1.rot)
