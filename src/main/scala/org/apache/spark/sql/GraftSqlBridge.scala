@@ -2,13 +2,13 @@ package org.apache.spark.sql
 
 /** Narrow bridge into Spark's `private[sql]` surface (public Spark source,
   * stable across 4.x): re-bind a DataFrame's analyzed logical plan to a
-  * sibling SparkSession of the SAME SparkContext. Used by the quantizer
-  * training scope (SimilarityOps.trainConf) to run join-free training
-  * collects on a session clone whose conf (AQE off, clamped shuffle
-  * partitions) is ISOLATED from the caller's session — the public
-  * alternative (`createDataFrame(df.rdd, schema)`) inserts a
-  * deserialization barrier that breaks column pruning and codegen fusion
-  * with the scan, which is exactly the cost the training path cannot pay.
+  * sibling SparkSession of the SAME SparkContext. Used by connected
+  * components' star rounds (GraphOps.starLoop) to run on a session clone
+  * whose conf (AQE off, the loop's shuffle width) is ISOLATED from the
+  * caller's session — the public alternative (`createDataFrame(df.rdd,
+  * schema)`) inserts a deserialization barrier that breaks column pruning
+  * and codegen fusion with the scan, which is exactly the cost the
+  * rounds cannot pay.
   *
   * Only valid for sessions sharing one SparkContext/SharedState (cache
   * manager, catalog listeners): `rebind` asserts it.
