@@ -338,68 +338,6 @@ object ScaleProbe {
     val cellsOk = cells.length == nVecs
     val hiCell = cells.filter(_._1 >= hiBase).map(_._2).toSet
 
-    // ---- pruned-vs-brute identity + speedup at production k (round-12
-    // verdict task #1a): both paths over the SAME centroids; labels and
-    // distances must be bit-identical, and the pruned wall-time is the
-    // number that replaces the old brute 147.7 s headline.
-    val (bruteDf, prunedDf) =
-      graft.operators.SimilarityOps.assignBoth(spark, vdir, kScaled, 2)
-    def grab(df: org.apache.spark.sql.DataFrame): Array[(Long, Int, Long)] =
-      df.select("vec_id", "cid", "d").collect().map(r =>
-        (r.getLong(0), r.getInt(1),
-          java.lang.Double.doubleToLongBits(r.getDouble(2))))
-    var brute, pruned = Array.empty[(Long, Int, Long)]
-    time("assign_brute") { brute = grab(bruteDf); brute.length }
-    time("assign_pruned") { pruned = grab(prunedDf); pruned.length }
-    require(brute.length == pruned.length,
-      s"pruned returned ${pruned.length} rows vs brute ${brute.length} — " +
-        "zip would silently truncate the comparison")
-    val mismatches = brute.sortBy(_._1).zip(pruned.sortBy(_._1))
-      .count { case (a, b) => a != b }
-    require(mismatches == 0,
-      s"pruned assignment diverged from brute on $mismatches vectors")
-
-    // ---- IVF quantizer at production nlist (round-13 verdict task #1):
-    // the Lloyd's BUILD is the job the old brute n×k shape made the
-    // cluster-eater — k×Dim literal plan, every vector dotted against
-    // every centroid. A/B both builds at nlist=1024 over the same
-    // corpus: centroids must be BIT-IDENTICAL (the pruned path only
-    // skips centroids that provably lose), and the pruned build's
-    // wall-time is the number that replaces brute.
-    val nlist = 1024
-    var ivfFast: Array[(Int, Array[Double])] = Array.empty
-    var ivfSlow: Array[(Int, Array[Double])] = Array.empty
-    time(s"ivf_build_pruned k=$nlist") {
-      ivfFast = graft.operators.SimilarityOps
-        .ivfBuildHook(spark, vdir, nlist, 2, forceBrute = false)
-      ivfFast.length
-    }
-    time(s"ivf_build_brute k=$nlist") {
-      ivfSlow = graft.operators.SimilarityOps
-        .ivfBuildHook(spark, vdir, nlist, 2, forceBrute = true)
-      ivfSlow.length
-    }
-    def centBits(cs: Array[(Int, Array[Double])]) =
-      cs.toSeq.map { case (c, a) =>
-        c -> a.toSeq.map(java.lang.Double.doubleToLongBits) }
-    require(centBits(ivfFast) == centBits(ivfSlow),
-      "pruned IVF quantizer build diverged from brute")
-    // and the assignment pass itself over the built quantizer
-    val (ivfBruteDf, ivfPrunedDf) = graft.operators.SimilarityOps
-      .ivfAssignBothHook(spark, vdir, ivfFast)
-    def grabCells(df: org.apache.spark.sql.DataFrame): Array[(Long, Int)] =
-      df.select(col("vec_id").cast("long"), col("cid")).collect()
-        .map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1)
-    var ivfBrute, ivfPruned = Array.empty[(Long, Int)]
-    time(s"ivf_assign_brute k=$nlist") { ivfBrute = grabCells(ivfBruteDf); ivfBrute.length }
-    time(s"ivf_assign_pruned k=$nlist") { ivfPruned = grabCells(ivfPrunedDf); ivfPruned.length }
-    require(ivfBrute.length == nVecs && ivfPruned.length == nVecs)
-    val ivfMismatch = ivfBrute.zip(ivfPruned).count { case (a, b) => a != b }
-    require(ivfMismatch == 0,
-      s"pruned IVF assignment diverged from brute on $ivfMismatch vectors")
-    println(s"[scale-probe] ivf quantizer k=$nlist: builds bit-identical, " +
-      s"cells identical on $nVecs vectors")
-
     // ---- CentIndex construction cost at production k (round-13 verdict
     // task #3): the grouping is driver work — parallelized this round —
     // and the index itself is the broadcast every assignment task pulls.
@@ -478,7 +416,6 @@ object ScaleProbe {
 
     println(s"[scale-probe] kmeans cells=$kScaled partition_ok=$cellsOk " +
       s"planted_one_cell=${hiCell.size == 1} " +
-      s"assign_identical=${mismatches == 0} " +
       s"cluster_dedup kept=${keptKm.length}/$nVecs " +
       s"planted_collapsed=$hiCollapsed hot_collapsed=$hotCollapsed " +
       s"hot_cell_size=${cells.groupBy(_._2).values.map(_.length).max} " +

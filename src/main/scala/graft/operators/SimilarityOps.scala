@@ -854,8 +854,8 @@ object SimilarityOps {
     // curation — SemDeDup's §3 "cluster the corpus" stage (Abbas et al.
     // 2023, arXiv:2303.09540) as a first-class operator, ORACLE-CHECKED
     // end to end (the rounded-mean contract above makes the iterative
-    // float algorithm cross-engine exact — contrast q_ivf_topk, whose
-    // unrounded quantizer is no-oracle by design). Output is the final
+    // float algorithm cross-engine exact; q_ivf_topk shares the same
+    // quantizer and oracle replay). Output is the final
     // assignment under the round-2 centroids plus its rounded squared
     // distance — the (vector → cell) map a curation pipeline persists as
     // a partition column.
@@ -1314,38 +1314,6 @@ object SimilarityOps {
       .orderBy("vec_id")
   }
 
-  /** ScaleProbe hook: the brute and pruned assignment frames over the
-    * SAME centroids, so the probe can assert label/distance identity and
-    * report the wall-clock gap at production k. */
-  private[graft] def assignBoth(
-      s: SparkSession, d: String, k: Int, iters: Int): (DataFrame, DataFrame) = {
-    val e = vecs(s, d)
-    val cents = kmCentroids(e, k, iters)
-    (kmAssignBrute(e, cents), kmAssignPruned(e, cents))
-  }
-
-  /** ScaleProbe hooks for the IVF quantizer A/B (round-13 verdict task
-    * #1): the full Lloyd's build with the assignment path pinned, and
-    * both assignment frames over one centroid set, mirroring
-    * [[assignBoth]]. */
-  private[graft] def ivfBuildHook(
-      s: SparkSession, d: String, k: Int, iters: Int,
-      forceBrute: Boolean): Array[(Int, Array[Double])] =
-    ivfCentroids(vecs(s, d), k, iters, forceBrute)
-
-  private[graft] def ivfAssignBothHook(
-      s: SparkSession, d: String,
-      cents: Array[(Int, Array[Double])]): (DataFrame, DataFrame) = {
-    val e = vecs(s, d)
-    // reference arm: literal plan below PruneK, exhaustive broadcast at
-    // production k (the literal tree OOMs the driver there — see
-    // ivfAssignExhaustive)
-    val ref =
-      if (cents.length >= PruneK) ivfAssignExhaustive(e, cents)
-      else ivfAssignBrute(e, cents)
-    (ref, ivfAssignPruned(e, cents))
-  }
-
   /** The q_cluster_dedup pipeline at arbitrary (k, iters, τ) — see
     * [[kmeansAssignQ]] for why the registry pins the parameters.
     *
@@ -1443,54 +1411,35 @@ object SimilarityOps {
   private def annSketch(vcol: Column): Column =
     AnnPlanes.sketchCol(vcol, 8)
 
-  /** Squared-distance scores to every centroid, as one materialized array
-    * (the ivfCentroids argmax lesson: a when()-chain argmin re-evaluates
-    * subtrees exponentially). The decomposition d = |v|² − 2·v·c + |c|²
-    * is shared with the DuckDB oracle TERM FOR TERM: each Σ is a
-    * left-to-right fold (native dot_product ≡ DuckDB list_sum; the |c|²
-    * term is a driver-side Scala fold over the same rounded components),
-    * and the combination is spelled (vv − 2·vc) + cc on both sides, so
-    * the doubles — and therefore every argmin — are bit-identical. */
-  private def kmScores(cents: Array[(Int, Array[Double])]): Column = {
-    val vv = dot(col("v"), col("v"))
-    // typedLit, not array(c.map(lit)): the values (and the constant-folded
-    // runtime Literal) are identical, but the element-wise spelling hands
-    // Catalyst k × Dim expression nodes PER PLAN, and analysis time was
-    // a measurable slice of the time outside jobs (r21).
-    array(cents.map { case (_, c) =>
-      vv - lit(2d) * dot(col("v"), typedLit(c.toSeq)) +
-        lit(c.map(x => x * x).sum)
-    }: _*)
-  }
-
-  /** (vec_id, v, cid, d): nearest centroid per vector, ties to the lowest
-    * cell id (array_position takes the FIRST occurrence of the min — the
-    * oracle's ORDER BY d, cid). Map-side only: centroids ride along as
-    * literals (small k) or a broadcast (large k), so at 100 TB this is a
-    * scan, never a shuffle. Dispatches on k: below [[PruneK]] the flat
-    * codegen'd scores array wins (and the k=8 oracle path keeps its
-    * proven plan); at or above it the brute n×k distance work is the job
-    * that eats the cluster (round-12 verdict: Θ(n^1.5)·Dim under the
-    * k=√(n/2) rule, 147.7 s at just 1M×64d), so the triangle-inequality
-    * pruned path takes over — LABEL- AND DISTANCE-BIT-IDENTICAL by
-    * construction (KmeansPruneSpec + ScaleProbe assert it). */
+  /** (vec_id, v, cid, d): nearest centroid per vector and its squared
+    * distance, ties to the lowest cell id (the oracle's ORDER BY d,
+    * cid). Map-side only: the centroids ship as one [[CentIndex]]
+    * broadcast, so at 100 TB this is a scan, never a shuffle. The
+    * distance is (|v|² − 2·v·c) + |c|², shared with the DuckDB oracle
+    * ([[kmDistSql]]) term for term — each Σ a left-to-right fold over
+    * the same doubles — so every (cid, d) is bit-identical to the
+    * replay. The index prunes centroids by the triangle inequality: the
+    * brute n×k distance work is Θ(n^1.5)·Dim under the k=√(n/2) scale
+    * rule (147.7 s at 1M×64d). mapPartitions is deliberate: the skip
+    * logic is data-dependent control flow that no Column tree expresses
+    * without evaluating every branch, which is exactly the work being
+    * avoided. */
   private[graft] def kmAssign(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame =
-    if (cents.length >= PruneK) kmAssignPruned(e, cents)
-    else kmAssignBrute(e, cents)
-
-  private[graft] def kmAssignBrute(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame =
-    e.select(col("vec_id"), col("v"), kmScores(cents).as("ds"))
-      .select(col("vec_id"), col("v"),
-        (array_position(col("ds"), array_min(col("ds"))) - 1)
-          .cast("int").as("cid"),
-        array_min(col("ds")).as("d"))
-
-  /** k at which [[kmAssign]] switches to the pruned path. 32 keeps every
-    * oracle-replayed registry query (k=8) on the brute plan while the
-    * scale rule k=√(n/2) (k ≥ 32 from n ≥ 2048) always prunes. */
-  private val PruneK = 32
+      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
+    val spark = e.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(new CentIndex(cents))
+    e.select(col("vec_id").cast("long"), col("v"))
+      .as[(Long, Array[Double])]
+      .mapPartitions { it =>
+        val idx = bc.value
+        it.map { case (id, v) =>
+          val (cid, d) = idx.assign(v)
+          (id, v, cid, d)
+        }
+      }
+      .toDF("vec_id", "v", "cid", "d")
+  }
 
   /** Driver-side index over the k centroids for assignment pruning: the
     * centroids themselves are clustered into G ≈ √k groups (a few Lloyd's
@@ -1504,27 +1453,28 @@ object SimilarityOps {
     *
     * Exactness: any centroid actually EVALUATED uses the identical
     * decomposition (v·v − 2·v·c) + Σc² with the identical left-to-right
-    * folds as the brute Column path, so the winning (cid, d) is the same
-    * double. A skip needs lb² > best where lb is real-arithmetic-safe;
-    * the 1e-9 RELATIVE slack absorbs the ~1e-15-scale float error in the
-    * bound chain, and the ABSOLUTE slack (1e-12·(v·v + max Σc²)) covers
-    * the cancellation regime the relative slack can't: when best ≈ 0 (a
-    * vector sitting on one of two near-identical centroids), the brute
-    * path's computed d for the OTHER centroid can come out as a tiny
-    * NEGATIVE number (catastrophic cancellation in (v·v − 2·v·c) + Σc²
-    * at true d ≈ 1e-14), and a skip test against best alone would prune
-    * the centroid brute would crown. The absolute slack is proportional
+    * folds as a full scan over every centroid, so the winning (cid, d) is
+    * the same double. A skip needs lb² > best where lb is
+    * real-arithmetic-safe; the 1e-9 RELATIVE slack absorbs the
+    * ~1e-15-scale float error in the bound chain, and the ABSOLUTE slack
+    * (1e-12·(v·v + max Σc²)) covers the cancellation regime the relative
+    * slack can't: when best ≈ 0 (a vector sitting on one of two
+    * near-identical centroids), the
+    * computed d for the OTHER centroid can come out as a tiny NEGATIVE
+    * number (catastrophic cancellation in (v·v − 2·v·c) + Σc² at true
+    * d ≈ 1e-14), and a skip test against best alone would prune the
+    * centroid a full scan would crown. The absolute slack is proportional
     * to the decomposition's own operand scale — the scale its rounding
     * error lives at — so every near-tied candidate gets evaluated and
     * the comparison happens on the identical computed doubles. Ties
-    * break to the lowest cid, the brute path's first-occurrence-of-min
+    * break to the lowest cid, a full scan's first-occurrence-of-min
     * rule.
     */
   private[graft] final class CentIndex(cents: Array[(Int, Array[Double])]) extends Serializable {
     val k: Int = cents.length
     val cids: Array[Int] = cents.map(_._1) // ascending by construction
     val cs: Array[Array[Double]] = cents.map(_._2)
-    val cc: Array[Double] = cs.map(c => c.map(x => x * x).sum) // same fold as kmScores' lit
+    val cc: Array[Double] = cs.map(c => c.map(x => x * x).sum) // the oracle's Σc² fold
     private val dim = cs(0).length
 
     private def dE(a: Array[Double], b: Array[Double]): Double = {
@@ -1594,7 +1544,7 @@ object SimilarityOps {
     val ccCenters: Array[Double] = centers.map(c => c.map(x => x * x).sum)
     private val maxCC: Double = cc.max
 
-    /** Nearest centroid of v: (cid, d) with d the brute path's exact
+    /** Nearest centroid of v: (cid, d) with d a full scan's exact
       * double. */
     def assign(v: Array[Double]): (Int, Double) = {
       val (i, d) = nearest(v)
@@ -1636,7 +1586,7 @@ object SimilarityOps {
               val c = cs(ci)
               var vc = 0.0; var t = 0
               while (t < dim) { vc += v(t) * c(t); t += 1 }
-              val d = (vv - 2 * vc) + cc(ci) // == kmScores term, bit for bit
+              val d = (vv - 2 * vc) + cc(ci) // == kmDistSql term, bit for bit
               if (d < best || (d == best && (bestIdx < 0 || cids(ci) < cids(bestIdx)))) {
                 best = d; bestIdx = ci
               }
@@ -1650,9 +1600,9 @@ object SimilarityOps {
         // Unreachable for finite inputs (the nearest group is never
         // skipped at best=∞, so at least one centroid is evaluated and a
         // finite d always updates). Reachable only if EVERY distance is
-        // NaN (|v|² overflow to ∞ gives ∞−∞) — mirror the brute path,
-        // whose array_position-of-NaN-min lands on the first centroid,
-        // rather than crash on cids(-1).
+        // NaN (|v|² overflow to ∞ gives ∞−∞) — mirror a full scan's
+        // argmin, which lands on the first centroid, rather than crash on
+        // cids(-1).
         var i = 0
         while (i < k) {
           val c = cs(i)
@@ -1665,100 +1615,6 @@ object SimilarityOps {
       }
       (bestIdx, best)
     }
-
-    // ---- MIPS face: the IVF quantizer's argmax dot(v,c) ----
-    // Same group structure, Cauchy–Schwarz bounds instead of the reverse
-    // triangle inequality: dot(v,c) = dot(v,g) + dot(v, c−g)
-    // ≤ dot(v,g) + |v|·|c−g| (member bound) ≤ dot(v,g) + |v|·radius(g)
-    // (group bound). Any centroid EVALUATED uses the identical strict
-    // left-to-right dot fold as the brute Column path's DotProduct, and
-    // selection replicates Spark's double ordering exactly
-    // (SQLOrderingUtil.compareDoubles: x == y ⇒ equal, so ±0.0 ties
-    // fold; else Double.compare, so NaN outranks everything and equals
-    // NaN — array_max + array_position land on the FIRST index of the
-    // max, i.e. lowest index among ties). Slack on skips mirrors
-    // `assign`: every |dot| term is ≤ |v|·max|c| by Cauchy–Schwarz, so
-    // the float error in the bound chain lives at that operand scale and
-    // absEps = 1e-12·(|v|·max|c| + 1) dominates it with ~100× headroom;
-    // NaN bounds never skip (the < compares false).
-    private val maxNormC: Double = cs.map(c => math.sqrt(c.map(x => x * x).sum)).max
-
-    /** Index (NOT cid) of the argmax-dot centroid of v — the brute
-      * `array_position(scores, array_max(scores)) − 1` cell, bit for
-      * bit. Index and cid coincide for the 0..k-1 quantizer builds, but
-      * returning the index keeps the contract exactly the brute one. */
-    def assignMips(v: Array[Double]): Int = {
-      var vv = 0.0
-      var i = 0
-      while (i < dim) { vv += v(i) * v(i); i += 1 }
-      val nv = math.sqrt(vv)
-      // dot(v, center_j) per group (bounds only — plain driver-float care)
-      val dvg = new Array[Double](nGroups)
-      var j = 0
-      while (j < nGroups) {
-        var vc = 0.0; var t = 0
-        val g = centers(j)
-        while (t < dim) { vc += v(t) * g(t); t += 1 }
-        dvg(j) = vc
-        j += 1
-      }
-      val gub = Array.tabulate(nGroups)(j => dvg(j) + nv * radius(j))
-      // descending upper bound; NaN sorts last under TotalOrdering's
-      // negation but a NaN bound never passes a skip test anyway
-      val order = Array.range(0, nGroups).sortBy(j => -gub(j))
-      val absEps = 1e-12 * (nv * maxNormC + 1.0)
-      var best = Double.NegativeInfinity
-      var bestIdx = -1
-      var oi = 0
-      while (oi < nGroups) {
-        val gj = order(oi)
-        if (!(gub(gj) + math.abs(gub(gj)) * 1e-9 + absEps < best)) {
-          val mem = members(gj); val md = memberDist(gj)
-          var m = 0
-          while (m < mem.length) {
-            val ub = dvg(gj) + nv * md(m)
-            if (!(ub + math.abs(ub) * 1e-9 + absEps < best)) {
-              val ci = mem(m)
-              val c = cs(ci)
-              var vc = 0.0; var t = 0
-              while (t < dim) { vc += v(t) * c(t); t += 1 } // == DotProduct fold
-              val cmp = if (vc == best) 0 else java.lang.Double.compare(vc, best)
-              if (cmp > 0 || (cmp == 0 && ci < bestIdx)) { best = vc; bestIdx = ci }
-            }
-            m += 1
-          }
-        }
-        oi += 1
-      }
-      // all-NaN bounds regime (NaN components in v): evaluate
-      // everything; Double.compare makes the first NaN dot win, the
-      // brute array_position-of-NaN-max cell
-      if (bestIdx < 0) mipsArgmax(cs, v) else bestIdx
-    }
-  }
-
-  /** Index of the argmax-dot centroid of v over EVERY centroid, no
-    * bounds: the brute `array_position(scores, array_max(scores)) − 1`
-    * cell, bit for bit — DotProduct's left-to-right fold, and
-    * SQLOrderingUtil's doubles (±0.0 ties fold via ==, NaN outranks and
-    * equals NaN, the first index among ties wins). */
-  private def mipsArgmax(cs: Array[Array[Double]], v: Array[Double]): Int = {
-    var best = 0.0
-    var bestIdx = -1
-    var i = 0
-    while (i < cs.length) {
-      val c = cs(i)
-      var vc = 0.0
-      var t = 0
-      while (t < c.length) { vc += v(t) * c(t); t += 1 }
-      val cmp =
-        if (bestIdx < 0) 1
-        else if (vc == best) 0
-        else java.lang.Double.compare(vc, best)
-      if (cmp > 0) { best = vc; bestIdx = i }
-      i += 1
-    }
-    bestIdx
   }
 
   /** Test hook (KmeansPruneProps): the pruning index over a centroid
@@ -1767,32 +1623,8 @@ object SimilarityOps {
   private[graft] def assignIndexFor(
       cents: Array[(Int, Array[Double])]): CentIndex = new CentIndex(cents)
 
-  /** The pruned twin of [[kmAssignBrute]]: same (vec_id, v, cid, d)
-    * output, map-side only (centroid index ships as one broadcast, not a
-    * k×Dim literal tree — at k in the tens of thousands the literal plan
-    * alone would be megabytes). mapPartitions is deliberate: the skip
-    * logic is data-dependent control flow that no Column tree expresses
-    * without evaluating every branch, which is exactly the work being
-    * avoided. */
-  private[graft] def kmAssignPruned(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new CentIndex(cents))
-    e.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val idx = bc.value
-        it.map { case (id, v) =>
-          val (cid, d) = idx.assign(v)
-          (id, v, cid, d)
-        }
-      }
-      .toDF("vec_id", "v", "cid", "d")
-  }
-
   /** The one Lloyd's kernel all quantizer training runs through
-    * ([[kmCentroids]], [[ivfCentroids]], [[pqTrain]], [[opqGram]]). The
+    * ([[kmCentroids]], [[pqTrain]], [[opqGram]]). The
     * input becomes a vector RDD once, so Catalyst plans it a single time
     * (a persisted input keeps reading its cache). Each round broadcasts
     * `payload(state)`, folds every row into `groups × width` sums plus
@@ -1858,18 +1690,15 @@ object SimilarityOps {
     r / 10000
   }
 
-  /** Per-group means `s / n` of [[lloyd]]'s totals, through [[round4]]
-    * when `rounded`; an emptied group carries its previous entry (the
-    * oracle's LEFT JOIN + coalesce), so no cell id ever shifts. */
+  /** Per-group means `s / n` of [[lloyd]]'s totals, through [[round4]];
+    * an emptied group carries its previous entry (the oracle's LEFT JOIN
+    * + coalesce), so no cell id ever shifts. */
   private def means(prev: Array[Array[Double]], s: Array[Double],
-      n: Array[Long], rounded: Boolean): Array[Array[Double]] =
+      n: Array[Long]): Array[Array[Double]] =
     Array.tabulate(prev.length) { g =>
       val w = prev(g).length
       if (n(g) == 0) prev(g)
-      else Array.tabulate(w) { j =>
-        val m = s(g * w + j) / n(g)
-        if (rounded) round4(m) else m
-      }
+      else Array.tabulate(w)(j => round4(s(g * w + j) / n(g)))
     }
 
   private def addInto(s: Array[Double], at: Int, v: Array[Double],
@@ -1893,122 +1722,25 @@ object SimilarityOps {
   }
 
   /** k centroids after `iters` Lloyd's rounds through [[lloyd]], init =
-    * the rows with vec_id < k. Assignment is [[CentIndex.assign]] (the
-    * brute kmScores argmin, bit for bit), accumulated by the centroid's
+    * the rows with vec_id < k. Assignment is [[CentIndex.nearest]] (the
+    * [[kmAssign]] argmin, bit for bit), accumulated by the centroid's
     * INDEX — init ids are whatever vec_id < k holds. Means rounded to
     * 1e-4 per component ([[round4]]), the contract kmeansCtes replays;
     * an emptied cluster keeps its previous centroid. Any vector width:
     * the init rows set it. */
   private[graft] def kmCentroids(
-      e: DataFrame, k: Int, iters: Int): Array[(Int, Array[Double])] =
-    cellMeans(e, k, iters, rounded = true)(new CentIndex(_))(_.nearest(_)._1)
-
-  /** The cell quantizers' [[lloyd]] run: init = the rows with vec_id < k,
-    * groups = cells, width = the vector width, each row added to the
-    * cell INDEX `assign` picks under the round's `index`. */
-  private def cellMeans[P: scala.reflect.ClassTag](
-      e: DataFrame, k: Int, iters: Int, rounded: Boolean)(
-      index: Array[(Int, Array[Double])] => P)(
-      assign: (P, Array[Double]) => Int): Array[(Int, Array[Double])] = {
+      e: DataFrame, k: Int, iters: Int): Array[(Int, Array[Double])] = {
     val init = initRows(e, k)
     val cids = init.map(_._1)
     val dim = init(0)._2.length
     val cents = lloyd(e, dim, cids.length, dim, iters, init.map(_._2))(
-      cs => index(cids.zip(cs))) { (p, v, s, n) =>
-      val i = assign(p, v)
+      cs => new CentIndex(cids.zip(cs))) { (idx, v, s, n) =>
+      val i = idx.nearest(v)._1
       addInto(s, i * dim, v, 0, dim)
       n(i) += 1
-    }(means(_, _, _, rounded))
+    }(means)
     cids.zip(cents)
   }
-
-  /** The brute IVF cell assignment — (vec_id, v, cid) by argmax dot
-    * against a k×Dim literal centroid tree. Argmax via a MATERIALIZED
-    * scores array: a nested when()-chain argmax duplicates each
-    * dot-product subtree exponentially (no CSE across branches; 2^k
-    * evaluations measured as 32 s at k=8). Right at small k (flat
-    * codegen, zero broadcast); at production nlist the literal plan
-    * alone is megabytes and the n×k dots are the cluster-eating job —
-    * there the pruned and exhaustive broadcast twins take over. */
-  private[graft] def ivfAssignBrute(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
-    val k = cents.length
-    // argmax POSITION → the centroid's DECLARED cid, through a literal
-    // lookup — the same `idx.cids(...)` translation the pruned path
-    // applies. Quantizer builds always carry cids 0..k-1 (identity), but
-    // a caller passing non-contiguous cids must get the same cells from
-    // both arms, not silently index-valued ones here (round-14
-    // ADVICE). Each score inlines ITS OWN centroid literal (like the
-    // Euclidean face): the earlier element_at(full-matrix, i) form put a
-    // copy of the whole k×Dim literal under every score node — a
-    // quadratic Column tree whose driver-side conversion OOMed at
-    // nlist=1024 (round-16 ScaleProbe finding).
-    // typedLit per centroid (and for the cid lookup): same constant-folded
-    // values, one Catalyst node instead of Dim — see kmScores (r21).
-    val cidLit = typedLit(cents.map(_._1).toSeq)
-    e.select(col("vec_id"), col("v"),
-        array((0 until k).map(i =>
-          dot(col("v"), typedLit(cents(i)._2.toSeq))): _*).as("scores"))
-      .select(col("vec_id"), col("v"),
-        element_at(cidLit,
-          array_position(col("scores"), array_max(col("scores"))).cast("int"))
-          .as("cid"))
-  }
-
-  /** The pruned twin: one [[CentIndex]] broadcast + mapPartitions over
-    * the Cauchy–Schwarz MIPS bounds ([[CentIndex.assignMips]]) — same
-    * (vec_id, v, cid) output, cell ids identical to brute by the
-    * evaluated-dots-are-the-same-doubles argument (MipsPruneProps +
-    * IvfPruneSpec assert it). Same shape and rationale as
-    * [[kmAssignPruned]]. */
-  private[graft] def ivfAssignPruned(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(new CentIndex(cents))
-    e.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val idx = bc.value
-        it.map { case (id, v) => (id, v, idx.cids(idx.assignMips(v))) }
-      }
-      .toDF("vec_id", "v", "cid")
-  }
-
-  /** The scale-safe EXHAUSTIVE twin of [[ivfAssignBrute]]: every
-    * centroid evaluated by [[mipsArgmax]] (the reference arm shares no
-    * pruning logic), the centroids one broadcast array instead of a
-    * k×Dim literal tree — whose Column→Expression conversion OOMed the
-    * heap at nlist=1024 before a task ran (round-16 ScaleProbe). */
-  private[graft] def ivfAssignExhaustive(
-      e: DataFrame, cents: Array[(Int, Array[Double])]): DataFrame = {
-    val spark = e.sparkSession
-    import spark.implicits._
-    val cids = cents.map(_._1)
-    val bc = spark.sparkContext.broadcast(cents.map(_._2))
-    e.select(col("vec_id").cast("long"), col("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { it =>
-        val cs = bc.value
-        it.map { case (id, v) => (id, v, cids(mipsArgmax(cs, v))) }
-      }
-      .toDF("vec_id", "v", "cid")
-  }
-
-  /** IVF coarse quantizer (argmax-dot cells): k centroids refined by
-    * `iters` Lloyd's rounds through [[lloyd]], init = the rows with
-    * vec_id < k, accumulated by centroid index. Assignment is
-    * [[CentIndex.assignMips]]; `forceBrute` switches to the exhaustive
-    * [[mipsArgmax]] — the ScaleProbe and IvfPruneSpec A/B hook, which
-    * asserts the two builds emit bit-identical centroids before trusting
-    * the pruned one. Means are NOT rounded; the kernel's fixed merge
-    * order keeps them deterministic. */
-  private[graft] def ivfCentroids(
-      e: DataFrame, k: Int, iters: Int,
-      forceBrute: Boolean = false): Array[(Int, Array[Double])] =
-    cellMeans(e, k, iters, rounded = false)(cs =>
-      if (forceBrute) Left(cs.map(_._2)) else Right(new CentIndex(cs)))(
-      (p, v) => p.fold(mipsArgmax(_, v), _.assignMips(v)))
 
   // ---- DuckDB oracle SQL for the hyperplane-sketch ANN family ----
   // The 8 planes are inlined as literal lists: Double.toString emits the
@@ -2201,7 +1933,7 @@ object SimilarityOps {
            WHERE NOT isnan(dot / (na * nb))
          )"""
 
-  /** The oracle's squared distance — term-for-term the [[kmScores]]
+  /** The oracle's squared distance — term-for-term the [[CentIndex]]
     * decomposition: (|v|² − 2·v·c) + |c|², each Σ a left-to-right
     * list_sum fold over already-double components. */
   private def kmDistSql(v: String, c: String): String =
@@ -2542,7 +2274,7 @@ object SimilarityOps {
         n(g) += 1
         m += 1
       }
-    }((cb, s, n) => means(cb.flatten, s, n, rounded = true).grouped(ksub).toArray)
+    }((cb, s, n) => means(cb.flatten, s, n).grouped(ksub).toArray)
   }
 
   /** (vec_id, v, code array<tinyint> of nSub entries): one map-side pass,
@@ -2791,7 +2523,7 @@ object SimilarityOps {
     * extra grouping column so the 8 independent ksub-means train in one
     * chain: s = (vec_id, m, 8-dim slice of `src`.v), pc0 = slices of
     * vec_ids 0..ksub-1, then per round pdN (distances, the DIRECT
-    * Σ(sv−c)² fold [[pqNearest]] computes — not kmScores' expanded form)
+    * Σ(sv−c)² fold [[pqNearest]] computes — not kmDistSql's expanded form)
     * → paN (argmin, ties to low cid) → pmN (per-component means rounded
     * 1e-4) → pcN (empty-cell carry), ending in `paf` = the final
     * per-subspace code. Parameterized on the source CTE (must expose

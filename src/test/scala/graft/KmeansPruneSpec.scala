@@ -4,15 +4,16 @@ import graft.operators.SimilarityOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The pruned k-means assignment (triangle-inequality centroid shortlist,
-  * SimilarityOps.kmAssignPruned) claims BIT-IDENTITY with the brute
-  * codegen'd scores array — labels AND distances — which is what lets
-  * [[SimilarityOps.kmAssign]] switch paths on k without the oracle ever
-  * noticing. This spec builds the adversarial cases the claim has to
-  * survive: duplicate centroids (exact distance ties, where the brute
-  * path's first-occurrence-of-min rule must be reproduced), a centroid
-  * that IS a data vector (d ≈ 0, maximal pruning pressure), a zero
-  * vector, and exact duplicate vector blocks.
+/** The k-means assignment ([[SimilarityOps.kmAssign]], a
+  * triangle-inequality centroid shortlist) claims BIT-IDENTITY with the
+  * full-scan codegen'd scores array ([[KmBrute.kmAssignBrute]]) — labels
+  * AND distances — which is what the oracle's exact replay relies on.
+  * This spec builds the adversarial cases the claim has to survive:
+  * duplicate centroids (exact distance ties, where the brute
+  * reference's first-occurrence-of-min rule must be reproduced), a
+  * centroid that IS a data vector (d ≈ 0, maximal pruning pressure), a
+  * zero vector, and exact duplicate vector blocks — and the registered
+  * queries' own k = 8 quantizer.
   *
   * The same corpus then pins the clusterDedupQ rewrite: the exact
   * duplicate pre-collapse must leave the kept set IDENTICAL to the
@@ -67,15 +68,21 @@ class KmeansPruneSpec extends AnyFunSuite {
         .map(r => r.getLong(0) ->
           ((r.getInt(1), java.lang.Double.doubleToLongBits(r.getDouble(2)))))
         .toMap
-    val brute = grab(SimilarityOps.kmAssignBrute(e, cents))
-    val pruned = grab(SimilarityOps.kmAssignPruned(e, cents))
-    assert(brute.size == vectors.size && pruned.size == vectors.size)
-    val diffs = brute.keys.filter(id => brute(id) != pruned(id))
-    assert(diffs.isEmpty,
-      s"pruned diverged on ${diffs.take(5).map(id => s"$id: ${brute(id)} vs ${pruned(id)}").mkString("; ")}")
+    def parity(name: String, cs: Array[(Int, Array[Double])]): Map[Long, (Int, Long)] = {
+      val brute = grab(KmBrute.kmAssignBrute(e, cs))
+      val pruned = grab(SimilarityOps.kmAssign(e, cs))
+      assert(brute.size == vectors.size && pruned.size == vectors.size)
+      val diffs = brute.keys.filter(id => brute(id) != pruned(id))
+      assert(diffs.isEmpty,
+        s"$name: pruned diverged on ${diffs.take(5).map(id => s"$id: ${brute(id)} vs ${pruned(id)}").mkString("; ")}")
+      brute
+    }
+    val brute = parity("ties", cents)
     // the tie rule actually fired: vectors 0 and 1 sit at d=0 from BOTH
     // their own centroid and its duplicate — the kept cid must be the low one
     assert(brute(0L)._1 == 0 && brute(1L)._1 == 1)
+    // the registered queries' quantizer (KmK = 8, KmIters = 2)
+    parity("registered k=8", SimilarityOps.kmCentroids(e, 8, 2))
   }
 
   test("cluster dedup collapse rewrite equals all-pairs-within-cell semantics") {
@@ -144,8 +151,8 @@ class KmeansPruneSpec extends AnyFunSuite {
         .map(r => r.getLong(0) ->
           ((r.getInt(1), java.lang.Double.doubleToLongBits(r.getDouble(2)))))
         .toMap
-    val brute = grab(SimilarityOps.kmAssignBrute(df, cents))
-    val pruned = grab(SimilarityOps.kmAssignPruned(df, cents))
+    val brute = grab(KmBrute.kmAssignBrute(df, cents))
+    val pruned = grab(SimilarityOps.kmAssign(df, cents))
     val diffs = brute.keys.filter(id => brute(id) != pruned(id))
     assert(diffs.isEmpty,
       s"cancellation divergence on ${diffs.take(5).map(id => s"$id: ${brute(id)} vs ${pruned(id)}").mkString("; ")}")

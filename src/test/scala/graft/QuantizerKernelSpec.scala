@@ -9,7 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * width from the init rows: the IVF-PQ chain trains and encodes at a
   * width other than SimilarityOps.Dim, and a row whose width disagrees
   * fails the training loudly instead of being summed into the wrong
-  * slots.
+  * slots. The kernel's totals are the per-partition row-order sums merged
+  * in partition order, bit for bit, so training never depends on task
+  * timing.
   */
 class QuantizerKernelSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -50,7 +52,6 @@ class QuantizerKernelSpec extends AnyFunSuite {
     val short = frame(rows :+ (20L -> Array(1.0, 2.0, 3.0, 4.0, 5.0, 6.0)))
     Seq[(String, () => Any)](
       "kmCentroids" -> (() => SimilarityOps.kmCentroids(short, 4, 1)),
-      "ivfCentroids" -> (() => SimilarityOps.ivfCentroids(short, 4, 1)),
       "pqTrain" -> (() => SimilarityOps.pqTrain(short, 2, 4, 1))
     ).foreach { case (name, train) =>
       val err = intercept[Exception](train())
@@ -62,5 +63,61 @@ class QuantizerKernelSpec extends AnyFunSuite {
     val err = intercept[IllegalArgumentException](
       SimilarityOps.pqTrain(frame(rows), 3, 4, 1))
     assert(err.getMessage.contains("do not split into nSub=3"))
+  }
+
+  test("lloyd merges partition sums in partition order, bit for bit") {
+    import spark.implicits._
+    val (k, dim, iters) = (4, 4, 2)
+    // ±1e12 components next to small fractions: each add rounds at
+    // ulp(1e12)-scale, so every summation order leaves its own low bits,
+    // which survive round4 at the means' magnitude
+    val rows = (0L until 480L).map { i =>
+      i -> Array.tabulate(dim) { j =>
+        val big = if ((i / 3 + j) % 2 == 0) 1e12 else -1e12
+        big * (1 + i % 5) + ((i * 7 + j * 13) % 97) / 97.0 * 0.37
+      }
+    }
+    val e = spark.sparkContext.parallelize(rows, 12).toDF("vec_id", "v")
+    val parts = e.select(col("v")).as[Array[Double]].rdd.glom().collect()
+    assert(parts.length >= 8)
+    val init = rows.filter(_._1 < k).map { case (i, v) => i.toInt -> v }.toArray
+    // kmCentroids on the driver: assign each row, sum rows in order
+    // within a partition from 0.0, merge the partials in `order`, round4
+    def replay(order: Seq[Int]): Seq[Seq[Long]] = {
+      var cents = init
+      for (_ <- 1 to iters) {
+        val idx = SimilarityOps.assignIndexFor(cents)
+        val partials = parts.map { p =>
+          val s = Array.fill(k, dim)(0.0)
+          val n = new Array[Long](k)
+          p.foreach { v =>
+            val c = idx.nearest(v)._1
+            for (j <- 0 until dim) s(c)(j) += v(j)
+            n(c) += 1
+          }
+          (s, n)
+        }
+        val s = Array.fill(k, dim)(0.0)
+        val n = new Array[Long](k)
+        order.foreach { pi =>
+          val (ps, pn) = partials(pi)
+          for (c <- 0 until k) {
+            for (j <- 0 until dim) s(c)(j) += ps(c)(j)
+            n(c) += pn(c)
+          }
+        }
+        cents = cents.zipWithIndex.map { case ((cid, prev), c) =>
+          cid -> (if (n(c) == 0) prev
+            else Array.tabulate(dim)(j => SimilarityOps.round4(s(c)(j) / n(c))))
+        }
+      }
+      cents.toSeq.map(_._2.toSeq.map(java.lang.Double.doubleToLongBits))
+    }
+    val trained = SimilarityOps.kmCentroids(e, k, iters).toSeq
+      .map(_._2.toSeq.map(java.lang.Double.doubleToLongBits))
+    assert(trained == replay(parts.indices))
+    // negative control: the order is visible in the bits at all
+    assert(replay(parts.indices.reverse) != trained,
+      "reverse-order merge gave the same bits: the case pins nothing")
   }
 }
