@@ -290,10 +290,11 @@ object Bench {
       System.err.println(s"[bench] warm-up of events FAILED: ${e.getMessage}")
     }
     // The layout operators read a MAINTAINED physical layout; its
-    // materialization is one-time by contract (LayoutProbe reports the
-    // write cost explicitly). Build it here so the timed runs measure
-    // the read path — otherwise run 1 carries the write, the max/min
-    // ratio trips, and the query is flagged contended every round.
+    // materialization is one-time by contract (COVERAGE.md's "LayoutProbe
+    // — wall-clock evidence" row records the write cost). Build it here
+    // so the timed runs measure the read path — otherwise run 1 carries
+    // the write, the max/min ratio trips, and the query is flagged
+    // contended every round.
     // Gated on the selected names (round-12 ADVICE): a subset bench of
     // queries that never read these layouts shouldn't pay two table
     // writes of warm-up.

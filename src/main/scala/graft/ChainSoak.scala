@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 import graft.streaming.{BrokerSink, MiniBroker, SocketEventSource, StreamOps}
 
@@ -39,6 +39,25 @@ import graft.streaming.{BrokerSink, MiniBroker, SocketEventSource, StreamOps}
   * broker scale-out is supposed to have.
   */
 object ChainSoak {
+  /** `<root>/run-<pid>-<nanos>`: fresh per run, so a durable run never
+    * replays a previous run's WAL. */
+  private def freshRunRoot(root: String): Path =
+    Paths.get(root,
+      s"run-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+
+  /** Best-effort recursive delete. A dir it cannot remove is only left
+    * behind: freshness comes from the run root's name, not from
+    * emptiness. */
+  private def deleteRecursively(p: Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    try {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(f => Files.deleteIfExists(f))
+      finally walk.close()
+    } catch { case scala.util.control.NonFatal(_) => }
+  }
+
   def main(args: Array[String]): Unit = {
     val nMsgs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val shards = if (args.length > 1) args(1).toInt else 4
@@ -68,7 +87,7 @@ object ChainSoak {
     // 1's compacted WAL (seq counters resume past nMsgs, retained state
     // and subscriptions ride into the measurement), silently charging
     // the durable arm recovery work the memory-only arm never pays.
-    val runRoot = args.lift(3).filter(_.nonEmpty).map(SoakDirs.freshRunRoot)
+    val runRoot = args.lift(3).filter(_.nonEmpty).map(freshRunRoot)
     val dataRoot = runRoot.map(_.toString)
     // literal 5th arg `sync`: fdatasync per mutation batch (the
     // power-loss-durable chain price — one force per PUBA chunk)
@@ -97,8 +116,7 @@ object ChainSoak {
 
       val rowsB = new java.util.concurrent.atomic.AtomicLong(0L)
       // (rows, triggerMs) per B batch after batch 0 — batch 0 pays both
-      // queries' stream init, so the steady rate excludes it (the
-      // SocketSoak convention)
+      // queries' stream init, so the steady rate excludes it
       val steadyRows = new java.util.concurrent.atomic.AtomicLong(0L)
       val steadyMs = new java.util.concurrent.atomic.AtomicLong(0L)
       import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -181,7 +199,7 @@ object ChainSoak {
         s"""{"metric":"chain_soak_unit_msgs_per_sec","value":$rate,"unit":"msgs/sec","steady_unit_msgs_per_sec":$steady,"unit_msgs":${rowsB.get()},"updates":$nMsgs,"dup_excess":$dupExcess,"wall_secs":${"%.1f".formatLocal(java.util.Locale.ROOT, wallSecs)},"shards":$shards,"brokers":${endpoints.size},"durable":${dataRoot.isDefined},"wal_sync":$walSync,"hops":2,"cpus":$cpus}"""
       System.err.println(line)
       println(line)
-    } finally runRoot.foreach(SoakDirs.deleteRecursively)
+    } finally runRoot.foreach(deleteRecursively)
     spark.stop()
   }
 }

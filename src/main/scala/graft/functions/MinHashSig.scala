@@ -17,9 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * codegen), and Catalyst cannot factor the shared `hs` subtree out of
   * the K+1 sibling lambdas, so every component re-splits the text and
   * re-hashes every shingle — measured 33× duplicated interpreted work,
-  * ~1.5 ms/doc at K=32 (NeardupIngestProbe's first cut ran at ~600
-  * docs/s/core-32). This expression is the same computation as ONE loop:
-  * split once, hash each shingle once, fold the K mins in place.
+  * ~1.5 ms/doc at K=32 (the at-ingest probe's first cut ran at ~600
+  * docs/s/core-32; COVERAGE.md's "At-ingest recall gap closed" row has
+  * the later numbers). This expression is the same computation as ONE
+  * loop: split once, hash each shingle once, fold the K mins in place.
   *
   * The hash family is BIT-IDENTICAL to both other spellings
   * (NeardupIngestSpec asserts it against the batch explode+groupBy

@@ -98,8 +98,9 @@ object GraphOps {
     * form degenerates to one task per stage PLUS a driver barrier per
     * round — strictly worse than one task total. A caller overrides it
     * per call through `localFinishMaxEdges`; 0 forces the distributed
-    * loop (GraphProbe uses this to exercise the round machinery at probe
-    * scale). */
+    * loop (GraphOpsSpec runs every graph both ways; the round counts on
+    * adversarial shapes at scale are COVERAGE.md's "GraphProbe:
+    * star-contraction CC" row). */
   private[graft] val LocalFinishMaxEdges: Long = 4000000L
 
   /** As [[connectedComponents]], also returning the number of star rounds
@@ -273,9 +274,10 @@ object GraphOps {
     * inconsistent labels, so this throws rather than returning. The
     * PROVEN bound for the alternating algorithm is O(log² n) rounds
     * (Kiveris et al. SoCC'14, Thm 4); the O(log n) behavior is their
-    * empirical result (and GraphProbe's, ≤ ~12 rounds on adversarial
-    * shapes at 10⁶ nodes), so 60 is generous headroom, not a theorem —
-    * a graph legitimately needing more is cured by raising maxRounds. */
+    * empirical result (and ours on adversarial shapes at 10⁶ nodes:
+    * COVERAGE.md's "GraphProbe: star-contraction CC" row), so 60 is
+    * generous headroom, not a theorem — a graph legitimately needing
+    * more is cured by raising maxRounds. */
   private def requireConverged(converged: Boolean, maxRounds: Int): Unit =
     if (!converged)
       throw new IllegalStateException(

@@ -1,11 +1,11 @@
 package graft.streaming
 
 /** Standalone broker process entry — one [[MiniBroker]] in its own JVM,
-  * the unit of horizontal broker scale-out ([[graft.BrokerScaleSoak]]
-  * spawns N of these as real OS processes). Prints `PORT <n>` once
-  * listening, then blocks until stdin reaches EOF — so a broker child
-  * dies with its parent (stream close / destroy) instead of leaking a
-  * listening JVM.
+  * the unit of horizontal broker scale-out (the chaos specs spawn it as a
+  * real OS process; the multi-process scale-out numbers are COVERAGE.md's
+  * BrokerScaleSoak rows). Prints `PORT <n>` once listening, then blocks
+  * until stdin reaches EOF — so a broker child dies with its parent
+  * (stream close / destroy) instead of leaking a listening JVM.
   *
   * No Spark on this code path: the broker is plain sockets + heap, which
   * is what makes it cheap to fan out one-per-core-group on a real

@@ -10,7 +10,9 @@ import scala.jdk.CollectionConverters._
   *    settled is a branch no test or benchmark exercises);
   *  - every `runMain graft.<Name>` the README and the verify notes
   *    document names a main that exists, so deleting a main means
-  *    deleting its documented command too.
+  *    deleting its documented command too;
+  *  - conversely, every main under `src/main` has a `runMain` line in the
+  *    README, so a main nobody documents cannot accumulate unseen.
   * Reads the source tree, so it runs from the repository root (sbt's
   * forked test working directory). */
 class EntryPointGuardSpec extends AnyFunSuite {
@@ -43,13 +45,15 @@ class EntryPointGuardSpec extends AnyFunSuite {
       s"env variables read under $mainRoot: ${reads.distinct.sorted}")
   }
 
-  test("every documented runMain names an existing main") {
+  /** Fully qualified names of the objects under `src/main` that define
+    * `def main(`. */
+  private lazy val mains: Set[String] = {
     val pkg = """(?m)^package\s+([\w.]+)""".r
     // A top-level definition starts at column 0; an object's body runs
     // to the next one.
     val topLevel = """(?m)^(?:object|class|trait|case|final|sealed|abstract|private|@)""".r
     val obj = """(?m)^object\s+(\w+)""".r
-    val mains = mainSources.flatMap { case (_, src) =>
+    mainSources.flatMap { case (_, src) =>
       val p = pkg.findFirstMatchIn(src).map(_.group(1)).getOrElse("")
       val starts = topLevel.findAllMatchIn(src).map(_.start).toVector :+ src.length
       obj.findAllMatchIn(src).collect {
@@ -57,12 +61,25 @@ class EntryPointGuardSpec extends AnyFunSuite {
             .contains("def main(") => s"$p.${m.group(1)}"
       }
     }.toSet
-    val runMain = """runMain\s+(graft\.[\w.]+)""".r
+  }
+
+  private def documented(doc: String): Seq[String] =
+    """runMain\s+(graft\.[\w.]+)""".r
+      .findAllMatchIn(read(Paths.get(doc))).map(_.group(1)).toSeq
+
+  test("every documented runMain names an existing main") {
     val missing = for {
       doc <- docs
-      m <- runMain.findAllMatchIn(read(Paths.get(doc)))
-      if !mains(m.group(1))
-    } yield s"$doc: ${m.group(1)}"
+      m <- documented(doc)
+      if !mains(m)
+    } yield s"$doc: $m"
     assert(missing.isEmpty, s"documented mains that do not exist: $missing")
+  }
+
+  test("every main under src/main has a runMain line in the README") {
+    assert(mains.nonEmpty, s"no main found under $mainRoot")
+    val undocumented = mains -- documented("README.md")
+    assert(undocumented.isEmpty,
+      s"mains without a README runMain line: ${undocumented.toSeq.sorted}")
   }
 }

@@ -266,6 +266,50 @@ class ScalePatternsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("window group limit leaves the capped rows unchanged at 90% hot-key skew") {
+    // The q_domain_cap shape over a corpus where one (lang, source) key
+    // owns 90% of the rows. InferWindowGroupLimit adds the map-side
+    // partial limit; it is an optimization, so excluding it must return
+    // the same rows, and the hot key still emits exactly `cap` of them.
+    val cap = 5
+    val corpus = spark.range(0, 20000, 1, 8).select(
+      col("id").as("doc_id"),
+      when(col("id") % 10 =!= 0, lit("en"))
+        .otherwise(concat(lit("l"), pmod(col("id"), lit(37)))).as("lang"),
+      when(col("id") % 10 =!= 0, lit("hot"))
+        .otherwise(concat(lit("s"), pmod(col("id"), lit(100)))).as("source"))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("lang"), col("source"))
+      .orderBy(graft.functions.Num.mulHash(col("doc_id"), 1000000007L),
+        col("doc_id"))
+    def run(): (String, Seq[(String, String, Int, Long)]) = {
+      val df = corpus.withColumn("rk", row_number().over(w))
+        .filter(col("rk") <= cap)
+      (df.queryExecution.executedPlan.toString,
+        df.collect().map(r =>
+          (r.getString(1), r.getString(2), r.getInt(3), r.getLong(0)))
+          .toSeq.sorted)
+    }
+    val rule = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(rule)
+    val (planWith, withRule) = run()
+    spark.conf.set(rule,
+      "org.apache.spark.sql.catalyst.optimizer.InferWindowGroupLimit")
+    val (planWithout, withoutRule) =
+      try run()
+      finally prev match {
+        case Some(v) => spark.conf.set(rule, v)
+        case None => spark.conf.unset(rule)
+      }
+    // both arms really differ in plan, so the equality below is not vacuous
+    assert(planWith.contains("WindowGroupLimit"), s"rule did not fire:\n$planWith")
+    assert(!planWithout.contains("WindowGroupLimit"),
+      s"rule still fired while excluded:\n$planWithout")
+    assert(withRule == withoutRule,
+      "InferWindowGroupLimit changed the capped rows")
+    assert(withRule.count(t => t._1 == "en" && t._2 == "hot") == cap)
+  }
+
   test("simhash tables: hamming filter fused into the candidate join, no cartesian") {
     // The Manku block-permutation structure must plan as an equality
     // join on (t, k1, k2, k3) with the hamming <= 3 predicate FUSED into

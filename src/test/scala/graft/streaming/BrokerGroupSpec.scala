@@ -9,9 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * a topic sharded across independent broker processes has NO global
   * state — registration, seqs, acks, and retention are all per-member,
   * and the group client is the only place that composes them. Asserted
-  * here over two in-process [[MiniBroker]]s (the JVM-process separation
-  * itself is [[graft.BrokerScaleSoak]]'s job — these brokers share
-  * nothing but the test method, which is the point).
+  * here over two in-process [[MiniBroker]]s (the chaos specs run real
+  * [[BrokerMain]] processes, and the multi-process scale-out numbers are
+  * COVERAGE.md's BrokerScaleSoak rows — these brokers share nothing but
+  * the test method, which is the point).
   */
 class BrokerGroupSpec extends AnyFunSuite {
 
@@ -36,7 +37,6 @@ class BrokerGroupSpec extends AnyFunSuite {
       b0.publish("t", "m1"); b1.publish("t", "m2")
       g.ack(0, "t", "s", 1L)
       g.ack(1, "t", "s", 1L)
-      Thread.sleep(200)
       assert(b0.ackedSeq("t", "s") == 1L, "member 0 missing the sub")
       assert(b1.ackedSeq("t", "s") == 1L, "member 1 missing the sub")
     }
@@ -96,7 +96,6 @@ class BrokerGroupSpec extends AnyFunSuite {
       while (g.statAll("t", "s")._1 < 10L && System.nanoTime() < deadline)
         Thread.sleep(20)
       g.ack(0, "t", "s", 5L)
-      Thread.sleep(200)
       assert(b0.trimmedBelow("t") == 5L, "member 0 should trim to its ack")
       assert(b1.trimmedBelow("t") == 0L,
         "member 1 trimmed on a foreign member's ack")
@@ -159,7 +158,6 @@ class BrokerGroupSpec extends AnyFunSuite {
       while (g.statAll("t", "s")._1 < 4L && System.nanoTime() < deadline)
         Thread.sleep(20)
       g.ack(0, "t", "s", 4L)
-      Thread.sleep(200)
       assert(b0.trimmedBelow("t") == 4L)
       // a second subscription arriving after member 0's trim: member 0
       // answers its trim point, member 1 (untrimmed) answers 0

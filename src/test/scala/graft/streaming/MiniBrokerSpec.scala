@@ -43,6 +43,16 @@ class MiniBrokerSpec extends AnyFunSuite {
       }
       got.result()
     }
+    /** STAT on this connection, read to its `SEQ ` reply (pushed `MSG`
+      * lines before it are skipped). The broker runs a connection's verbs
+      * in order on one reader thread, so the reply proves every ACK sent
+      * before it has landed. */
+    def barrier(topic: String, sub: String): Unit = {
+      send(s"STAT $topic $sub")
+      val got = readUntil(10000)(_.startsWith("SEQ "))
+      assert(got.lastOption.exists(_.startsWith("SEQ ")),
+        s"no STAT reply: ${got.takeRight(3)}")
+    }
     def close(): Unit = sock.close()
   }
 
@@ -68,7 +78,7 @@ class MiniBrokerSpec extends AnyFunSuite {
         // acking one must not move the other (the round-9 name-collision
         // bug shared one ack cell across topics)
         ca.send("ACK topicA shared 5")
-        Thread.sleep(200)
+        ca.barrier("topicA", "shared")
         assert(broker.ackedSeq("topicA", "shared") == 5L)
         assert(broker.ackedSeq("topicB", "shared") == 0L)
       } finally { ca.close(); cb.close() }
@@ -93,14 +103,14 @@ class MiniBrokerSpec extends AnyFunSuite {
         // two subscriptions at different acks: trim follows the MINIMUM
         c.send("ACK tt u1 60")
         c.send("ACK tt u2 40")
-        Thread.sleep(200)
+        c.barrier("tt", "u2")
         assert(broker.trimmedBelow("tt") == 40L,
           s"trim point ${broker.trimmedBelow("tt")}")
         assert(broker.retainedCount("tt") == 60)
 
         // the laggiest sub catches up → trim advances to the next min
         c.send("ACK tt u2 100")
-        Thread.sleep(200)
+        c.barrier("tt", "u2")
         assert(broker.trimmedBelow("tt") == 60L)
         assert(broker.retainedCount("tt") == 40)
 
@@ -171,7 +181,7 @@ class MiniBrokerSpec extends AnyFunSuite {
         val next = c.readUntil(3)(_.endsWith(b64("p4")))
         assert(next.length == 1, s"duplicate stream detected: $next")
         c.send("ACK tp s1 4")
-        Thread.sleep(200)
+        c.barrier("tp", "s1")
         assert(broker.trimmedBelow("tp") == 4L,
           "refused SUB registered a phantom sub and pinned the trim")
       } finally c.close()
@@ -224,7 +234,7 @@ class MiniBrokerSpec extends AnyFunSuite {
         // creates.
         c.send("REG tf u"); assert(c.read() == "OK 0")
         c.send("ACK tf u 6")
-        Thread.sleep(200)
+        c.barrier("tf", "u")
         assert(broker.trimmedBelow("tf") == 6L)
         c.send("FETCH tf 0 1 3 9")
         assert(c.read().startsWith("ERR fetch trimmed-below"))
@@ -343,7 +353,7 @@ class MiniBrokerSpec extends AnyFunSuite {
         // ONLY registered sub — neither phantom nor ghost pins it
         c.send("REG tg real"); assert(c.read() == "OK 0")
         c.send("ACK tg real 10")
-        Thread.sleep(200)
+        c.barrier("tg", "real")
         assert(broker.trimmedBelow("tg") == 10L,
           "a phantom subscription pinned the retention trim")
         // REG after the trim starts at the trim point (the dropped
