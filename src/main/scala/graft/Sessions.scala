@@ -14,20 +14,31 @@ import org.apache.spark.sql.SparkSession
   * the micros fixtures shipped since, and the loader branches on the read
   * dtype either way — FixtureSchemaCanarySpec).
   *
-  * Streaming checkpoints go through
-  * [[graft.streaming.LocalCheckpointFileManager]]. Without the native
+  * Local writes set permissions through `java.nio`. Without the native
   * libhadoop (none ships with the bundled Hadoop client), Hadoop's local
   * filesystem spawns a `chmod` child for every file and directory it
-  * creates and a `readlink` child for every FileContext rename: about
-  * 4,850 child processes in one run of the benchmark's stream_chain, and
+  * creates and a `readlink` child for every FileContext rename. The
+  * session's `file:` filesystem (`spark.hadoop.fs.file.impl`) is
+  * [[graft.NioLocalFileSystem]]: the same checksummed filesystem with
+  * `.crc` sidecars, setting mode bits with `Files.setPosixFilePermissions`,
+  * so parquet and `saveAsTable` writes spawn no child (one `batch` run of
+  * the benchmark spawned 590 `chmod` children before this, 478 of them
+  * opening parquet part files). An `extra` entry for the key restores
+  * Hadoop's class. Hadoop caches the `file:` filesystem per JVM, so the
+  * class is the one of whichever conf asked first.
+  *
+  * Streaming checkpoints go through
+  * [[graft.streaming.LocalCheckpointFileManager]], which builds its own
+  * uncached [[graft.NioLocalFileSystem]] whatever that cache holds:
+  * Spark's default manager renames through FileContext, which cost about
+  * 4,850 child processes in one run of the benchmark's stream_chain and
   * tens of milliseconds on every offset-log, commit-log and state-store
   * write. The manager keeps Spark's write-temp-then-rename protocol and
-  * Hadoop's `.crc` sidecars (verified on read), sets permissions through
-  * `java.nio`, and leaves non-`file:` paths to Spark's default manager.
-  * Spark's state-store checksum files and commit validation stay at
-  * their defaults. To opt out, pass Spark's own
-  * `spark.sql.streaming.checkpointFileManagerClass` in `extra`, e.g. set
-  * to `org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager`.
+  * Hadoop's `.crc` sidecars (verified on read), and leaves non-`file:`
+  * paths to Spark's default manager. Spark's state-store checksum files
+  * and commit validation stay at their defaults. To opt out, pass Spark's
+  * own `spark.sql.streaming.checkpointFileManagerClass` in `extra`, e.g.
+  * set to `org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager`.
   *
   * Spark's generated-code cache holds [[CodegenCacheMaxEntries]] compiled
   * classes instead of its default 100 (`spark.sql.codegen.cache.maxEntries`).
@@ -55,6 +66,9 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   /** Spark's generated-code cache size in every session built here. */
   val CodegenCacheMaxEntries = 4096
+
+  /** The session key naming the `file:` filesystem class. */
+  val LocalFsKey = "spark.hadoop.fs.file.impl"
 
   def local(
       cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"),
@@ -131,6 +145,7 @@ object Sessions {
       .config("spark.sql.codegen.useIdInClassName", "false")
       .config(LocalCheckpointFileManager.ConfKey,
         classOf[LocalCheckpointFileManager].getName)
+      .config(LocalFsKey, classOf[NioLocalFileSystem].getName)
     extra.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the driver-generated fixtures (TESTDATA.md).
   *
@@ -20,17 +27,17 @@ object Tables {
     "part", "orders", "lineitem", "documents", "embeddings")
 
   /** Per-session schema catalog (r21): `spark.read.parquet` re-infers the
-    * schema on EVERY call by reading footers in a scheduled 1-task job
-    * (~20-25 ms measured) — a pure fixed cost paid 1-3× per query build,
-    * every pass. Production engines put exactly this metadata in a catalog
-    * (HMS, Iceberg manifests) so reads don't touch footers; this map is
-    * that layer for the path-addressed fixtures. METADATA ONLY — no rows,
-    * no file listings, no query results are cached: the scan lists and
-    * reads parquet at every execution, so every bench/oracle invocation
-    * still computes from the inputs. Keyed per SparkSession (weakly — a
-    * stopped session's entries are collectable) because a schema belongs
-    * to the session whose confs inferred it (e.g. the nanosAsLong branch
-    * below). Entries are keyed on a FINGERPRINT of the path's file
+    * schema on EVERY call by reading footers in a scheduled job (~20-25 ms
+    * warm, 0.15-0.27 s a table on a fresh session) — a pure fixed cost paid
+    * 1-3× per query build, every pass. Production engines put exactly this
+    * metadata in a catalog (HMS, Iceberg manifests) so reads don't touch
+    * footers; this map is that layer for the path-addressed fixtures.
+    * METADATA ONLY — no rows, no file listings, no query results are
+    * cached: the scan lists and reads parquet at every execution, so every
+    * bench/oracle invocation still computes from the inputs. Keyed per
+    * SparkSession (weakly — a stopped session's entries are collectable)
+    * because a schema belongs to the session whose confs inferred it (e.g.
+    * the nanosAsLong branch below). Entries are keyed on a FINGERPRINT of the path's file
     * listing — every file's name, size and modification time — because a
     * parquet read under a user-supplied schema resolves columns BY NAME
     * and yields nulls for columns absent from a rewritten file: silent
@@ -40,23 +47,42 @@ object Tables {
     * 1 s-resolution directory mtime would not change.
     * The fingerprint is one directory listing per table() call; it reads
     * no permission bits, which Hadoop's local filesystem would fetch by
-    * spawning a child process. */
+    * spawning a child process. A miss reads one footer on the driver
+    * ([[footerSchema]]) and runs no Spark job. */
   private val schemaCatalog =
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[
-        String, (Seq[(String, Long, Long)], org.apache.spark.sql.types.StructType)]]()
+      scala.collection.concurrent.TrieMap[String, (Seq[(String, Long, Long)], StructType)]]()
 
-  /** (relative path, size, mtime) of every file under `root`, sorted. */
-  private def listingFingerprint(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] = {
-    val top = fs.getFileStatus(root)
-    val prefix = top.getPath.toUri.getPath.length
-    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[(String, Long, Long)] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
-      else Seq((st.getPath.toUri.getPath.drop(prefix), st.getLen,
-        st.getModificationTime))
-    walk(top).sorted
+  /** The schema `spark.read.parquet(root)` infers, from the driver.
+    *
+    * With schema merging off Spark reads one footer
+    * (`ParquetUtils.inferSchema`): `_common_metadata`, else `_metadata`,
+    * else the first data file in path order, skipping `_`/`.` names as its
+    * file index does. It reads that footer in a scheduled job; this reads
+    * the same footer through the same pieces in the calling thread: the
+    * row-group-skipping footer read, then `readSchemaFromFooter` with the
+    * session's converter confs (Spark's row metadata, nanosAsLong, int96,
+    * binaryAsString). A root with visible subdirectories (partition
+    * columns) or schema merging on is left to `spark.read.parquet`. */
+  private def footerSchema(spark: SparkSession, conf: Configuration,
+      top: FileStatus, children: Seq[FileStatus]): StructType = {
+    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
+    val visible = children.filterNot(f => hidden(f.getPath.getName))
+    val named = (n: String) => children.find(_.getPath.getName == n)
+    val chosen =
+      if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
+          visible.exists(_.isDirectory)) None
+      else if (!top.isDirectory) Some(top)
+      else named("_common_metadata").orElse(named("_metadata"))
+        .orElse(visible.sortBy(_.getPath.toString).headOption)
+    chosen match {
+      case Some(f) =>
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      case None => spark.read.parquet(top.getPath.toString).schema
+    }
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -65,13 +91,22 @@ object Tables {
       schemaCatalog.computeIfAbsent(
         spark, _ => scala.collection.concurrent.TrieMap.empty)
     }
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fingerprint = listingFingerprint(
-      hPath.getFileSystem(spark.sessionState.newHadoopConf()), hPath)
+    val conf = spark.sessionState.newHadoopConf()
+    val hPath = new Path(path)
+    val fs = hPath.getFileSystem(conf)
+    val top = fs.getFileStatus(hPath)
+    val children = if (top.isDirectory) fs.listStatus(top.getPath).toSeq else Seq(top)
+    // (relative path, size, mtime) of every file under `path`, sorted
+    val prefix = top.getPath.toUri.getPath.length
+    def walk(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toUri.getPath.drop(prefix), st.getLen,
+        st.getModificationTime))
+    val fingerprint = children.flatMap(walk).sorted
     val schema = perSession.get(path) match {
       case Some((f, s)) if f == fingerprint => s
       case _ =>
-        val s = spark.read.parquet(path).schema
+        val s = footerSchema(spark, conf, top, children)
         perSession.put(path, (fingerprint, s))
         s
     }

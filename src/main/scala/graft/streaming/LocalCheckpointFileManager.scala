@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{FileSystems, Files}
-import java.nio.file.attribute.PosixFilePermission
-
+import graft.NioLocalFileSystem
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, LocalFileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
@@ -25,7 +22,8 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * `file:` paths get Spark's [[FileSystemBasedCheckpointFileManager]] over
   * Hadoop's checksummed [[LocalFileSystem]] (write to a temp file, rename
   * into place; `.crc` sidecars written and verified on read as before),
-  * whose raw layer sets permissions through `java.nio` instead of `chmod`.
+  * whose raw layer sets permissions through `java.nio` instead of `chmod`
+  * ([[graft.NioLocalFileSystem]]).
   * Every other scheme gets exactly what Spark would pick without this
   * class. Spark's own state-store checksum files and commit validation sit
   * above the manager and are untouched.
@@ -64,39 +62,13 @@ object LocalCheckpointFileManager {
     Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme) == "file"
 
   /** A copy of `conf` whose `file:` scheme resolves to a fresh, uncached
-    * [[NioLocalFileSystem]]: the process-wide FileSystem cache keys on the
-    * scheme alone and would otherwise hand back the stock instance. */
+    * [[NioLocalFileSystem]]. The process-wide FileSystem cache keys on the
+    * scheme alone, so whichever conf first asks for `file:` fixes the class
+    * of the cached instance; checkpoints do not depend on that order. */
   private def localConf(conf: Configuration): Configuration = {
     val c = new Configuration(conf)
     c.setClass("fs.file.impl", classOf[NioLocalFileSystem], classOf[FileSystem])
     c.setBoolean("fs.file.impl.disable.cache", true)
     c
   }
-
-  private val posixViews = FileSystems.getDefault.supportedFileAttributeViews.contains("posix")
-
-  /** Hadoop's local filesystem that sets permissions with
-    * `Files.setPosixFilePermissions`. Hadoop's own call (a `chmod` child
-    * without libhadoop) remains for bits NIO cannot express (sticky) and
-    * on non-POSIX filesystems. Create and mkdirs both set permissions
-    * through this method. */
-  class NioRawLocalFileSystem extends RawLocalFileSystem {
-    override def setPermission(p: Path, permission: FsPermission): Unit = {
-      val mode = permission.toShort.toInt
-      if (!posixViews || (mode & ~0x1ff) != 0) super.setPermission(p, permission)
-      else {
-        val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-        // PosixFilePermission's order is OWNER_READ … OTHERS_EXECUTE, i.e.
-        // the mode bits from 0400 down to 0001.
-        PosixFilePermission.values.zipWithIndex.foreach { case (bit, i) =>
-          if ((mode & (0x100 >> i)) != 0) perms.add(bit)
-        }
-        Files.setPosixFilePermissions(pathToFile(p).toPath, perms)
-      }
-    }
-  }
-
-  /** The checksummed (`.crc` sidecar) local filesystem over the raw layer
-    * above. */
-  class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 }

@@ -33,4 +33,16 @@ object ChildJvm {
     Files.delete(log)
     out
   }
+
+  /** This process's proc(5) stat file. */
+  val procStat = Paths.get("/proc/self/stat")
+
+  /** `cminflt` (proc(5) field 11): minor faults of this process's
+    * waited-for children. Each reaped child adds about 50, so a flat value
+    * across a stretch of work means no child process ran in it. */
+  def childMinorFaults(): Long = {
+    val s = new String(Files.readAllBytes(procStat))
+    // fields after "pid (comm) " start at field 3
+    s.substring(s.lastIndexOf(')') + 2).split(' ')(11 - 3).toLong
+  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.{ChildJvm, Sessions}
@@ -20,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * child whenever the GC gets to it. */
 class CheckpointChildProcessSpec extends AnyFunSuite {
   test("windowedCounts micro-batches with a file: checkpoint spawn no child process") {
-    assume(Files.exists(CheckpointChildProcessProbe.stat), "needs Linux /proc/self/stat")
+    assume(Files.exists(ChildJvm.procStat), "needs Linux /proc/self/stat")
     val ck = Files.createTempDirectory("graft_ck_children")
     val out = ChildJvm.run(CheckpointChildProcessProbe, Seq(ck.toUri.toString))
     val grew = out.collectFirst { case s"cminflt_growth=$n" => n.toLong }
@@ -38,14 +38,7 @@ class CheckpointChildProcessSpec extends AnyFunSuite {
   * MemoryStream with a `file:` checkpoint at `args(0)`, then `Measured`
   * batches; prints this JVM's `cminflt` growth across the measured ones. */
 object CheckpointChildProcessProbe {
-  val stat = Paths.get("/proc/self/stat")
   val Measured = 10
-
-  private def childMinorFaults(): Long = {
-    val s = new String(Files.readAllBytes(stat))
-    // fields after "pid (comm) " start at field 3
-    s.substring(s.lastIndexOf(')') + 2).split(' ')(11 - 3).toLong
-  }
 
   def main(args: Array[String]): Unit = {
     // No heartbeat during the run: the first one initializes Spark's procfs
@@ -64,9 +57,9 @@ object CheckpointChildProcessProbe {
     }
     try {
       batch(0) // warm-up: creates the checkpoint layout and loads classes
-      val before = childMinorFaults()
+      val before = ChildJvm.childMinorFaults()
       (1 to Measured).foreach(batch)
-      val grew = childMinorFaults() - before
+      val grew = ChildJvm.childMinorFaults() - before
       require(q.exception.isEmpty, s"query failed: ${q.exception}")
       require(q.lastProgress.batchId >= Measured, s"only ${q.lastProgress.batchId} batches ran")
       println(s"cminflt_growth=$grew")

@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-import graft.TestSpark
+import graft.{NioLocalFileSystem, NioRawLocalFileSystem, Sessions, TestSpark}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, FileAlreadyExistsException, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -120,7 +120,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   }
 
   test("the raw layer sets plain modes through NIO and keeps Hadoop's call for sticky bits") {
-    val fs = new LocalCheckpointFileManager.NioRawLocalFileSystem
+    val fs = new NioRawLocalFileSystem
     fs.initialize(java.net.URI.create("file:///"), conf)
     val root = Files.createTempDirectory("graft_cfm_raw")
     val f = Files.createFile(root.resolve("f"))
@@ -144,7 +144,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(!LocalCheckpointFileManager.routesLocal(new Path("s3a://bucket/ck"), conf))
 
     val local = new LocalCheckpointFileManager(new Path("file:/tmp/ck"), conf).underlying
-    assert(fsOf(local).isInstanceOf[LocalCheckpointFileManager.NioLocalFileSystem])
+    assert(fsOf(local).isInstanceOf[NioLocalFileSystem])
 
     // A scheme with a FileSystem but no FileContext binding, served by the
     // stock raw local filesystem so nothing leaves the machine: the
@@ -167,5 +167,12 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(c.get(LocalCheckpointFileManager.ConfKey) == classOf[LocalCheckpointFileManager].getName)
     assert(c.get("spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true")
     assert(c.get("spark.sql.streaming.stateStore.commitValidation.enabled") == "true")
+  }
+
+  test("Sessions.local makes the NIO local filesystem the session's file: filesystem") {
+    val spark = TestSpark.spark
+    assert(spark.conf.get(Sessions.LocalFsKey) == classOf[NioLocalFileSystem].getName)
+    assert(spark.sessionState.newHadoopConf().get("fs.file.impl") ==
+      classOf[NioLocalFileSystem].getName)
   }
 }
