@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -47,43 +47,38 @@ object Tables {
     * 1 s-resolution directory mtime would not change.
     * The fingerprint is one directory listing per table() call; it reads
     * no permission bits, which Hadoop's local filesystem would fetch by
-    * spawning a child process. A miss reads one footer on the driver
-    * ([[footerSchema]]) and runs no Spark job. */
+    * spawning a child process. A miss on a single-file table reads its
+    * footer on the driver ([[footerSchema]]) and runs no Spark job. */
   private val schemaCatalog =
     new java.util.WeakHashMap[SparkSession,
       scala.collection.concurrent.TrieMap[String, (Seq[(String, Long, Long)], StructType)]]()
 
-  /** The schema `spark.read.parquet(root)` infers, from the driver.
-    *
-    * With schema merging off Spark reads one footer
-    * (`ParquetUtils.inferSchema`): `_common_metadata`, else `_metadata`,
-    * else the first data file in path order, skipping `_`/`.` names as its
-    * file index does. It reads that footer in a scheduled job; this reads
-    * the same footer through the same pieces in the calling thread: the
+  /** (relative path, size, mtime) of every file under `top`, sorted. */
+  private def listingFingerprint(
+      fs: FileSystem, top: FileStatus): Seq[(String, Long, Long)] = {
+    val prefix = top.getPath.toUri.getPath.length
+    def walk(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toUri.getPath.drop(prefix), st.getLen,
+        st.getModificationTime))
+    walk(top).sorted
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, from the driver. For a
+    * single file Spark reads that file's footer in a scheduled job; this
+    * reads it through the same pieces in the calling thread: the
     * row-group-skipping footer read, then `readSchemaFromFooter` with the
     * session's converter confs (Spark's row metadata, nanosAsLong, int96,
-    * binaryAsString). A root with visible subdirectories (partition
-    * columns) or schema merging on is left to `spark.read.parquet`. */
+    * binaryAsString). A directory is left to `spark.read.parquet`, which
+    * owns the footer choice, partition columns and schema merging. */
   private def footerSchema(spark: SparkSession, conf: Configuration,
-      top: FileStatus, children: Seq[FileStatus]): StructType = {
-    def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
-    val visible = children.filterNot(f => hidden(f.getPath.getName))
-    val named = (n: String) => children.find(_.getPath.getName == n)
-    val chosen =
-      if (spark.sessionState.conf.isParquetSchemaMergingEnabled ||
-          visible.exists(_.isDirectory)) None
-      else if (!top.isDirectory) Some(top)
-      else named("_common_metadata").orElse(named("_metadata"))
-        .orElse(visible.sortBy(_.getPath.toString).headOption)
-    chosen match {
-      case Some(f) =>
-        val footer = ParquetFooterReader.readFooter(
-          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
-          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-      case None => spark.read.parquet(top.getPath.toString).schema
-    }
-  }
+      top: FileStatus): StructType =
+    if (top.isFile) {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(top, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(top.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    } else spark.read.parquet(top.getPath.toString).schema
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -95,18 +90,11 @@ object Tables {
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(conf)
     val top = fs.getFileStatus(hPath)
-    val children = if (top.isDirectory) fs.listStatus(top.getPath).toSeq else Seq(top)
-    // (relative path, size, mtime) of every file under `path`, sorted
-    val prefix = top.getPath.toUri.getPath.length
-    def walk(st: FileStatus): Seq[(String, Long, Long)] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
-      else Seq((st.getPath.toUri.getPath.drop(prefix), st.getLen,
-        st.getModificationTime))
-    val fingerprint = children.flatMap(walk).sorted
+    val fingerprint = listingFingerprint(fs, top)
     val schema = perSession.get(path) match {
       case Some((f, s)) if f == fingerprint => s
       case _ =>
-        val s = footerSchema(spark, conf, top, children)
+        val s = footerSchema(spark, conf, top)
         perSession.put(path, (fingerprint, s))
         s
     }

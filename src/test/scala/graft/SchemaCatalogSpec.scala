@@ -1,118 +1,48 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The schema catalog's cold path ([[Tables.table]] on a session that has
-  * not seen the path) reads one footer on the driver instead of running
-  * Spark's schema-inference job, and picks the footer Spark would:
-  * `_common_metadata`, else `_metadata`, else the first data file in path
-  * order, skipping `_`/`.` names. Partitioned directories and schema
-  * merging keep Spark's own inference. Parity with a plain inferred read of
-  * every fixture table is FixtureSchemaCanarySpec's. */
+  * not seen the path) reads a single-file table's footer on the driver
+  * instead of running Spark's schema-inference job; a directory keeps
+  * Spark's own inference. Parity with a plain inferred read of every
+  * fixture table is FixtureSchemaCanarySpec's. */
 class SchemaCatalogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val Marker = "schema-catalog-spec-marker"
-
-  /** `body`'s result and the number of jobs started while it ran. The wait
-    * is on a one-task marker job run after `body`: the listener queue is
-    * FIFO, so once the marker's start arrives every earlier job's start has
-    * too. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == Marker))
-          markerSeen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      val result = body
-      sc.setJobGroup(Marker, "listener drain marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS), "marker job never reached the listener")
-      (result, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   test("a cold catalog load of every fixture table runs no Spark job") {
+    val sc = spark.sparkContext
     val fresh = spark.newSession()
-    val (loaded, n) = jobsDuring {
-      Tables.names.map(t => Tables.table(fresh, TestSpark.sf, t)) :+
-        Tables.events(fresh, TestSpark.sf)
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     }
-    assert(n == 0, s"$n Spark jobs while loading ${Tables.names.size + 1} tables cold")
+    ListenerDrain(sc)
+    sc.addSparkListener(l)
+    val loaded = try {
+      val dfs = Tables.names.map(t => Tables.table(fresh, TestSpark.sf, t)) :+
+        Tables.events(fresh, TestSpark.sf)
+      ListenerDrain(sc)
+      dfs
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get == 0,
+      s"${jobs.get} Spark jobs while loading ${Tables.names.size + 1} tables cold")
     assert(loaded.forall(_.schema.nonEmpty))
   }
 
-  /** The bytes of a one-file parquet table with columns `cols` (all
-    * long), written by Spark. */
-  private def partFile(cols: String*): Array[Byte] = {
-    val dir = Files.createTempDirectory("catalog_part")
-    try {
-      spark.range(3).selectExpr(cols.map(c => s"id as $c"): _*)
-        .coalesce(1).write.mode("overwrite").parquet(dir.resolve("t").toString)
-      val s = Files.list(dir.resolve("t"))
-      val part = try s.filter(_.getFileName.toString.startsWith("part-")).findFirst().get
-        finally s.close()
-      Files.readAllBytes(part)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-  }
-
-  /** Tables.table's schema for `<dir>/t.parquet`, on a fresh session with
-    * `confs` set. */
-  private def catalogSchema(dir: Path, confs: (String, String)*) = {
-    val fresh = spark.newSession()
-    confs.foreach { case (k, v) => fresh.conf.set(k, v) }
-    Tables.table(fresh, dir.toString, "t").schema
-  }
-
-  test("the footer is the one Spark's inference picks, on part files with different schemas") {
-    val dir = Files.createTempDirectory("catalog_pick")
-    val t = dir.resolve("t.parquet")
-    Files.createDirectories(t)
-    def add(name: String, cols: String*): Unit = Files.write(t.resolve(name), partFile(cols: _*))
-    def inferred = spark.read.parquet(t.toString).schema
-    try {
-      // hidden names sort first in path order and are skipped
-      add(".a.parquet", "hidden_dot")
-      add("_a.parquet", "hidden_underscore")
-      add("part-1.parquet", "second")
-      add("part-0.parquet", "first", "x")
-      assert(inferred.fieldNames.toSeq == Seq("first", "x"))
-      assert(catalogSchema(dir) == inferred)
-      add("_metadata", "meta")
-      assert(inferred.fieldNames.toSeq == Seq("meta"))
-      assert(catalogSchema(dir) == inferred)
-      add("_common_metadata", "common")
-      assert(inferred.fieldNames.toSeq == Seq("common"))
-      assert(catalogSchema(dir) == inferred)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-  }
-
-  test("partition columns and schema merging keep Spark's own inference") {
-    val dir = Files.createTempDirectory("catalog_spark")
+  test("a directory whose part files carry different schemas gets Spark's inferred schema") {
+    val dir = Files.createTempDirectory("catalog_dir")
     val t = dir.resolve("t.parquet").toString
     try {
-      spark.range(4).selectExpr("id", "id % 2 as k").write.partitionBy("k").parquet(t)
-      assert(catalogSchema(dir) == spark.read.parquet(t).schema)
-      assert(catalogSchema(dir).fieldNames.toSeq == Seq("id", "k"))
-
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(t))
-      Files.createDirectories(Path.of(t))
-      Files.write(Path.of(t, "part-0.parquet"), partFile("a"))
-      Files.write(Path.of(t, "part-1.parquet"), partFile("b"))
-      val merge = "spark.sql.parquet.mergeSchema" -> "true"
-      val merged = catalogSchema(dir, merge)
-      assert(merged == spark.read.option("mergeSchema", "true").parquet(t).schema)
-      assert(merged.fieldNames.toSet == Set("a", "b"))
+      spark.range(3).selectExpr("id as a", "id as x").coalesce(1).write.parquet(t)
+      spark.range(3).selectExpr("id as b").coalesce(1).write.mode("append").parquet(t)
+      val inferred = spark.read.parquet(t).schema
+      assert(Tables.table(spark.newSession(), dir.toString, "t").schema == inferred)
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 }
