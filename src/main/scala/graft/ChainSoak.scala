@@ -12,7 +12,7 @@ import graft.streaming.{BrokerSink, MiniBroker, SocketEventSource, StreamOps}
   *   pre-published topic `in` (knob updates, n = fan-out weight)
   *     → stage A = the FLOOD deployment: wire source (shard FETCH
   *       leases) → fan out n unit messages per update → [[BrokerSink]]
-  *       publish to topic `units` (executor-parallel chunked PUBB)
+  *       publish to topic `units` (executor-parallel chunked PUBA)
   *     → stage B = the MAPPER deployment: wire source on `units` →
   *       windowed counts per knob → noop
   *

@@ -38,8 +38,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - Sharding is `seq % numPartitions`, derived from the offset range:
   *    partitions are disjoint by construction, their union is exactly
   *    (start, end], and a replayed epoch re-fetches byte-identical
-  *    slices — determinism the push design had to buy with client-side
-  *    seq dedup.
+  *    slices, with no client-side seq dedup.
   *
   * Offsets are the topic's global seq (one Long), checkpointed by Spark;
   * `commit(end)` sends the cumulative ACK, which is also what lets the

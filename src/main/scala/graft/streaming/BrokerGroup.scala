@@ -31,8 +31,7 @@ import java.nio.charset.StandardCharsets
   * order ([[BrokerGroupSpec]]'s union test pins this).
   *
   * One line-oriented control connection per member, lazily opened; not
-  * thread-safe (callers own their group instance — the soak gives each
-  * producer thread its own raw socket instead for the data path).
+  * thread-safe: callers own their group instance.
   */
 final class BrokerGroup(val endpoints: Seq[(String, Int)]) extends AutoCloseable {
   require(endpoints.nonEmpty, "empty broker group")
@@ -79,7 +78,7 @@ final class BrokerGroup(val endpoints: Seq[(String, Int)]) extends AutoCloseable
     if (resp == null) {
       evict(m)
       throw new IllegalStateException(
-        s"member $m: connection EOF answering '$line'")
+        s"member $m: connection EOF answering '${line.takeWhile(_ != '\n')}'")
     }
     resp
   }
@@ -141,17 +140,22 @@ final class BrokerGroup(val endpoints: Seq[(String, Int)]) extends AutoCloseable
     }
   }
 
-  /** Bulk-publish payload lines to the member owning `shard`. Evicts on
-    * any IOException like every other path — a half-written PUBB frame
-    * on a cached Conn would desync the member's verb stream on reuse. */
-  def publish(shard: Int, topic: String, payloads: Seq[String]): Unit = {
+  /** Bulk-publish payload lines to the member owning `shard` with PUBA
+    * and return the member's last assigned seq: the batch is appended
+    * (and WAL-flushed on a durable member) when this returns. The frame
+    * goes through [[exchange]], so an IOException or EOF evicts the
+    * Conn; any reply other than `OK` evicts too (the member drops a
+    * refused batch's connection) and fails loudly. */
+  def publish(shard: Int, topic: String, payloads: Seq[String]): Long = {
     val m = member(shard)
-    try {
-      val c = conn(m)
-      c.out.write(s"PUBB $topic ${payloads.size}\n")
-      payloads.foreach { p => c.out.write(p); c.out.write("\n") }
-      c.out.flush()
-    } catch { case e: java.io.IOException => evict(m); throw e }
+    val resp = exchange(m, (s"PUBA $topic ${payloads.size}" +: payloads)
+      .mkString("\n"))
+    if (!resp.startsWith("OK ")) {
+      evict(m)
+      throw new IllegalStateException(
+        s"member $m: PUBA $topic refused: $resp")
+    }
+    resp.drop(3).trim.toLong
   }
 
   override def close(): Unit =

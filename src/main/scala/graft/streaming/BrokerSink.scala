@@ -89,9 +89,9 @@ object BrokerSink {
             val c = new BrokerClient(host, port, soTimeoutMs = 30000)
             try {
               // PUBA chunks: one broker-side lock per 1000 payloads, and
-              // the payload lines are never tokenized (per-message PUB
-              // measured ~25k msg/s under 4 producers; chunked bulk is
-              // ~20× that in ChainSoak). Acked, pipelined within a
+              // the payload lines are never tokenized (a per-message
+              // publish verb measured ~25k msg/s under 4 producers;
+              // chunked bulk is ~20× that in ChainSoak). Acked, pipelined within a
               // BOUNDED window: past 64 unacked chunks the sink reads an
               // OK before sending the next chunk — fully unbounded
               // pipelining lets the broker's OK replies fill the

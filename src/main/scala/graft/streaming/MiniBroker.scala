@@ -7,7 +7,6 @@ import java.util.Base64
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
-import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** In-process message broker speaking a line-based wire protocol — the
@@ -20,55 +19,33 @@ import scala.collection.mutable.ArrayBuffer
   * leases) is exercised over a real TCP socket rather than an in-JVM
   * queue.
   *
-  * Protocol (UTF-8 lines):
-  *  - client → `SUB <topic> <subscription> [<shard> <numShards>]` —
-  *    get-or-create both (the util.go:45-70 chain), then the broker pushes
-  *    every retained message with seq > the subscription's cumulative ack,
-  *    followed by live messages as they arrive. With the optional shard
-  *    pair, only seqs with `seq % numShards == shard` are pushed — the
-  *    broker-side partition lease (the Kafka-partition shape) that lets N
-  *    consumers split one topic with no client-side filtering and no
-  *    duplicated wire bytes. One push stream per connection: a second SUB
-  *    on the same connection answers `ERR already-subscribed` instead of
-  *    spawning a second pusher interleaving duplicate MSG streams into one
-  *    writer (round-9 ADVICE).
-  *  - broker → `MSG <seq> <base64-payload>` — seqs are topic-stable and
-  *    1-based, so re-delivery after a reconnect carries the SAME seq.
+  * Protocol (UTF-8 lines; the handler answers any other verb, or a known
+  * verb with the wrong token count, `ERR bad-request <verb>` and keeps
+  * the connection; blank lines are ignored):
   *  - client → `REG <topic> <subscription>` — explicit get-or-create of
   *    the subscription (the reference's GetOrCreateSubscription admin
-  *    call), answered `OK <ackedSeq>`. The ONLY verbs that create a
-  *    subscription are REG and SUB: STAT and ACK operate on existing
+  *    call, util.go:45-70), answered `OK <ackedSeq>`. REG is the ONLY
+  *    verb that creates a subscription: STAT and ACK operate on existing
   *    names exclusively, so a typo'd metadata poll or ack cannot mint a
   *    phantom subscription that pins retention (round-11 ADVICE).
   *  - client → `ACK <topic> <subscription> <seq>` — CUMULATIVE: everything
-  *    ≤ seq is done; unknown subscriptions answer
-  *    `ERR unknown-subscription`. (The 3-token legacy form
-  *    `ACK <subscription> <seq>` resolves the topic through this
-  *    connection's own SUBs.) An ACK may
-  *    TRIM: the broker drops retained messages below the minimum
-  *    cumulative ack across the topic's subscriptions — bounded retention
-  *    (the round-9 gap), with re-delivery still honoring every unacked
-  *    seq because the trim never passes the laggiest ack.
-  *  - client → `PUB <topic> <base64-payload>` — publish over the wire
-  *    (tests may also use [[publish]] in-process). On a DURABLE broker
-  *    every PUB pays one synchronous WAL write+flush inside the topic
-  *    log's monitor — correct, but it serializes all producers behind
-  *    per-line flushes; durable producers with any volume should use
-  *    PUBB/PUBA, whose whole chunk lands under ONE flush.
-  *  - client → `PUBB <topic> <n>` then n raw base64-payload lines — bulk
-  *    publish: one lock and one wakeup per chunk instead of per message
-  *    (the producing side's hot path — see [[BrokerSink]]). Fire and
-  *    forget: nothing is answered, so a producer that needs to KNOW the
-  *    batch landed (exactly-once chains across broker crashes) must use
-  *    PUBA instead.
-  *  - client → `PUBA <topic> <n>` then n payload lines — PUBB that
-  *    answers `OK <lastSeq>` only after the batch is appended (and, on a
-  *    durable broker, WAL-flushed). The producer-side half of surviving
-  *    a broker kill: a producer that never reads the OK must retry the
-  *    whole batch, and the broker may then hold both attempts — which is
-  *    exactly the at-least-once + consumer-payload-dedup contract
-  *    ([[BrokerSink]]'s scaladoc). Replies are pipelineable: send k
-  *    chunks, then read k OK lines.
+  *    ≤ seq is done; silent on success, `ERR unknown-subscription` for a
+  *    name never REGistered. An ACK may TRIM: the broker drops retained
+  *    messages below the minimum cumulative ack across the topic's
+  *    subscriptions — bounded retention (the round-9 gap), with a range
+  *    read of every unacked seq still served because the trim never
+  *    passes the laggiest ack.
+  *  - client → `PUBA <topic> <n>` then n raw base64-payload lines — bulk
+  *    publish: one lock and one wakeup per chunk, payload lines never
+  *    tokenized (the producing side's hot path — see [[BrokerSink]]),
+  *    answered `OK <lastSeq>` only after the batch is appended (and, on
+  *    a durable broker, WAL-flushed under ONE flush). The producer-side
+  *    half of surviving a broker kill: a producer that never reads the OK
+  *    must retry the whole batch, and the broker may then hold both
+  *    attempts — which is exactly the at-least-once + consumer-payload-
+  *    dedup contract ([[BrokerSink]]'s scaladoc). Replies are
+  *    pipelineable: send k chunks, then read k OK lines. Tests may also
+  *    use [[publish]] in-process, which shares the seq counter.
   *  - client → `STAT <topic> <subscription>` — `SEQ <latestSeq>
   *    <ackedSeq>`: the metadata poll a driver uses for admission control
   *    without any data flowing through it. Metadata READ only: it never
@@ -77,20 +54,22 @@ import scala.collection.mutable.ArrayBuffer
   *    subscription forever.
   *  - client → `FETCH <topic> <shard> <numShards> <after> <upTo>` — pull
   *    the retained shard slice `after < seq ≤ upTo, seq % numShards ==
-  *    shard` as MSG lines terminated by `EOF <upTo>`. This is the
-  *    replayable range read an executor-side partition reader issues
-  *    (Kafka's Fetch): deterministic for a fixed range, so a replayed
-  *    epoch re-reads byte-identical slices. Requesting below the trim
-  *    point answers `ERR fetch trimmed-below <base>` — loud, never
-  *    silently partial.
+  *    shard` as `MSG <seq> <base64-payload>` lines terminated by
+  *    `EOF <upTo>`. Seqs are topic-stable and 1-based, so a re-read
+  *    carries the SAME seqs. This is the replayable range read an
+  *    executor-side partition reader issues (Kafka's Fetch; the
+  *    reference's pull `Receive`, flood.go:59-85): deterministic for a
+  *    fixed range, so a replayed epoch re-reads byte-identical slices,
+  *    and the shard pair is the broker-side partition lease that lets N
+  *    readers split one topic with no duplicated wire bytes. Requesting
+  *    below the trim point answers `ERR fetch trimmed-below <base>` —
+  *    loud, never silently partial.
   *
   * Retention: messages ≤ min-ack across a topic's subscriptions are
   * dropped on ack (see above); a subscription created AFTER a trim starts
-  * at the trim point (it cannot be delivered what no longer exists). The
+  * at the trim point (it cannot be served what no longer exists). The
   * retained backlog (unacked suffix) must fit an ArrayBuffer — 2³¹
-  * messages; the trim is what keeps a long-lived topic under that bound,
-  * and [[push]] asserts it instead of mis-slicing (round-9 ADVICE on
-  * `cursor.toInt`).
+  * messages; the trim is what keeps a long-lived topic under that bound.
   *
   * Durability (`dataDir`): when set, every publish, subscription
   * creation, and ack appends one line to `dataDir/wal.log`
@@ -139,7 +118,7 @@ import scala.collection.mutable.ArrayBuffer
 class MiniBroker(dataDir: Option[String] = None,
     walCompactMinBytes: Long = 64L << 20,
     walSync: Boolean = false) {
-  /** Upper bound on a PUBB batch's client-declared line count. The broker
+  /** Upper bound on a PUBA batch's client-declared line count. The broker
     * allocates the batch buffer from this number before any payload
     * arrives, so it must be bounded by the server, not trusted from the
     * wire. 1M lines ≈ tens of MB worst-case — far above any real batch
@@ -149,7 +128,7 @@ class MiniBroker(dataDir: Option[String] = None,
     val seq = new AtomicLong(0L)
     // log(i) holds seq `base + 1 + i`; `base` rises as the retention trim
     // drops acked prefixes. Guarded by the buffer's monitor; appends
-    // notifyAll so pushers/fetchers waiting on new data wake up.
+    // notifyAll so a FETCH waiting for its range wakes up.
     val log = new ArrayBuffer[(Long, String)]() // (seq, base64 payload)
     var base = 0L
     // THIS topic's subscriptions (guarded by the log monitor, populated
@@ -164,9 +143,9 @@ class MiniBroker(dataDir: Option[String] = None,
   }
 
   private val topics = new ConcurrentHashMap[String, Topic]()
-  // Keyed "topic/subscription" — a name-only key let a SUB reusing a name
-  // on a different topic silently share the original's topic and ack
-  // state (round-9 ADVICE).
+  // Keyed "topic/subscription" — a name-only key let a subscription
+  // reusing a name on a different topic silently share the original's
+  // topic and ack state (round-9 ADVICE).
   private val subs = new ConcurrentHashMap[String, Sub]()
   private val running = new AtomicBoolean(false)
   @volatile private var server: ServerSocket = _
@@ -312,7 +291,7 @@ class MiniBroker(dataDir: Option[String] = None,
 
     /** Batch form: the `M <topic> <seq> <b64>` lines of `n` consecutive
       * seqs from `firstSeq`, ONE flush (one fdatasync in sync mode) — the
-      * PUBB/PUBA hot path. */
+      * PUBA hot path. */
     def appendMsgs(topic: String, firstSeq: Long, payloads: Array[String],
         n: Int): Unit = synchronized {
       guard()
@@ -472,22 +451,19 @@ class MiniBroker(dataDir: Option[String] = None,
     } finally rl.unlock()
   }
 
-  /** In-process publish (what a test harness uses). Returns the seq. */
-  def publish(topicName: String, payload: String): Long =
-    publishB64(topicName, Base64.getEncoder.encodeToString(
-      payload.getBytes(StandardCharsets.UTF_8)))
-
-  /** Shared single-message publish body (in-process [[publish]] and the
-    * wire PUB verb). Durable note: one WAL write+flush per message — see
-    * the PUB protocol doc; bulk producers use PUBB/PUBA. */
-  private def publishB64(topicName: String, b64: String): Long = {
+  /** In-process publish (what a test harness uses). Returns the seq.
+    * Durable note: one WAL write+flush per message; wire producers batch
+    * through PUBA, whose whole chunk lands under one flush. */
+  def publish(topicName: String, payload: String): Long = {
+    val b64 = Base64.getEncoder.encodeToString(
+      payload.getBytes(StandardCharsets.UTF_8))
     val t = topic(topicName)
     val rl = mutGate.readLock(); rl.lock()
     try t.log.synchronized {
       // WAL(flush) BEFORE the log append that makes the seq visible —
       // and before the seq counter moves, so a failed WAL write (disk
       // full) cannot leave a seq gap that breaks the contiguous-slice
-      // arithmetic push/FETCH rely on
+      // arithmetic FETCH relies on
       val s = t.seq.get() + 1
       wal.foreach(_.append(s"M $topicName $s $b64"))
       t.seq.set(s)
@@ -629,7 +605,7 @@ class MiniBroker(dataDir: Option[String] = None,
       if (minAck == Long.MaxValue) return
       // an over-ack (client acking past the published seq) clamps to the
       // log: cumulative-ack semantics, nothing breaks downstream because
-      // push/FETCH cursors all start at >= the acked position anyway
+      // FETCH ranges all start at >= the acked position anyway
       val drop = math.min(minAck - t.base, t.log.length.toLong)
       if (drop > 0) {
         // null-check, not just isDefined: replay-time trims run while
@@ -650,11 +626,10 @@ class MiniBroker(dataDir: Option[String] = None,
     }
   }
 
-  /** One connection: a blocking reader thread for verbs; the first SUB
-    * spawns a dedicated push thread. STAT/FETCH/ERR responses go through
-    * `out`'s monitor so they never interleave mid-line with a pusher
-    * (a connection mixing SUB with FETCH/STAT is legal but its client
-    * must then demultiplex MSG streams — ours never mix them).
+  /** One connection, one thread: the handler reads a verb, answers it and
+    * reads the next, so it is the only writer of `out` and replies come
+    * back in request order — which is what lets a client pipeline PUBA
+    * chunks or use a STAT reply as a barrier for the ACKs before it.
     */
   private def handle(sock: Socket): Unit = {
     conns.add(sock)
@@ -665,161 +640,98 @@ class MiniBroker(dataDir: Option[String] = None,
     // non-ASCII name in a reply line would decode as mojibake client-side
     val out = new PrintWriter(new java.io.OutputStreamWriter(
       sock.getOutputStream, StandardCharsets.UTF_8), false)
-    val closed = new AtomicBoolean(false)
-    val pusherStarted = new AtomicBoolean(false)
-    val localSubs = mutable.Map.empty[String, String] // sub name → topic
     try {
       var line = in.readLine()
       while (running.get() && line != null) {
         val parts = line.trim.split("\\s+")
-        // malformed arguments (non-numeric counts, zero shards, ...)
-        // answer ERR and keep the connection — every other invalid
-        // request here is refused loudly, so a bad verb must not kill
-        // the handler into a bare unexplained disconnect
+        // an unknown verb, a wrong token count or malformed arguments
+        // (non-numeric counts, ...) answer ERR and keep the connection:
+        // every request is answered or refused loudly, so a client never
+        // waits on a reply that is not coming
         try parts(0) match {
-          case "SUB" if parts.length == 3 || parts.length == 5 =>
-            // parse AND range-check the shard pair before ANY state
-            // change: a malformed SUB used to flip pusherStarted first,
-            // poisoning the connection into answering already-subscribed
-            // to its own retry; and an un-checked pair (nShards=0,
-            // shard>=nShards) passed validation here only to kill the
-            // pusher thread with an uncaught arithmetic error — the
-            // client then waited forever on a silent stream, while this
-            // handler's comment claimed zero shards answer ERR
-            val (shard, nShards) =
-              if (parts.length == 5) (parts(3).toInt, parts(4).toInt)
-              else (0, 1)
-            if (nShards <= 0 || shard < 0 || shard >= nShards) {
-              out.synchronized {
-                out.println(s"ERR sub bad-shard $shard/$nShards")
-                out.flush()
-              }
-            } else if (pusherStarted.getAndSet(true)) {
-              // one pusher per connection: a second would share this
-              // PrintWriter and interleave a duplicate MSG stream. The
-              // refusal must come BEFORE any registration: a refused SUB
-              // that still created its (topic, sub) entry would pin the
-              // topic's retention trim at the phantom's frozen ack
-              // forever.
-              out.synchronized {
-                out.println("ERR already-subscribed"); out.flush()
-              }
-            } else {
-              val s0 = sub(parts(1), parts(2))
-              localSubs(parts(2)) = parts(1)
-              val pusher = new Thread(
-                () => push(s0, shard, nShards, out, closed),
-                "mini-broker-push")
-              pusher.setDaemon(true)
-              pusher.start()
-            }
           case "REG" if parts.length == 3 =>
             // explicit get-or-create — the reference's
             // GetOrCreateSubscription admin call (util.go:45-70) as its
-            // own verb. Registration is DELIBERATE: SUB registers the
-            // name it streams; FETCH clients REG once before STAT/ACK.
-            // Answers the subscription's current cumulative ack so a
-            // fresh control connection can sync in one round trip.
+            // own verb. Answers the subscription's current cumulative
+            // ack so a fresh control connection can sync in one round
+            // trip.
             val s0 = sub(parts(1), parts(2))
-            out.synchronized {
-              out.println(s"OK ${s0.acked.get()}"); out.flush()
-            }
+            out.println(s"OK ${s0.acked.get()}"); out.flush()
           case "ACK" if parts.length == 4 =>
             // only EXISTING subscriptions may ack: a get-or-create here
             // would mint a phantom (topic, sub) whose frozen ack pins the
             // topic's retention trim forever (round-11 ADVICE)
             if (subs.containsKey(s"${parts(1)}/${parts(2)}"))
               ackAndTrim(parts(1), parts(2), parts(3).toLong)
-            else out.synchronized {
+            else {
               out.println(s"ERR unknown-subscription ${parts(2)}")
               out.flush()
             }
-          case "ACK" if parts.length == 3 =>
-            // legacy name-only ack: topic resolved through this
-            // connection's own SUBs — never a cross-topic guess
-            localSubs.get(parts(1))
-              .foreach(t => ackAndTrim(t, parts(1), parts(2).toLong))
-          case "PUB" if parts.length == 3 =>
-            publishB64(parts(1), parts(2))
-          case "PUBB" if parts.length == 3 => pubBatch(parts, in, out, ack = false)
-          case "PUBA" if parts.length == 3 => pubBatch(parts, in, out, ack = true)
+          case "PUBA" if parts.length == 3 => pubBatch(parts, in, out)
           case "STAT" if parts.length == 3 =>
             // metadata read — must NOT get-or-create the subscription (a
-            // STAT against a name that never SUBs would pin retention at
-            // the phantom's frozen ack, round-11 ADVICE) NOR the topic
+            // STAT against a name nobody REGisters would pin retention
+            // at the phantom's frozen ack, round-11 ADVICE) NOR the topic
             // (a mistyped name would mint an empty phantom that lingers
             // in the topics map and answers SEQ 0 0 forever — the same
-            // leak class the PUBB count fix closed; a metadata READ
+            // leak class the PUBA count fix closed; a metadata READ
             // creating state is strictly worse). Unknown topic ⇒ 0 0,
             // without creating it.
             val latest = Option(topics.get(parts(1)))
               .map(_.seq.get()).getOrElse(0L)
-            val acked = ackedSeq(parts(1), parts(2))
-            out.synchronized {
-              out.println(s"SEQ $latest $acked"); out.flush()
-            }
+            out.println(s"SEQ $latest ${ackedSeq(parts(1), parts(2))}")
+            out.flush()
           case "FETCH" if parts.length == 6 =>
             fetch(parts(1), parts(2).toInt, parts(3).toInt,
               parts(4).toLong, parts(5).toLong, out)
-          case _ => () // blank keep-alive or unknown verb: ignore
+          case "" => () // blank keep-alive
+          case verb =>
+            out.println(s"ERR bad-request $verb"); out.flush()
         } catch {
           case _: NumberFormatException | _: ArithmeticException |
               _: NegativeArraySizeException =>
-            out.synchronized {
-              out.println(s"ERR bad-request ${parts(0)}"); out.flush()
-            }
+            out.println(s"ERR bad-request ${parts(0)}"); out.flush()
         }
         line = in.readLine()
       }
     } catch {
       case _: SocketException => () // peer reset
     } finally {
-      closed.set(true)
       conns.remove(sock)
       try sock.close() catch { case _: Throwable => () }
     }
   }
 
-  /** Bulk publish body shared by PUBB (fire-and-forget) and PUBA
-    * (`ack = true`: answer `OK <lastSeq>` after the batch is appended
-    * and, on a durable broker, WAL-flushed — flush happens inside the
-    * log monitor, strictly before the reply line can be written).
-    *
-    * The next n raw lines ARE the payloads — appended under ONE lock
-    * with one wakeup, and never tokenized (per-message regex split +
-    * lock + notifyAll made a 4-producer publish path ~25k msg/s; this
-    * form measures ~20× that in ChainSoak). Consumers see identical
-    * seqs either way.
+  /** PUBA body: the next n raw lines ARE the payloads — appended under
+    * ONE lock with one wakeup, and never tokenized (per-message regex
+    * split + lock + notifyAll made a 4-producer publish path ~25k msg/s;
+    * this form measures ~20× that in ChainSoak). Answers `OK <lastSeq>`
+    * after the batch is appended and, on a durable broker, WAL-flushed —
+    * the flush happens inside the log monitor, strictly before the reply
+    * line can be written.
     */
   private def pubBatch(parts: Array[String], in: BufferedReader,
-      out: PrintWriter, ack: Boolean): Unit = {
+      out: PrintWriter): Unit = {
     // an unparseable count must take the SAME drop-the-connection path
     // as an out-of-range one: the generic bad-request catch keeps the
     // connection, but the client still sends its payload lines, which
     // would then be misread as verbs
-    val verb = parts(0).toLowerCase
     val n = try parts(2).toInt catch {
       case _: NumberFormatException =>
-        out.synchronized {
-          out.println(s"ERR $verb-count ${parts(2)} not an int")
-          out.flush()
-        }
-        throw new SocketException(s"$verb count unparseable")
+        out.println(s"ERR puba-count ${parts(2)} not an int"); out.flush()
+        throw new SocketException("puba count unparseable")
     }
     if (n < 0 || n > MaxPubBatch) {
       // refuse BEFORE allocating or reading payload: a bogus
-      // `PUBB t 2000000000` must answer ERR, not OOM the broker
+      // `PUBA t 2000000000` must answer ERR, not OOM the broker
       // (round-11 ADVICE). The client will still send its payload
       // lines, which would desync the verb stream — drop the
       // connection rather than misread payloads as verbs.
-      out.synchronized {
-        out.println(s"ERR $verb-count $n not in [0,$MaxPubBatch]")
-        out.flush()
-      }
-      throw new SocketException(s"$verb count out of range")
+      out.println(s"ERR puba-count $n not in [0,$MaxPubBatch]"); out.flush()
+      throw new SocketException("puba count out of range")
     }
     // get-or-create the topic only AFTER the count validates: a
-    // rejected PUBB must not mint a phantom empty topic that
+    // rejected PUBA must not mint a phantom empty topic that
     // lingers in the topics map (round-12 ADVICE)
     val t = topic(parts(1))
     val batch = new Array[String](n)
@@ -832,11 +744,10 @@ class MiniBroker(dataDir: Option[String] = None,
     if (eof) {
       // the peer died mid-batch: appending the partial prefix would
       // silently publish a batch the producer never completed — drop
-      // it; an at-least-once producer re-sends the whole batch on
-      // reconnect. No OK either (the peer is gone) — a PUBA producer
-      // that never read its OK retries by contract.
+      // it; an at-least-once producer that never read its OK re-sends
+      // the whole batch on reconnect. No OK either (the peer is gone).
       System.err.println(
-        s"[broker] ${parts(0)} short read ($i of $n lines), batch dropped")
+        s"[broker] PUBA short read ($i of $n lines), batch dropped")
     } else {
       // gate scope starts AFTER the payload read: holding the read side
       // across blocking socket I/O would let one stalled producer block
@@ -857,7 +768,7 @@ class MiniBroker(dataDir: Option[String] = None,
         t.log.notifyAll()
         s0 + i
       } finally rl.unlock()
-      if (ack) out.synchronized { out.println(s"OK $last"); out.flush() }
+      out.println(s"OK $last"); out.flush()
     }
   }
 
@@ -866,9 +777,7 @@ class MiniBroker(dataDir: Option[String] = None,
   private def fetch(topicName: String, shard: Int, nShards: Int,
       after: Long, upTo: Long, out: PrintWriter): Unit = {
     if (nShards <= 0 || shard < 0 || shard >= nShards) {
-      out.synchronized {
-        out.println(s"ERR fetch bad-shard $shard/$nShards"); out.flush()
-      }
+      out.println(s"ERR fetch bad-shard $shard/$nShards"); out.flush()
       return
     }
     val t = topic(topicName)
@@ -888,14 +797,11 @@ class MiniBroker(dataDir: Option[String] = None,
     }
     slice match {
       case Left(err) =>
-        out.synchronized { out.println(s"ERR fetch $err"); out.flush() }
+        out.println(s"ERR fetch $err"); out.flush()
       case Right(msgs) =>
-        out.synchronized {
-          writeMsgs(out, firstShardSeq(after, shard, nShards),
-            nShards, msgs)
-          out.println(s"EOF $upTo")
-          out.flush()
-        }
+        writeMsgs(out, firstShardSeq(after, shard, nShards), nShards, msgs)
+        out.println(s"EOF $upTo")
+        out.flush()
         fetchRows.computeIfAbsent(s"$topicName#$shard",
           _ => new AtomicLong()).addAndGet(msgs.length.toLong)
     }
@@ -943,43 +849,6 @@ class MiniBroker(dataDir: Option[String] = None,
       k += 1
     }
     lines.drainTo(out)
-  }
-
-  /** Push loop: stream every retained message of the sub's shard with
-    * seq > the sub's ack (re-delivery), then live messages as they land.
-    * Writes under `out`'s monitor (STAT/ERR lines may share the writer).
-    */
-  private def push(sub: Sub, shard: Int, nShards: Int, out: PrintWriter,
-      closed: AtomicBoolean): Unit = {
-    val t = topic(sub.topic)
-    var cursor = sub.acked.get() // re-delivery starts after the ack
-    try {
-      while (running.get() && !closed.get() && !out.checkError()) {
-        // seqs are contiguous and 1-based per topic, so seq s lives at
-        // log index s-1-base — the pending suffix is an O(pending) slice,
-        // not an O(log) rescan. cursor >= acked >= trim point, so the
-        // from-index is never negative; the backlog length is
-        // Int-bounded by the ArrayBuffer itself (see class doc).
-        val (from, pending, newCursor) = t.log.synchronized {
-          val from = math.max(cursor, t.base)
-          if (t.seq.get() <= from) {
-            t.log.wait(50)
-            (from, Array.empty[String], cursor)
-          } else {
-            val end = t.base + t.log.length
-            (from, shardSlice(t, from, end, shard, nShards), end)
-          }
-        }
-        if (newCursor > cursor) {
-          out.synchronized {
-            writeMsgs(out, firstShardSeq(from, shard, nShards),
-              nShards, pending)
-            out.flush()
-          }
-          cursor = newCursor
-        }
-      }
-    } catch { case _: InterruptedException => () }
   }
 }
 

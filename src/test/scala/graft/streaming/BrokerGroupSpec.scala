@@ -69,17 +69,28 @@ class BrokerGroupSpec extends AnyFunSuite {
     }
   }
 
+  test("a refused publish fails loudly and the next publish re-dials") {
+    withGroup { (g, b0, _) =>
+      // a topic name with a space makes a 4-token PUBA line: the member
+      // answers ERR bad-request, never OK
+      val e = intercept[IllegalStateException](
+        g.publish(0, "t x", Seq(b64("a1"))))
+      assert(e.getMessage.contains("ERR bad-request PUBA"), e.getMessage)
+      // the refused Conn still had the payload line's reply unread; it
+      // was evicted, so the next publish reads its own OK
+      assert(g.publish(0, "t", Seq(b64("a1"))) == 1L)
+      assert(b0.retainedCount("t") == 1)
+    }
+  }
+
   test("shard routing is disjoint and statAll aggregates by sum") {
     withGroup { (g, b0, b1) =>
       g.regAll("t", "s")
       // shard 0 → member 0, shard 1 → member 1, shard 2 → member 0 ...
-      g.publish(0, "t", Seq(b64("a1"), b64("a2"), b64("a3")))
-      g.publish(1, "t", Seq(b64("b1"), b64("b2")))
-      g.publish(2, "t", Seq(b64("a4")))
-      // poll: PUBB is pipelined, the append lands asynchronously
-      val deadline = System.nanoTime() + 5e9.toLong
-      while (g.statAll("t", "s")._1 < 6L && System.nanoTime() < deadline)
-        Thread.sleep(20)
+      // and each publish returns its member's last seq, after the append
+      assert(g.publish(0, "t", Seq(b64("a1"), b64("a2"), b64("a3"))) == 3L)
+      assert(g.publish(1, "t", Seq(b64("b1"), b64("b2"))) == 2L)
+      assert(g.publish(2, "t", Seq(b64("a4"))) == 4L)
       assert(b0.retainedCount("t") == 4, "member 0 should own shards 0 and 2")
       assert(b1.retainedCount("t") == 2, "member 1 should own shard 1")
       assert(g.statAll("t", "s") == ((6L, 0L)),
@@ -90,11 +101,9 @@ class BrokerGroupSpec extends AnyFunSuite {
   test("acks and retention trims are per-member: acking member 0 never trims member 1") {
     withGroup { (g, b0, b1) =>
       g.regAll("t", "s")
-      g.publish(0, "t", (1 to 5).map(i => b64(s"a$i")))
-      g.publish(1, "t", (1 to 5).map(i => b64(s"b$i")))
-      val deadline = System.nanoTime() + 5e9.toLong
-      while (g.statAll("t", "s")._1 < 10L && System.nanoTime() < deadline)
-        Thread.sleep(20)
+      assert(g.publish(0, "t", (1 to 5).map(i => b64(s"a$i"))) == 5L)
+      assert(g.publish(1, "t", (1 to 5).map(i => b64(s"b$i"))) == 5L)
+      assert(g.statAll("t", "s") == ((10L, 0L)))
       g.ack(0, "t", "s", 5L)
       assert(b0.trimmedBelow("t") == 5L, "member 0 should trim to its ack")
       assert(b1.trimmedBelow("t") == 0L,
@@ -153,10 +162,8 @@ class BrokerGroupSpec extends AnyFunSuite {
   test("a late member registration starts at that member's own trim point") {
     withGroup { (g, b0, b1) =>
       g.regAll("t", "s")
-      g.publish(0, "t", (1 to 4).map(i => b64(s"a$i")))
-      val deadline = System.nanoTime() + 5e9.toLong
-      while (g.statAll("t", "s")._1 < 4L && System.nanoTime() < deadline)
-        Thread.sleep(20)
+      assert(g.publish(0, "t", (1 to 4).map(i => b64(s"a$i"))) == 4L)
+      assert(g.statAll("t", "s") == ((4L, 0L)))
       g.ack(0, "t", "s", 4L)
       assert(b0.trimmedBelow("t") == 4L)
       // a second subscription arriving after member 0's trim: member 0

@@ -46,6 +46,16 @@ class BrokerWalSpec extends AnyFunSuite {
       }
       got.result()
     }
+    /** Payloads of `FETCH <topic> 0 1 <after> <upTo>`; asserts the MSG
+      * seqs run after+1..upTo and the `EOF <upTo>` terminator. */
+    def fetchAll(topic: String, after: Long, upTo: Long): Seq[String] = {
+      send(s"FETCH $topic 0 1 $after $upTo")
+      val got = readUntil((upTo - after).toInt + 2)(_.startsWith("EOF"))
+      assert(got.lastOption.contains(s"EOF $upTo"), s"no EOF: $got")
+      val msgs = got.init.map(_.split("\\s+"))
+      assert(msgs.map(_(1).toLong) == (after + 1 to upTo), s"seqs: $got")
+      msgs.map(m => unb64(m(2)))
+    }
     def close(): Unit = sock.close()
   }
 
@@ -63,7 +73,7 @@ class BrokerWalSpec extends AnyFunSuite {
         assert(c.read() == "OK 3")
         assert(c.read() == "OK 6")
         assert(broker.retainedCount("t") == 6)
-        // seqs identical to what PUBB would have assigned
+        // the OKs are the topic's seqs: STAT agrees
         c.send("STAT t nobody")
         assert(c.read() == "SEQ 6 0")
       } finally c.close()
@@ -94,11 +104,10 @@ class BrokerWalSpec extends AnyFunSuite {
       assert(b2.retainedCount("tt") == 13)
       val c2 = new Cli(port2)
       try {
-        // re-SUB of u1 receives exactly its unacked suffix 13..20
-        c2.send("SUB tt u1")
-        val msgs = c2.readUntil(20)(_.endsWith(b64("m20")))
-        assert(msgs.map(l => unb64(l.split("\\s+")(2))) ==
-          (13 to 20).map(i => s"m$i"), s"re-delivery after restart: $msgs")
+        // u1 re-reads exactly its unacked suffix 13..20
+        c2.send("STAT tt u1"); assert(c2.read() == "SEQ 20 12")
+        assert(c2.fetchAll("tt", 12, 20) == (13 to 20).map(i => s"m$i"),
+          "re-read after restart")
       } finally c2.close()
       // seq stability: the next publish continues, never reuses 1..20
       assert(b2.publish("tt", "m21") == 21L)
@@ -161,10 +170,9 @@ class BrokerWalSpec extends AnyFunSuite {
       assert(b2.retainedCount("ts") == 2)
       val c2 = new Cli(port2)
       try {
-        c2.send("SUB ts u")
-        val msgs = c2.readUntil(10)(_.endsWith(b64("s4")))
-        assert(msgs.map(l => unb64(l.split("\\s+")(2))) == Seq("s3", "s4"),
-          s"sync-mode replay diverged: $msgs")
+        c2.send("STAT ts u"); assert(c2.read() == "SEQ 4 2")
+        assert(c2.fetchAll("ts", 2, 4) == Seq("s3", "s4"),
+          "sync-mode replay diverged")
       } finally c2.close()
       assert(b2.publish("ts", "s5") == 5L)
     } finally b2.stop()

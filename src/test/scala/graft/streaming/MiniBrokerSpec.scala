@@ -10,10 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Raw wire-protocol coverage of [[MiniBroker]] — the behaviors the
   * round-9 verdict/advice asked for, asserted at the socket level with no
   * Spark in the loop: (topic, subscription) keying, retention trim below
-  * min-ack with re-delivery of every unacked seq, the trim-aware start of
-  * late subscriptions, the one-pusher-per-connection guard, and the
-  * FETCH range/shard contract (disjoint slices, loud refusal of trimmed
-  * ranges).
+  * min-ack with every unacked seq still readable, the trim-aware start of
+  * late subscriptions, loud refusal of anything outside the five verbs,
+  * and the FETCH range/shard contract (disjoint slices, loud refusal of
+  * trimmed ranges).
   */
 class MiniBrokerSpec extends AnyFunSuite {
 
@@ -43,16 +43,26 @@ class MiniBrokerSpec extends AnyFunSuite {
       }
       got.result()
     }
-    /** STAT on this connection, read to its `SEQ ` reply (pushed `MSG`
-      * lines before it are skipped). The broker runs a connection's verbs
-      * in order on one reader thread, so the reply proves every ACK sent
-      * before it has landed. */
+    /** STAT on this connection, read to its `SEQ ` reply. The broker
+      * runs a connection's verbs in order on one reader thread, so the
+      * reply proves every ACK sent before it has landed. */
     def barrier(topic: String, sub: String): Unit = {
       send(s"STAT $topic $sub")
-      val got = readUntil(10000)(_.startsWith("SEQ "))
-      assert(got.lastOption.exists(_.startsWith("SEQ ")),
-        s"no STAT reply: ${got.takeRight(3)}")
+      val got = read()
+      assert(got != null && got.startsWith("SEQ "), s"no STAT reply: $got")
     }
+    /** Payloads of `FETCH <topic> 0 1 <after> <upTo>`, the unacked suffix
+      * a restarted reader re-reads; asserts the MSG seqs run
+      * after+1..upTo and the `EOF <upTo>` terminator. */
+    def fetchAll(topic: String, after: Long, upTo: Long): Seq[String] = {
+      send(s"FETCH $topic 0 1 $after $upTo")
+      val got = readUntil((upTo - after).toInt + 2)(_.startsWith("EOF"))
+      assert(got.lastOption.contains(s"EOF $upTo"), s"no EOF: $got")
+      val msgs = got.init.map(_.split("\\s+"))
+      assert(msgs.map(_(1).toLong) == (after + 1 to upTo), s"seqs: $got")
+      msgs.map(m => unb64(m(2)))
+    }
+    def shutdownOutput(): Unit = sock.shutdownOutput()
     def close(): Unit = sock.close()
   }
 
@@ -63,25 +73,25 @@ class MiniBrokerSpec extends AnyFunSuite {
       for (i <- 1 to 5) broker.publish("topicA", s"a$i")
       for (i <- 1 to 3) broker.publish("topicB", s"b$i")
 
-      val ca = new Cli(port)
-      val cb = new Cli(port)
+      val c = new Cli(port)
       try {
-        ca.send("SUB topicA shared")
-        cb.send("SUB topicB shared")
-        val msgsA = ca.readUntil(10)(_.endsWith(b64("a5")))
-        val msgsB = cb.readUntil(10)(_.endsWith(b64("b3")))
-        assert(msgsA.map(l => unb64(l.split("\\s+")(2))) ==
-          (1 to 5).map(i => s"a$i"), s"topicA stream wrong: $msgsA")
-        assert(msgsB.map(l => unb64(l.split("\\s+")(2))) ==
-          (1 to 3).map(i => s"b$i"), s"topicB stream wrong: $msgsB")
+        c.send("REG topicA shared"); assert(c.read() == "OK 0")
+        c.send("REG topicB shared"); assert(c.read() == "OK 0")
+        // each (topic, name) pair reads its own topic's range
+        assert(c.fetchAll("topicA", 0, 5) == (1 to 5).map(i => s"a$i"))
+        assert(c.fetchAll("topicB", 0, 3) == (1 to 3).map(i => s"b$i"))
 
         // acking one must not move the other (the round-9 name-collision
         // bug shared one ack cell across topics)
-        ca.send("ACK topicA shared 5")
-        ca.barrier("topicA", "shared")
+        c.send("ACK topicA shared 5")
+        c.send("STAT topicA shared"); assert(c.read() == "SEQ 5 5")
+        c.send("STAT topicB shared"); assert(c.read() == "SEQ 3 0")
         assert(broker.ackedSeq("topicA", "shared") == 5L)
         assert(broker.ackedSeq("topicB", "shared") == 0L)
-      } finally { ca.close(); cb.close() }
+        // nor its retention trim: topicB keeps everything
+        assert(broker.trimmedBelow("topicA") == 5L)
+        assert(broker.trimmedBelow("topicB") == 0L)
+      } finally c.close()
     } finally broker.stop()
   }
 
@@ -114,15 +124,13 @@ class MiniBrokerSpec extends AnyFunSuite {
         assert(broker.trimmedBelow("tt") == 60L)
         assert(broker.retainedCount("tt") == 40)
 
-        // re-SUB of u1 must receive exactly its unacked suffix 61..100 —
-        // the trim never passed u1's ack, so nothing it still needs is
-        // gone
+        // a fresh reader of u1 must re-read exactly its unacked suffix
+        // 61..100 — the trim never passed u1's ack, so nothing it still
+        // needs is gone
         val c2 = new Cli(port)
         try {
-          c2.send("SUB tt u1")
-          val msgs = c2.readUntil(50)(_.endsWith(b64("m100")))
-          assert(msgs.map(l => unb64(l.split("\\s+")(2))) ==
-            (61 to 100).map(i => s"m$i"), s"re-delivery wrong: $msgs")
+          c2.send("REG tt u1"); assert(c2.read() == "OK 60")
+          assert(c2.fetchAll("tt", 60, 100) == (61 to 100).map(i => s"m$i"))
         } finally c2.close()
 
         // a subscription born after the trim starts at the trim point:
@@ -135,55 +143,20 @@ class MiniBrokerSpec extends AnyFunSuite {
     } finally broker.stop()
   }
 
-  test("PUBB bulk publish assigns contiguous seqs and delivers like per-message PUB") {
+  test("PUBA and in-process publish share one seq counter") {
     val broker = new MiniBroker
     val port = broker.start()
     try {
       val c = new Cli(port)
       try {
-        c.send("PUB tb " + b64("one"))
-        c.send("PUBB tb 3")
+        assert(broker.publish("tb", "one") == 1L)
+        c.send("PUBA tb 3")
         c.send(b64("two")); c.send(b64("three")); c.send(b64("four"))
-        c.send("PUB tb " + b64("five"))
-        val sub = new Cli(port)
-        try {
-          sub.send("SUB tb s")
-          val msgs = sub.readUntil(10)(_.endsWith(b64("five")))
-          assert(msgs.map(_.split("\\s+")(1).toLong) == (1L to 5L),
-            s"seqs not contiguous across PUB/PUBB: $msgs")
-          assert(msgs.map(l => unb64(l.split("\\s+")(2))) ==
-            Seq("one", "two", "three", "four", "five"),
-            s"bulk payloads mangled: $msgs")
-        } finally sub.close()
-      } finally c.close()
-    } finally broker.stop()
-  }
-
-  test("second SUB on one connection is refused, not a duplicate pusher") {
-    val broker = new MiniBroker
-    val port = broker.start()
-    try {
-      for (i <- 1 to 3) broker.publish("tp", s"p$i")
-      val c = new Cli(port)
-      try {
-        c.send("SUB tp s1")
-        val first = c.readUntil(5)(_.endsWith(b64("p3")))
-        assert(first.length == 3)
-        // refuse a second SUB even under a DIFFERENT sub name — and the
-        // refusal must NOT register the name: a phantom (topic, sub)
-        // entry with a frozen ack would pin the topic's retention trim
-        // forever
-        c.send("SUB tp s2")
-        // the only new line must be the refusal — a second pusher would
-        // re-deliver p1..p3 interleaved into the same writer
-        assert(c.read() == "ERR already-subscribed")
-        broker.publish("tp", "p4")
-        val next = c.readUntil(3)(_.endsWith(b64("p4")))
-        assert(next.length == 1, s"duplicate stream detected: $next")
-        c.send("ACK tp s1 4")
-        c.barrier("tp", "s1")
-        assert(broker.trimmedBelow("tp") == 4L,
-          "refused SUB registered a phantom sub and pinned the trim")
+        assert(c.read() == "OK 4")
+        assert(broker.publish("tb", "five") == 5L)
+        assert(c.fetchAll("tb", 0, 5) ==
+          Seq("one", "two", "three", "four", "five"),
+          "seqs or payloads differ across PUBA and publish")
       } finally c.close()
     } finally broker.stop()
   }
@@ -244,35 +217,7 @@ class MiniBrokerSpec extends AnyFunSuite {
     } finally broker.stop()
   }
 
-  test("SUB validates its shard pair; a rejected SUB doesn't poison the connection") {
-    val broker = new MiniBroker
-    val port = broker.start()
-    try {
-      broker.publish("ts", "m1")
-      val c = new Cli(port)
-      try {
-        // nShards=0 used to pass validation and kill the pusher thread
-        // with an uncaught division — the client then waited forever on
-        // a silently dead stream
-        c.send("SUB ts s 0 0")
-        assert(c.read().startsWith("ERR sub bad-shard"))
-        // shard >= nShards likewise streams nothing, silently
-        c.send("SUB ts s 5 2")
-        assert(c.read().startsWith("ERR sub bad-shard"))
-        // a malformed pair used to flip the one-pusher guard BEFORE
-        // parsing, so the retry answered already-subscribed forever
-        c.send("SUB ts s x y")
-        assert(c.read().startsWith("ERR bad-request"))
-        // the corrected SUB on the SAME connection must now stream
-        c.send("SUB ts s 0 1")
-        val got = c.readUntil(3)(_.startsWith("MSG"))
-        assert(got.exists(_.startsWith("MSG 1 ")),
-          s"valid SUB after rejected ones did not stream: $got")
-      } finally c.close()
-    } finally broker.stop()
-  }
-
-  test("PUBB with a non-numeric count drops the connection like out-of-range") {
+  test("PUBA with a non-numeric count drops the connection like out-of-range") {
     val broker = new MiniBroker
     val port = broker.start()
     try {
@@ -280,15 +225,15 @@ class MiniBrokerSpec extends AnyFunSuite {
       try {
         // the generic bad-request path would keep the connection and
         // misread the payload lines that follow as verbs
-        c.send("PUBB tn 3x")
-        assert(c.read().startsWith("ERR pubb-count"))
-        assert(c.read() == null, "connection survived an unparseable PUBB")
+        c.send("PUBA tn 3x")
+        assert(c.read().startsWith("ERR puba-count"))
+        assert(c.read() == null, "connection survived an unparseable PUBA")
       } finally c.close()
       assert(broker.retainedCount("tn") == 0)
     } finally broker.stop()
   }
 
-  test("PUBB with an absurd count answers ERR instead of allocating (round-11 ADVICE)") {
+  test("PUBA with an absurd count answers ERR instead of allocating (round-11 ADVICE)") {
     val broker = new MiniBroker
     val port = broker.start()
     try {
@@ -296,43 +241,81 @@ class MiniBrokerSpec extends AnyFunSuite {
       try {
         // 2 billion declared lines: a trusting broker would allocate a
         // multi-GB array before reading a single payload byte
-        c.send("PUBB tb 2000000000")
-        assert(c.read().startsWith("ERR pubb-count"),
+        c.send("PUBA tb 2000000000")
+        assert(c.read().startsWith("ERR puba-count"),
           "bogus batch count was not refused")
         // the verb stream is unavoidably desynced (the client believes
         // it owes payload lines), so the broker drops the connection
-        assert(c.read() == null, "connection survived a desynced PUBB")
+        assert(c.read() == null, "connection survived a desynced PUBA")
       } finally c.close()
       // negative counts refuse the same way, and the broker still works
       val c2 = new Cli(port)
       try {
-        c2.send("PUBB tb -1")
-        assert(c2.read().startsWith("ERR pubb-count"))
+        c2.send("PUBA tb -1")
+        assert(c2.read().startsWith("ERR puba-count"))
       } finally c2.close()
       val c3 = new Cli(port)
       try {
-        c3.send("PUBB tb 2")
+        c3.send("PUBA tb 2")
         c3.send(b64("p1")); c3.send(b64("p2"))
+        assert(c3.read() == "OK 2")
         c3.send("STAT tb x"); assert(c3.read() == "SEQ 2 0")
       } finally c3.close()
       assert(broker.retainedCount("tb") == 2)
     } finally broker.stop()
   }
 
-  test("PUBB short read drops the partial batch instead of publishing it") {
+  test("PUBA short read drops the partial batch instead of publishing it") {
     val broker = new MiniBroker
     val port = broker.start()
     try {
       val c = new Cli(port)
-      c.send("PUBB ts 5")
-      c.send(b64("only")); c.send(b64("two"))
-      c.close() // peer dies mid-batch
-      Thread.sleep(300)
+      try {
+        c.send("PUBA ts 5")
+        c.send(b64("only")); c.send(b64("two"))
+        // the peer stops mid-batch: half-close, then read to EOF — the
+        // handler closes its side only after it has dropped the partial
+        // batch, so EOF is the barrier (no OK may come first)
+        c.shutdownOutput()
+        assert(c.read() == null, "a partial batch was answered")
+      } finally c.close()
       // an at-least-once producer re-sends the WHOLE batch on reconnect,
       // so publishing the orphaned prefix would guarantee duplicates the
       // producer cannot reason about
       assert(broker.retainedCount("ts") == 0,
-        "partial PUBB batch was published")
+        "partial PUBA batch was published")
+    } finally broker.stop()
+  }
+
+  test("anything but the five verbs answers ERR bad-request and keeps the connection") {
+    val broker = new MiniBroker
+    val port = broker.start()
+    try {
+      for (i <- 1 to 3) broker.publish("tv", s"v$i")
+      val c = new Cli(port)
+      try {
+        c.send("REG tv s"); assert(c.read() == "OK 0")
+        // verbs the broker does not serve, a 3-token ACK and a 2-token
+        // STAT: an ignored line would leave its client waiting for a
+        // reply that never comes
+        for (l <- Seq("SUB tv ghost", "PUB tv " + b64("x"), "PUBB tv 1",
+            "ACK s 3", "STAT tv")) {
+          c.send(l)
+          assert(c.read() == s"ERR bad-request ${l.split(" ")(0)}", l)
+        }
+        // a blank keep-alive is still ignored, and nothing above
+        // published, acked or trimmed
+        c.send("")
+        c.send("STAT tv s"); assert(c.read() == "SEQ 3 0")
+        assert(broker.trimmedBelow("tv") == 0L)
+        assert(c.fetchAll("tv", 0, 3) == Seq("v1", "v2", "v3"))
+        // nor registered `ghost`: acking the one real subscription trims
+        // everything, where a phantom's ack 0 would pin the log
+        c.send("ACK tv s 3")
+        c.barrier("tv", "s")
+        assert(broker.trimmedBelow("tv") == 3L,
+          "a refused SUB registered a phantom subscription")
+      } finally c.close()
     } finally broker.stop()
   }
 
