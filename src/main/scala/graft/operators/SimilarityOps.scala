@@ -642,11 +642,12 @@ object SimilarityOps {
       // output. (The x side needs no twin filter: surv's u < p already
       // implies n_rep_a ≥ ⌈0.9·n_sh_a⌉.) Two doc-level metadata joins on
       // the DEDUPED pair set prune the verify fan-out BEFORE its
-      // (container, sh) exchange — measured by ContainmentPruneProbe:
-      // sf0.1 fixture 133k → 81k pairs (−38.9%), intersection fan-out
-      // 8.38M → 4.39M rows (−47.6%); 1M-doc probe corpus −5.5%/−5.6%
-      // (bounded upside on sparse corpora, never negative beyond the
-      // pair-level join itself).
+      // (container, sh) exchange — sf0.1 fixture 133k → 81k pairs
+      // (−38.9%), intersection fan-out 8.38M → 4.39M rows (−47.6%); 1M-doc
+      // probe corpus −5.5%/−5.6% (bounded upside on sparse corpora, never
+      // negative beyond the pair-level join itself). The PPJoin
+      // positional filter's measured extra cut is in COVERAGE.md
+      // ("q_containment_dedup PPJoin length and positional filters").
       val candFit = cand
         .join(docMeta.select(col("doc_id").as("doc_container"),
           col("n_rep").as("n_rep_b")), "doc_container")
@@ -2448,11 +2449,20 @@ object SimilarityOps {
     * module-level memo: nothing is cached engine-side — the caller owns
     * the handle's lifetime, and every registry query keeps training
     * inside its own plan, so the bench/oracle per-query cold contract is
-    * untouched (that is the point). The streaming twin is
-    * [[graft.streaming.IvfPqIngest.GenStructs]], whose members this
-    * mirrors; QuantizerHandleSpec pins handle-encode ≡ inline-encode bit
-    * for bit and that re-encoding under one handle runs zero training
-    * jobs. */
+    * untouched (that is the point). QuantizerHandleSpec pins
+    * handle-encode ≡ inline-encode bit for bit and that re-encoding under
+    * one handle runs zero training jobs.
+    *
+    * It is also one generation's frozen structures in
+    * [[graft.streaming.IvfPqIngest]] (Java-serialized as the store's
+    * `_structs_gG` sidecar). `rot` is the OPQ/RR rotation (Ge et al.,
+    * CVPR 2013): when present, every vector is rotated y = R·v BEFORE
+    * coarse assignment and residual encoding — centroids and codebooks
+    * are then structures OVER ROTATED SPACE, and retrieval rotates the
+    * probe by the same R before scoring. R is orthonormal, so
+    * ‖R·p − R·v‖ = ‖p − v‖: ADC scores from rotated and unrotated
+    * generations estimate the SAME true distance, which is what keeps
+    * one global top-k over a mixed-generation store valid. */
   final case class TrainedQuantizer(
       cents: Array[(Int, Array[Double])],
       cb: Array[Array[Array[Double]]],
@@ -2463,17 +2473,20 @@ object SimilarityOps {
   /** Train coarse centroids + residual PQ codebooks once (optionally in
     * a rotated space) and hand them to the caller. Same training path
     * the registry queries run inline — [[kmCentroids]] then [[pqTrain]]
-    * on [[ivfPqResiduals]] — so the handle is bit-identical to what any
-    * single query would have trained on the same frame. */
+    * on the [[ivfPqPass]] residuals — so the handle is bit-identical to
+    * what any single query would have trained on the same frame. The
+    * residual pass's broadcast is released once [[pqTrain]] has
+    * collected. */
   def trainQuantizer(
       e: DataFrame, nlist: Int, nSub: Int, ksub: Int,
       kmIters: Int = 2, pqIters: Int = 2,
       rot: Option[Array[Array[Double]]] = None): TrainedQuantizer = {
     val base = rot.map(rotateBy(e, _)).getOrElse(e)
     val cents = kmCentroids(base, nlist, kmIters)
-    val resid = ivfPqResiduals(base, cents)
-      .select(col("vec_id"), col("r").as("v"))
-    TrainedQuantizer(cents, pqTrain(resid, nSub, ksub, pqIters), rot)
+    val (pass, release) = ivfPqPass(base, cents, Array.empty)
+    try TrainedQuantizer(cents,
+      pqTrain(pass.select(col("vec_id"), col("r").as("v")), nSub, ksub, pqIters), rot)
+    finally release()
   }
 
   /** The [[ivfPqEncode]] corpus pass under a caller-owned handle —

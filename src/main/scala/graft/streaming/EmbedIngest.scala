@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -30,15 +30,20 @@ import graft.operators.AnnPlanes
   *    ABOVE every number (NaN ≥ τ is TRUE) — the verdict filter guards
   *    with an explicit `!isnan`, so they are never duplicates, matching
   *    the batch family's identical guard.
-  *  - Exactly-once, replay safety, and offline compaction are
-  *    [[IngestIndex]]'s per-batch partition machinery, shared with
-  *    NeardupIngest (see there for the crash analysis).
+  *  - Exactly-once, replay safety and offline compaction are
+  *    [[IngestIndex]]'s per-batch partition machinery, and the batch
+  *    body is [[IngestIndex.processBatch]], shared with NeardupIngest;
+  *    this object supplies the sketch, band and gate expressions and
+  *    pins the band structure on disk.
   *
   * Contract boundaries (shared with the text twin): within-batch
-  * duplicates are both kept — intra-batch dedup is the batch operators'
-  * job; the ingest gate is batch-vs-corpus only.
+  * duplicates are both kept, and a null vector is kept and never
+  * indexed.
   */
 object EmbedIngest {
+
+  private val face = IngestIndex.Face("vec_id", "bv", "v", "array<double>", "vecs")
+  private val Pinned = """(\d+)(?: (\d+))?""".r
 
   /** Starts the ingest on a streaming (vec_id: long, v: array<double>)
     * frame. Verdicts land in `verdictDir/batch=N` as (vec_id, kept,
@@ -73,101 +78,57 @@ object EmbedIngest {
       cosThreshold: Double = 0.9,
       bandBits: Int = 4,
       nBands: Int = 2): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, indexDir, verdictDir, cosThreshold,
-          bandBits, nBands)
-      }
-      .start()
+    IngestIndex.start(vecs, checkpointDir)(processBatch(_, _, indexDir,
+      verdictDir, cosThreshold, bandBits, nBands))
 
   /** Offline index compaction — [[IngestIndex.compact]] over this
     * operator's two tables. Run while the ingest query is STOPPED. */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    IngestIndex.compact(spark,
-      Seq(s"$indexDir/bands" -> "vec_id long, band int, bv long",
-        s"$indexDir/vecs" -> "vec_id long, v array<double>"))
-
-  /** The hyperplane sketch — the ONE shared construction
-    * ([[AnnPlanes.sketchCol]]), so at equal width a vector buckets
-    * identically whether it arrives by stream or by batch, enforced by
-    * the compiler rather than a manually-synced copy. */
-  private def sketchOf(v: org.apache.spark.sql.Column,
-      nPlanes: Int): org.apache.spark.sql.Column =
-    AnnPlanes.sketchCol(v, nPlanes)
+    IngestIndex.compact(spark, face.tables(indexDir))
 
   /** Pin the index's band STRUCTURE (width and band count) on disk:
-    * first touch writes the marker, every later batch verifies it. A
-    * width change re-buckets silently — every historical candidate would
-    * be missed with zero errors — and a band-count change half-misses
-    * (bands past the stored count have no corpus rows), so a mismatch on
-    * either must be a loud failure, not a recall collapse.
+    * first touch publishes the marker ([[IngestIndex.publishOnce]]),
+    * every later batch verifies it. A width change re-buckets silently —
+    * every historical candidate would be missed with zero errors — and a
+    * band-count change half-misses (bands past the stored count have no
+    * corpus rows), so a mismatch on either must be a loud failure, not a
+    * recall collapse.
     *
     * Marker format: `bits` (legacy, written when nBands == 2 so indexes
     * opened at the historical structure stay byte-compatible) or
     * `bits bands`. A legacy single-number marker therefore pins
     * nBands = 2 — exactly the structure every pre-knob index was built
-    * with.
-    *
-    * Two review-found edges: (a) a LEGACY index (bands data, no marker)
-    * predates width markers and was necessarily built at the historical
-    * default 4×2 — minting a marker at the passed structure would be the
-    * exact silent re-bucketing this guard exists to prevent, so the
-    * legacy case requires bandBits == 4 && nBands == 2 and then pins it;
-    * (b) the marker write is create-temp-then-rename (atomic on real
-    * filesystems) and the read treats an empty/garbled marker — a crash
-    * inside a non-atomic write, or hand editing — as the same loud
-    * failure, never an NPE. */
-  private def checkWidthMarker(
+    * with. A LEGACY index (bands data, no marker) predates width markers
+    * and was necessarily built at the historical default 4×2 — minting a
+    * marker at the passed structure would be the exact silent
+    * re-bucketing this guard exists to prevent, so the legacy case
+    * requires bandBits == 4 && nBands == 2 and then pins it. A garbled
+    * marker (hand editing) is the same loud failure, never an NPE. */
+  private[graft] def checkWidthMarker(
       spark: SparkSession, indexDir: String, bandBits: Int, nBands: Int): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(dir, "_band_bits")
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val line = try new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-        .readLine()
-      finally in.close()
-      val stored = Option(line).map(_.trim)
-        .filter(_.matches("\\d+( \\d+)?"))
-        .map(_.split(" ") match {
-          case Array(b) => (b.toInt, 2) // legacy: width only ⇒ 2 bands
-          case Array(b, n) => (b.toInt, n.toInt)
-        })
-      require(stored.isDefined,
-        s"unreadable band-width marker $marker (content: $line) — a crashed " +
-          "write or hand edit; restore it to the structure the index was " +
-          "built with, or rebuild the index")
-      require(stored.get._1 == bandBits,
-        s"index at $indexDir was built with bandBits=${stored.get._1}; " +
-          s"reopening it at $bandBits would re-bucket silently and miss " +
-          "every historical candidate — use the original width or rebuild")
-      require(stored.get._2 == nBands,
-        s"index at $indexDir was built with nBands=${stored.get._2}; " +
-          s"reopening it at $nBands would mis-join the stored bands and " +
-          "miss historical candidates — use the original band count or rebuild")
-    } else {
-      val hasLegacyData = fs.exists(new org.apache.hadoop.fs.Path(dir, "bands")) &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(dir, "bands")).nonEmpty
-      require(!hasLegacyData || (bandBits == 4 && nBands == 2),
+    val line = IngestIndex.publishOnce(spark, indexDir, "_band_bits") {
+      require(IngestIndex.partEntries(spark, s"$indexDir/bands").isEmpty ||
+        (bandBits == 4 && nBands == 2),
         s"index at $indexDir has band data but no width marker — it " +
           "predates width pinning and was built at the historical default " +
           s"4 bits × 2 bands; reopening it at $bandBits×$nBands would " +
-          "re-bucket silently. Reopen at 4×2 or rebuild the index at the " +
-          "new structure")
-      fs.mkdirs(dir)
-      val tmp = new org.apache.hadoop.fs.Path(dir, "_band_bits.tmp")
-      val out = fs.create(tmp, true)
-      val content = if (nBands == 2) s"$bandBits\n" else s"$bandBits $nBands\n"
-      try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, marker)) {
-        // lost a create race or stale tmp: re-validate against whoever won
-        fs.delete(tmp, false)
-        checkWidthMarker(spark, indexDir, bandBits, nBands)
-      }
+          "re-bucket silently. Reopen at 4×2 or rebuild the index")
+      if (nBands == 2) s"$bandBits" else s"$bandBits $nBands"
     }
+    val (storedBits, storedBands) = line match {
+      case Pinned(b, n) => (b.toInt, Option(n).fold(2)(_.toInt)) // `bits` ⇒ 2 bands
+      case _ => throw new IllegalArgumentException(s"unreadable band-width marker " +
+        s"$indexDir/_band_bits (content: $line) — a hand edit; restore it to " +
+        "the structure the index was built with, or rebuild the index")
+    }
+    require(storedBits == bandBits,
+      s"index at $indexDir was built with bandBits=$storedBits; " +
+        s"reopening it at $bandBits would re-bucket silently and miss " +
+        "every historical candidate — use the original width or rebuild")
+    require(storedBands == nBands,
+      s"index at $indexDir was built with nBands=$storedBands; " +
+        s"reopening it at $nBands would mis-join the stored bands and " +
+        "miss historical candidates — use the original band count or rebuild")
   }
 
   private[graft] def processBatch(
@@ -182,72 +143,28 @@ object EmbedIngest {
     require(nBands >= 2 && nBands * bandBits <= 63,
       s"nBands=$nBands: need >= 2 bands and nBands*bandBits <= 63 " +
         "(the sketch is one long)")
-    val spark = batchRaw.sparkSession
-    checkWidthMarker(spark, indexDir, bandBits, nBands)
-    val bandsDir = s"$indexDir/bands"
-    val vecsDir = s"$indexDir/vecs"
-
-    val feats = batchRaw
-      .select(col("vec_id").cast("long").as("vec_id"),
-        col("v").cast("array<double>").as("v"))
-      .persist()
-    try {
-      val newBands = feats
-        .select(col("vec_id"),
-          sketchOf(col("v"), nBands * bandBits).as("sketch"))
-        .select(col("vec_id"),
-          explode(sequence(lit(0), lit(nBands - 1))).as("band"),
-          col("sketch"))
-        .select(col("vec_id"), col("band"),
-          expr(s"shiftright(sketch, band * $bandBits)")
-            .bitwiseAND(lit((1L << bandBits) - 1)).as("bv"))
-
-      val corpusBandPaths = IngestIndex.batchPaths(spark, bandsDir, batchId)
-      val dupped: DataFrame =
-        if (corpusBandPaths.isEmpty)
-          spark.range(0).select(col("id").as("vec_id"), col("id").as("dup_of"))
-        else {
-          val cBands = spark.read
-            .schema("vec_id long, band int, bv long")
-            .parquet(corpusBandPaths: _*)
-          val cVecs = spark.read
-            .schema("vec_id long, v array<double>")
-            .parquet(IngestIndex.batchPaths(spark, vecsDir, batchId): _*)
-            .select(col("vec_id").as("corpus_vec"), col("v").as("cv"))
-          newBands.as("n")
-            .join(cBands.as("c"),
-              col("n.band") === col("c.band") && col("n.bv") === col("c.bv"))
-            .select(col("n.vec_id").as("vec_id"), col("c.vec_id").as("corpus_vec"))
-            .distinct()
-            .join(cVecs, Seq("corpus_vec"))
-            .join(feats.select(col("vec_id"), col("v")), Seq("vec_id"))
-            // !isnan is load-bearing: Spark evaluates NaN >= τ as TRUE
-            // (NaN orders above every number), so without the guard one
-            // zero-norm vector — incoming or stored — would "duplicate"
-            // every bucket-mate and mass-drop real vectors.
-            .filter(!isnan(call_function("cosine_sim", col("v"), col("cv")))
-              && call_function("cosine_sim", col("v"), col("cv"))
-              >= cosThreshold)
-            .groupBy("vec_id")
-            .agg(min("corpus_vec").as("dup_of"))
-        }
-
-      val verdicts = feats
-        .select("vec_id")
-        .join(dupped, Seq("vec_id"), "left_outer")
-        .select(col("vec_id"), col("dup_of").isNull.as("kept"), col("dup_of"))
-        .persist()
-      try {
-        val keptIds = verdicts.filter(col("kept")).select("vec_id")
-        newBands
-          .join(keptIds, Seq("vec_id"), "left_semi")
-          .write.mode(SaveMode.Overwrite).parquet(s"$bandsDir/batch=$batchId")
-        feats
-          .join(keptIds, Seq("vec_id"), "left_semi")
-          .write.mode(SaveMode.Overwrite).parquet(s"$vecsDir/batch=$batchId")
-        verdicts.write.mode(SaveMode.Overwrite)
-          .parquet(s"$verdictDir/batch=$batchId")
-      } finally verdicts.unpersist()
-    } finally feats.unpersist()
+    checkWidthMarker(batchRaw.sparkSession, indexDir, bandBits, nBands)
+    IngestIndex.processBatch(face,
+      batchRaw.select(col("vec_id").cast("long").as("vec_id"),
+        col("v").cast("array<double>").as("v")),
+      batchId, indexDir, verdictDir,
+      // Band b is bits [b·bandBits, (b+1)·bandBits) of the ONE shared
+      // sketch ([[AnnPlanes.sketchCol]]), so at equal width a vector
+      // buckets identically by stream or by batch; array_repeat
+      // evaluates the sketch once per row.
+      bands = transform(
+        array_repeat(AnnPlanes.sketchCol(col("v"), nBands * bandBits), nBands),
+        (sketch, b) => struct(b.as("band"),
+          call_function("shiftright", sketch, b * bandBits)
+            .bitwiseAND(lit((1L << bandBits) - 1)).as("bv"))),
+      corpusFeat = col("v"),
+      // !isnan is load-bearing: Spark evaluates NaN >= τ as TRUE (NaN
+      // orders above every number), so without the guard one zero-norm
+      // vector — incoming or stored — would "duplicate" every
+      // bucket-mate and mass-drop real vectors.
+      gate = (v, cv) => {
+        val cos = call_function("cosine_sim", v, cv)
+        !isnan(cos) && cos >= cosThreshold
+      })
   }
 }

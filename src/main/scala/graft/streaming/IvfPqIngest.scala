@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.SimilarityOps
+import graft.operators.SimilarityOps.TrainedQuantizer
 
 /** Streaming IVF-PQ index MAINTENANCE — the at-ingest face of
   * q_ivfpq_topk/q_ivfpq_knn_join's store (Jégou et al. 2011 §IV-A). The
@@ -26,8 +27,9 @@ import graft.operators.SimilarityOps
   *    marker carrying shape + a content hash of centroids and
   *    codebooks): codes from different codebooks are incomparable, so
   *    reopening a generation with retrained structures must FAIL LOUD,
-  *    not corrupt retrieval silently — the lesson
-  *    EmbedIngest.checkWidthMarker institutionalized.
+  *    not corrupt retrieval silently. The marker is published once
+  *    through [[IngestIndex.publishOnce]], the same helper that pins
+  *    EmbedIngest's band structure.
   *  - Each batch also writes `stats/gen=G/batch=N`: row count + mean/max
   *    quantization error ‖residual − decode(code)‖² (computed in the
   *    SAME encode pass — the argmin distance is the error). This is the
@@ -121,17 +123,6 @@ object IvfPqIngest {
   type Books = Array[Array[Array[Double]]]
   type Rot = Array[Array[Double]]
 
-  /** One generation's frozen structures. `rot` is the OPQ/RR rotation
-    * (Ge et al., CVPR 2013): when present, every vector is rotated
-    * y = R·v BEFORE coarse assignment and residual encoding — centroids
-    * and codebooks are then structures OVER ROTATED SPACE, and retrieval
-    * rotates the probe by the same R before scoring. R is
-    * orthonormal, so ‖R·p − R·v‖ = ‖p − v‖: ADC scores from rotated and
-    * unrotated generations estimate the SAME true distance, which is
-    * what keeps one global top-k over a mixed-generation store valid. */
-  final case class GenStructs(
-      cents: Cents, cb: Books, rot: Option[Rot] = None)
-
   /** Trains one generation's structures on `window` (a (vec_id, v)
     * frame whose ids are re-based 0..n-1 — the k-means/PQ seeds are the
     * lowest ids, and a retrain window's original ids are scratch) and
@@ -143,8 +134,9 @@ object IvfPqIngest {
     * structures; otherwise the generation is unrotated (identity), the
     * measured right answer for variance-balanced data where the
     * rotation costs recall. Coarse centroids and residual codebooks
-    * then train in the chosen space. This is the one-call retrain an
-    * operator runs when the qerr signal flags. */
+    * then train in the chosen space ([[SimilarityOps.trainQuantizer]]).
+    * This is the one-call retrain an operator runs when the qerr signal
+    * flags. */
   def trainGeneration(
       window: DataFrame,
       nlist: Int,
@@ -153,7 +145,7 @@ object IvfPqIngest {
       kmIters: Int = 2,
       pqIters: Int = 2,
       opqSweeps: Int = 2,
-      minDrop: Double = 0.15): GenStructs = {
+      minDrop: Double = 0.15): TrainedQuantizer = {
     // The rotation machinery (rrMatrix init, opqTrainRotation) is pinned
     // at SimilarityOps.Dim — a wider window would silently TRUNCATE
     // through rotateBy and a narrower one would throw mid-train (r19
@@ -171,15 +163,7 @@ object IvfPqIngest {
     val qerrOpq = flatQerr(window, Some(opqR), nSub, ksub, pqIters)
     val rot = if (SimilarityOps.opqArmed(qerrRr, qerrOpq, minDrop)) Some(opqR)
       else None
-    val base = rot match {
-      case Some(r) => SimilarityOps.rotateBy(window, r)
-      case None => window.select(col("vec_id").cast("long").as("vec_id"),
-        col("v").cast("array<double>").as("v"))
-    }
-    val cents = SimilarityOps.kmCentroids(base, nlist, kmIters)
-    val resid = SimilarityOps.ivfPqResiduals(base, cents)
-      .select(col("vec_id"), col("r").as("v"))
-    GenStructs(cents, SimilarityOps.pqTrain(resid, nSub, ksub, pqIters), rot)
+    SimilarityOps.trainQuantizer(window, nlist, nSub, ksub, kmIters, pqIters, rot)
   }
 
   /** Total flat-PQ quantization error of `e` under rotation `rot` —
@@ -208,12 +192,8 @@ object IvfPqIngest {
       cb: Books,
       gen: Int = 0,
       rot: Option[Rot] = None): StreamingQuery =
-    vecs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, indexDir, cents, cb, gen, rot)
-      }
-      .start()
+    IngestIndex.start(vecs, checkpointDir)(
+      processBatch(_, _, indexDir, cents, cb, gen, rot))
 
   /** Deterministic identity of the frozen structures: shape plus an MD5
     * over the exact double bits of centroids, codebooks, and (when
@@ -258,74 +238,20 @@ object IvfPqIngest {
     false
   }
 
-  /** First touch writes the generation's marker; every later batch
-    * verifies it. Mismatch = loud failure with the rebuild instruction,
-    * never silent garbage retrieval. Publish shape (r19 advisor): the
-    * content is written COMPLETE to a uniquely-named temp file, then
-    * renamed over the marker name with NO-OVERWRITE semantics
-    * (`FileContext.rename` without `Options.Rename.OVERWRITE`, which
-    * the FS contract requires to fail when the destination exists) —
-    * so no reader ever observes an empty or partial marker, which a
-    * direct `fs.create(marker, overwrite = false)` + write allows on
-    * filesystems that implement create-no-overwrite as an exists-check
-    * followed by a truncating open (RawLocalFileSystem, S3A). The
-    * no-overwrite rename itself is only as atomic as the underlying
-    * filesystem makes it (local filesystems check-then-rename), so the
-    * read-and-compare below stays the backstop either way: whatever
-    * two interleaved first writers do, each one re-reads the published
-    * marker and REQUIRES its own id — at most one proceeds. An
-    * empty/absent re-read can only be a concurrent writer's in-flight
-    * publish and is retried briefly before failing loud. */
+  /** First touch publishes the generation's marker
+    * ([[IngestIndex.publishOnce]]); every later call requires the
+    * published id to be exactly `id`. Mismatch = loud failure with the
+    * rebuild instruction, never silent garbage retrieval; of two
+    * interleaved first writers at most one proceeds. */
   private[graft] def checkCodebookMarker(
       spark: SparkSession, indexDir: String, gen: Int, id: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = fsOf(spark, dir)
-    val marker = new org.apache.hadoop.fs.Path(dir, s"_codebook_g$gen")
-    def readMarker(): Option[String] = {
-      if (!fs.exists(marker)) return None
-      val in = fs.open(marker)
-      try Option(new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-        .readLine()).map(_.trim).filter(_.nonEmpty)
-      finally in.close()
-    }
-    def mismatch(found: String): String =
+    val found = IngestIndex.publishOnce(spark, indexDir, s"_codebook_g$gen")(id)
+    require(found == id,
       s"index at $indexDir generation $gen was built with codebook " +
         s"[$found]; this operation carries [$id] — codes from different " +
         "codebooks are incomparable, so retrieval would be silently " +
         "wrong. Re-open with the original structures, begin a NEW " +
-        "generation and migrate, or rebuild the index"
-    readMarker() match {
-      case Some(line) => require(line == id, mismatch(line))
-      case None =>
-        fs.mkdirs(dir)
-        val tmp = new org.apache.hadoop.fs.Path(
-          dir, s".codebook_g$gen.tmp-${java.util.UUID.randomUUID()}")
-        val out = fs.create(tmp, true)
-        try out.write((id + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-        try {
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-            fs.getUri, spark.sparkContext.hadoopConfiguration)
-          fc.rename(tmp, marker) // no OVERWRITE option: refuses an existing marker
-        } catch {
-          case _: java.io.IOException => () // a concurrent writer won
-        } finally if (fs.exists(tmp)) fs.delete(tmp, false)
-        // Bounded re-check, no recursion: whatever the interleaving, the
-        // published marker must now carry OUR id. Empty/absent = a
-        // concurrent publish in flight — retry briefly, then fail loud.
-        var line = readMarker()
-        var tries = 0
-        while (line.isEmpty && tries < 50) {
-          Thread.sleep(10); line = readMarker(); tries += 1
-        }
-        line match {
-          case Some(l) => require(l == id, mismatch(l))
-          case None => throw new IllegalStateException(
-            s"could not publish codebook marker $marker (rename failed " +
-              "and no concurrent writer published one)")
-        }
-    }
+        "generation and migrate, or rebuild the index")
   }
 
   /** Highest generation with a published marker, or -1 for a fresh dir. */
@@ -640,7 +566,7 @@ object IvfPqIngest {
       worstRatio: Double)
 
   /** Persists generation `gen`'s frozen structures at
-    * `indexDir/_structs_g$gen` (Java-serialized [[GenStructs]] — an
+    * `indexDir/_structs_g$gen` (Java-serialized [[TrainedQuantizer]] — an
     * internal sidecar the store itself reads back, not an interchange
     * format; published complete via unique temp + rename). While the
     * generation's marker is UNPUBLISHED the file may be overwritten (an
@@ -648,7 +574,7 @@ object IvfPqIngest {
     * marker exists — codes may exist — the bytes are pinned: a save
     * whose content hash disagrees with the marker fails loud. */
   def saveGeneration(
-      spark: SparkSession, indexDir: String, gen: Int, s: GenStructs): Unit = {
+      spark: SparkSession, indexDir: String, gen: Int, s: TrainedQuantizer): Unit = {
     val dir = new org.apache.hadoop.fs.Path(indexDir)
     val fs = fsOf(spark, dir)
     val marker = new org.apache.hadoop.fs.Path(dir, s"_codebook_g$gen")
@@ -680,14 +606,14 @@ object IvfPqIngest {
     * the generation's marker when one is published (same-id or loud
     * failure — stale structures must never drive a migration). */
   def loadGeneration(
-      spark: SparkSession, indexDir: String, gen: Int): Option[GenStructs] = {
+      spark: SparkSession, indexDir: String, gen: Int): Option[TrainedQuantizer] = {
     val dir = new org.apache.hadoop.fs.Path(indexDir)
     val fs = fsOf(spark, dir)
     val dest = new org.apache.hadoop.fs.Path(dir, s"_structs_g$gen")
     if (!fs.exists(dest)) return None
     val in = fs.open(dest)
     val s = try new java.io.ObjectInputStream(in).readObject()
-      .asInstanceOf[GenStructs]
+      .asInstanceOf[TrainedQuantizer]
     finally in.close()
     if (fs.exists(new org.apache.hadoop.fs.Path(dir, s"_codebook_g$gen")))
       checkCodebookMarker(spark, indexDir, gen, codebookId(s.cents, s.cb, s.rot))
@@ -1088,7 +1014,7 @@ object IvfPqIngest {
   def retrieve(
       spark: SparkSession,
       indexDir: String,
-      gens: Map[Int, GenStructs],
+      gens: Map[Int, TrainedQuantizer],
       pv: Array[Double],
       nprobe: Int,
       k: Int): DataFrame =
@@ -1161,7 +1087,7 @@ object IvfPqIngest {
   def retrieveBatch(
       spark: SparkSession,
       indexDir: String,
-      gens: Map[Int, GenStructs],
+      gens: Map[Int, TrainedQuantizer],
       probes: DataFrame,
       nprobe: Int,
       k: Int): DataFrame = {

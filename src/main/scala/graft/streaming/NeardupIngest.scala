@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -34,15 +34,10 @@ import graft.operators.SimilarityOps
   *    side exchange; the per-batch partition layout here is what the
   *    exactly-once contract needs at write time.
   *
-  * Exactly-once across restarts, with plain parquet (no transactional
-  * table format in this environment): every batch writes its verdicts and
-  * its accepted docs' index rows to `batch=<batchId>` partition
-  * directories with overwrite semantics, and the corpus read for batch N
-  * filters to partitions with id < N. A restarted query re-delivers the
-  * last uncommitted batch under the SAME batchId (foreachBatch contract),
-  * so a half-written crash re-runs against exactly the pre-batch corpus
-  * and overwrites its own partial output — re-delivery cannot double-add
-  * state or let a batch's own rows shadow it as "corpus".
+  * Exactly-once, replay safety and offline compaction are
+  * [[IngestIndex]]'s per-batch partition machinery, and the batch body
+  * is [[IngestIndex.processBatch]], shared with EmbedIngest; this object
+  * supplies only the signature, band and gate expressions.
   *
   * Contract boundaries (shared with q_dedup_incremental): within-batch
   * twins are BOTH kept — intra-batch dedup is the batch operators' job
@@ -51,6 +46,8 @@ import graft.operators.SimilarityOps
   * catches anyway. Sub-3-word docs have no signature and are always kept.
   */
 object NeardupIngest {
+
+  private val face = IngestIndex.Face("doc_id", "bh", "sig", "array<long>", "sigs")
 
   /** Starts the ingest on a streaming (doc_id: long, text: string) frame.
     * Verdicts land in `verdictDir/batch=N` as (doc_id, kept, dup_of —
@@ -62,108 +59,43 @@ object NeardupIngest {
       verdictDir: String,
       checkpointDir: String,
       simThreshold: Double = 0.8): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        processBatch(batch, batchId, indexDir, verdictDir, simThreshold)
-      }
-      .start()
+    IngestIndex.start(docs, checkpointDir)(
+      processBatch(_, _, indexDir, verdictDir, simThreshold))
 
   /** Offline index compaction — the shared [[IngestIndex.compact]] over
     * this operator's two tables (see there for the crash-safety
-    * analysis: newest batch partition never folded, already-merged
-    * constituents deleted without re-reading, uncommitted merge attempts
-    * purged). Run while the ingest query is STOPPED. */
+    * analysis). Run while the ingest query is STOPPED. */
   def compact(spark: SparkSession, indexDir: String): Unit =
-    IngestIndex.compact(spark,
-      Seq(s"$indexDir/bands" -> "doc_id long, band int, bh long",
-        s"$indexDir/sigs" -> "doc_id long, sig array<long>"))
+    IngestIndex.compact(spark, face.tables(indexDir))
 
   private[graft] def processBatch(
       batchRaw: DataFrame,
       batchId: Long,
       indexDir: String,
       verdictDir: String,
-      simThreshold: Double): Unit = {
-    val spark = batchRaw.sparkSession
-    val bandsDir = s"$indexDir/bands"
-    val sigsDir = s"$indexDir/sigs"
-
-    // Map-side signatures at the WIDE gate width (SimilarityOps.GateK):
-    // the first K components — the only ones the band keys read — are
-    // bit-identical to the batch family, while the tail tightens the
-    // accept/reject estimator from se≈0.07 to ≈0.04 at J=0.8 (the
-    // round-12 recall gap was estimator variance, not banding — see the
-    // GateK scaladoc). Persisted because verdicts, the bands write, and
-    // the sigs write all consume this frame within the batch.
-    val sigs = batchRaw
-      .select(col("doc_id").cast("long").as("doc_id"),
-        SimilarityOps.sigExprK(col("text"), SimilarityOps.GateK).as("sig"))
-      .persist()
-    try {
-      val newBands = sigs
-        .filter(col("sig").isNotNull)
-        .select(col("doc_id"),
-          explode(SimilarityOps.bandStructs(col("sig"))).as("bb"))
-        .select(col("doc_id"), col("bb.band").as("band"), col("bb.bh").as("bh"))
-
-      val corpusBandPaths = IngestIndex.batchPaths(spark, bandsDir, batchId)
-      val dupped: DataFrame =
-        if (corpusBandPaths.isEmpty)
-          spark.range(0).select(col("id").as("doc_id"), col("id").as("dup_of"))
-        else {
-          // Explicit schemas: a batch that accepted zero docs leaves a
-          // partition directory with no data files, and schema INFERENCE
-          // (not the read itself) is what throws on those.
-          val cBands = spark.read
-            .schema("doc_id long, band int, bh long")
-            .parquet(corpusBandPaths: _*)
-          // Loud width guard: an index written at a different signature
-          // width (pre-GateK deployments) must FAIL, not silently gate at
-          // a deflated estimate — zip_with null-pads a 32-wide corpus sig
-          // against a 96-wide batch sig, capping est at 0.33 < any sane
-          // threshold, which would wave EVERY historical near-dup through
-          // as novel with zero errors. Rebuild the sigs table to upgrade.
-          val cSigs = spark.read
-            .schema("doc_id long, sig array<long>")
-            .parquet(IngestIndex.batchPaths(spark, sigsDir, batchId): _*)
-            .select(col("doc_id").as("corpus_doc"),
-              when(size(col("sig")) === SimilarityOps.GateK, col("sig"))
-                .otherwise(raise_error(concat(
-                  lit(s"sigs index width "), size(col("sig")).cast("string"),
-                  lit(s" != gate width ${SimilarityOps.GateK} for doc "),
-                  col("doc_id").cast("string"))))
-                .as("corpus_sig"))
-          newBands.as("n")
-            .join(cBands.as("c"),
-              col("n.band") === col("c.band") && col("n.bh") === col("c.bh"))
-            .select(col("n.doc_id").as("doc_id"), col("c.doc_id").as("corpus_doc"))
-            .distinct()
-            .join(cSigs, Seq("corpus_doc"))
-            .join(sigs.select(col("doc_id"), col("sig")), Seq("doc_id"))
-            .filter(SimilarityOps.estSimK(col("sig"), col("corpus_sig"),
-              SimilarityOps.GateK) >= simThreshold)
-            .groupBy("doc_id")
-            .agg(min("corpus_doc").as("dup_of"))
-        }
-
-      val verdicts = sigs
-        .select("doc_id")
-        .join(dupped, Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), col("dup_of").isNull.as("kept"), col("dup_of"))
-        .persist()
-      try {
-        val keptIds = verdicts.filter(col("kept")).select("doc_id")
-        newBands
-          .join(keptIds, Seq("doc_id"), "left_semi")
-          .write.mode(SaveMode.Overwrite).parquet(s"$bandsDir/batch=$batchId")
-        sigs
-          .filter(col("sig").isNotNull)
-          .join(keptIds, Seq("doc_id"), "left_semi")
-          .write.mode(SaveMode.Overwrite).parquet(s"$sigsDir/batch=$batchId")
-        verdicts.write.mode(SaveMode.Overwrite)
-          .parquet(s"$verdictDir/batch=$batchId")
-      } finally verdicts.unpersist()
-    } finally sigs.unpersist()
-  }
+      simThreshold: Double): Unit =
+    IngestIndex.processBatch(face,
+      // Map-side signatures at the WIDE gate width (SimilarityOps.GateK):
+      // the first K components — the only ones the band keys read — are
+      // bit-identical to the batch family, while the tail tightens the
+      // accept/reject estimator from se≈0.07 to ≈0.04 at J=0.8 (the
+      // round-12 recall gap was estimator variance, not banding — see the
+      // GateK scaladoc).
+      batchRaw.select(col("doc_id").cast("long").as("doc_id"),
+        SimilarityOps.sigExprK(col("text"), SimilarityOps.GateK).as("sig")),
+      batchId, indexDir, verdictDir,
+      bands = SimilarityOps.bandStructs(col("sig")),
+      // Loud width guard: an index written at a different signature
+      // width (pre-GateK deployments) must FAIL, not silently gate at a
+      // deflated estimate — zip_with null-pads a 32-wide corpus sig
+      // against a 96-wide batch sig, capping est at 0.33 < any sane
+      // threshold, which would wave EVERY historical near-dup through as
+      // novel with zero errors. Rebuild the sigs table to upgrade.
+      corpusFeat = when(size(col("sig")) === SimilarityOps.GateK, col("sig"))
+        .otherwise(raise_error(concat(
+          lit("sigs index width "), size(col("sig")).cast("string"),
+          lit(s" != gate width ${SimilarityOps.GateK} for doc "),
+          col("doc_id").cast("string")))),
+      gate = (sig, corpusSig) =>
+        SimilarityOps.estSimK(sig, corpusSig, SimilarityOps.GateK) >= simThreshold)
 }

@@ -82,12 +82,22 @@ class EmbedIngestSpec extends AnyFunSuite {
     // !isnan guard the incoming zero — and EVERY vector landing in a
     // zero vector's bucket — would be dropped as a "duplicate".
     EmbedIngest.processBatch(batch((1L, zero), (2L, u)), 0L, idx, out, 0.9)
-    EmbedIngest.processBatch(batch((3L, zero), (4L, u2)), 1L, idx, out, 0.9)
+    // A null vector is kept and leaves no index row (the shared batch
+    // body's rule for a null feature, as for a signature-less document).
+    EmbedIngest.processBatch(batch((3L, zero), (4L, u2), (5L, null)), 1L, idx, out, 0.9)
     val v = verdicts(out)
     assert(v(1L) == ((true, None)) && v(3L) == ((true, None)),
       s"zero-norm vector wrongly treated as duplicate: $v")
     assert(v(4L) == ((false, Some(2L))),
       s"true scaled copy must still drop under the guard: $v")
+    assert(v(5L) == ((true, None)), s"null vector must be kept as novel: $v")
+    val indexed = Seq("bands" -> "vec_id long, band int, bv long",
+      "vecs" -> "vec_id long, v array<double>").map { case (t, schema) =>
+      t -> spark.read.schema(schema).parquet(s"$idx/$t")
+        .filter("vec_id = 5").count()
+    }
+    assert(indexed == Seq("bands" -> 0L, "vecs" -> 0L),
+      s"null vector must leave no index row: $indexed")
   }
 
   test("band width is pinned per index: a mismatched reopen fails loudly") {

@@ -66,7 +66,7 @@ class IvfPqDeleteSpec extends AnyFunSuite {
 
   private def topIds(dir: String, k: Int = 20): Set[Long] = {
     val (cents, cb) = structures
-    IvfPqIngest.retrieve(spark, dir, Map(0 -> IvfPqIngest.GenStructs(cents, cb)),
+    IvfPqIngest.retrieve(spark, dir, Map(0 -> SimilarityOps.TrainedQuantizer(cents, cb)),
       fixture._1(7)._2, 3, k)
       .collect().map(_.getLong(0)).toSet
   }
@@ -229,7 +229,7 @@ class IvfPqDeleteSpec extends AnyFunSuite {
     IvfPqIngest.delete(spark, dir, idsDf(victims))
     val k = 10
     val got = IvfPqIngest.retrieve(spark, dir,
-      Map(0 -> IvfPqIngest.GenStructs(cents, cb)), pv, 3, k)
+      Map(0 -> SimilarityOps.TrainedQuantizer(cents, cb)), pv, 3, k)
       .collect().map(_.getLong(0))
     assert(got.length == k,
       s"top-$k under-filled to ${got.length} with live rows available")

@@ -110,7 +110,7 @@ class IvfPqIngestSpec extends AnyFunSuite {
     // the ingest store owes is the SHORTLIST: k covering the tie group
     // must surface every planted twin at the minimum ADC score.
     val got = IvfPqIngest.retrieve(spark, dir,
-      Map(0 -> IvfPqIngest.GenStructs(cents, cb)), pv, 3, 20)
+      Map(0 -> SimilarityOps.TrainedQuantizer(cents, cb)), pv, 3, 20)
     // the nprobe filter must reach the scan as partition pruning even
     // across the batch=N/cid=K two-level layout
     val plan = got.queryExecution.executedPlan.toString
@@ -173,39 +173,46 @@ class IvfPqIngestSpec extends AnyFunSuite {
   }
 
   test("concurrent first publishers: one complete id wins, failures are loud") {
-    // Drives checkCodebookMarker itself from many threads racing the
-    // SAME fresh dir with TWO different ids. The contract (scaladoc):
-    // the published marker always holds ONE COMPLETE candidate id —
-    // never empty, never partial (the temp+rename publish never
-    // exposes in-flight bytes) — every failure is the loud
-    // incomparable message (never a silent proceed-with-nothing), and
-    // at least one writer succeeds. The exact success/failure
-    // partition vs the final content is best-effort on a local FS
-    // (rename-no-overwrite is check-then-rename underneath — the
-    // documented residual window the read-and-compare backstops), so
-    // it is deliberately NOT asserted here.
-    val dir = freshDir("race")
-    val ids = Seq("ivfpq 8 8 16 aaaa", "ivfpq 8 8 16 bbbb")
+    // Drives each publish-once marker itself from many threads racing the
+    // SAME fresh dir with TWO different candidates: the codebook marker
+    // (two ids) and EmbedIngest's band marker (bandBits 4 and 12). The
+    // contract (IngestIndex.publishOnce): the published marker always
+    // holds ONE COMPLETE candidate — never empty, never partial (the
+    // temp+rename publish never exposes in-flight bytes) — every failure
+    // is the marker's loud mismatch message (never a silent
+    // proceed-with-nothing), and at least one writer succeeds. The exact
+    // success/failure partition vs the final content is best-effort on a
+    // local FS (rename-no-overwrite is check-then-rename underneath — the
+    // documented residual window the read-and-compare backstops), so it
+    // is deliberately NOT asserted here.
+    val markers = Seq(
+      ("_codebook_g0", Seq("ivfpq 8 8 16 aaaa", "ivfpq 8 8 16 bbbb"), "incomparable",
+        (dir: String, c: String) => IvfPqIngest.checkCodebookMarker(spark, dir, 0, c)),
+      ("_band_bits", Seq("4", "12"), "bandBits=",
+        (dir: String, c: String) => EmbedIngest.checkWidthMarker(spark, dir, c.toInt, 2)))
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val results = Await.result(
-      Future.sequence((0 until 16).map { i =>
-        Future {
-          try { IvfPqIngest.checkCodebookMarker(spark, dir, 0, ids(i % 2)); None }
-          catch { case e: IllegalArgumentException => Some(e.getMessage) }
-        }
-      }), 60.seconds)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(new org.apache.hadoop.fs.Path(dir, "_codebook_g0"))
-    val won = try new java.io.BufferedReader(
-      new java.io.InputStreamReader(in)).readLine() finally in.close()
-    assert(ids.contains(won), s"marker holds neither candidate id: [$won]")
-    assert(results.exists(_.isEmpty), "no writer succeeded")
-    results.filter(_.isDefined).foreach { r =>
-      assert(r.exists(_.contains("incomparable")),
-        s"a losing writer did not fail loud: $r")
+    markers.foreach { case (name, ids, loud, check) =>
+      val dir = freshDir("race")
+      val results = Await.result(
+        Future.sequence((0 until 16).map { i =>
+          Future {
+            try { check(dir, ids(i % 2)); None }
+            catch { case e: IllegalArgumentException => Some(e.getMessage) }
+          }
+        }), 60.seconds)
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val in = fs.open(new org.apache.hadoop.fs.Path(dir, name))
+      val won = try new java.io.BufferedReader(
+        new java.io.InputStreamReader(in)).readLine() finally in.close()
+      assert(ids.contains(won), s"$name holds neither candidate: [$won]")
+      assert(results.exists(_.isEmpty), s"$name: no writer succeeded")
+      results.filter(_.isDefined).foreach { r =>
+        assert(r.exists(_.contains(loud)),
+          s"$name: a losing writer did not fail loud: $r")
+      }
     }
   }
 
@@ -251,7 +258,7 @@ class IvfPqIngestSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("incomparable"))
     val ex2 = intercept[IllegalArgumentException] {
       IvfPqIngest.retrieve(spark, dir,
-        Map(0 -> IvfPqIngest.GenStructs(cents, cb2)), boot.head._2, 2, 5)
+        Map(0 -> SimilarityOps.TrainedQuantizer(cents, cb2)), boot.head._2, 2, 5)
     }
     assert(ex2.getMessage.contains("incomparable"))
   }

@@ -60,12 +60,12 @@ class IvfPqMaintainSpec extends AnyFunSuite {
   private lazy val allRows: Seq[(Long, Array[Double])] =
     fixture._1 ++ fixture._2.flatten
 
-  private lazy val gen0: IvfPqIngest.GenStructs = {
+  private lazy val gen0: SimilarityOps.TrainedQuantizer = {
     val e = df(fixture._1)
     val cents = SimilarityOps.kmCentroids(e, 8, 2)
     val resid = SimilarityOps.ivfPqResiduals(e, cents)
       .select(col("vec_id"), col("r").as("v"))
-    IvfPqIngest.GenStructs(cents, SimilarityOps.pqTrain(resid, 8, 16, 2))
+    SimilarityOps.TrainedQuantizer(cents, SimilarityOps.pqTrain(resid, 8, 16, 2))
   }
 
   /** The retrain window an operator actually has: the last in-dist
@@ -92,7 +92,7 @@ class IvfPqMaintainSpec extends AnyFunSuite {
   private def maintainOnce(dir: String) =
     IvfPqIngest.maintain(spark, dir, df(allRows), df(window), 8, 8, 16)
 
-  private def flatStructs(s: IvfPqIngest.GenStructs): Seq[Double] =
+  private def flatStructs(s: SimilarityOps.TrainedQuantizer): Seq[Double] =
     s.cents.sortBy(_._1).toSeq.flatMap(_._2.toSeq) ++
       s.cb.toSeq.flatMap(_.toSeq.flatMap(_.toSeq)) ++
       s.rot.toSeq.flatMap(_.toSeq.flatMap(_.toSeq))

@@ -78,7 +78,7 @@ class IvfPqMigrateSpec extends AnyFunSuite {
   private lazy val gen1 = train((fixture._2(1) ++ fixture._2(2)).map(_._2))
 
   private def structs(s: (IvfPqIngest.Cents, IvfPqIngest.Books)) =
-    IvfPqIngest.GenStructs(s._1, s._2)
+    SimilarityOps.TrainedQuantizer(s._1, s._2)
 
   /** Ingest boot + all batches into a fresh dir at generation `gen`. */
   private def build(dir: String, s: (IvfPqIngest.Cents, IvfPqIngest.Books),

@@ -64,29 +64,29 @@ class IvfPqOpqSpec extends AnyFunSuite {
     fixture._1 ++ fixture._2.flatten
 
   /** Unrotated gen-0 structures (the pre-OPQ store). */
-  private lazy val gen0: IvfPqIngest.GenStructs = {
+  private lazy val gen0: SimilarityOps.TrainedQuantizer = {
     val e = df(fixture._1)
     val cents = SimilarityOps.kmCentroids(e, 8, 2)
     val resid = SimilarityOps.ivfPqResiduals(e, cents)
       .select(col("vec_id"), col("r").as("v"))
-    IvfPqIngest.GenStructs(cents, SimilarityOps.pqTrain(resid, 8, 16, 2))
+    SimilarityOps.TrainedQuantizer(cents, SimilarityOps.pqTrain(resid, 8, 16, 2))
   }
 
   /** OPQ gen-1: train R on the bootstrap window, then coarse + PQ
     * structures in ROTATED space — the structures an operator ships
     * when the qerr signal says the flat codebooks under-resolve. */
-  private lazy val gen1: IvfPqIngest.GenStructs = {
+  private lazy val gen1: SimilarityOps.TrainedQuantizer = {
     val e = df(fixture._1)
     val r = SimilarityOps.opqTrainRotation(e, 8, 16, 2, 1)
     val rot = SimilarityOps.rotateBy(e, r)
     val cents = SimilarityOps.kmCentroids(rot, 8, 2)
     val resid = SimilarityOps.ivfPqResiduals(rot, cents)
       .select(col("vec_id"), col("r").as("v"))
-    IvfPqIngest.GenStructs(
+    SimilarityOps.TrainedQuantizer(
       cents, SimilarityOps.pqTrain(resid, 8, 16, 2), Some(r))
   }
 
-  private def build(dir: String, s: IvfPqIngest.GenStructs, gen: Int): Unit = {
+  private def build(dir: String, s: SimilarityOps.TrainedQuantizer, gen: Int): Unit = {
     val (boot, batches) = fixture
     if (gen > 0) IvfPqIngest.beginGeneration(spark, dir, gen, s.cents, s.cb, s.rot)
     IvfPqIngest.processBatch(df(boot), 0L, dir, s.cents, s.cb, gen, s.rot)
@@ -170,7 +170,7 @@ class IvfPqOpqSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("incomparable"))
     // And retrieval with the rotation dropped must refuse too.
     val ex2 = intercept[IllegalArgumentException] {
-      IvfPqIngest.retrieve(spark, dir, Map(0 -> IvfPqIngest.GenStructs(s.cents, s.cb)),
+      IvfPqIngest.retrieve(spark, dir, Map(0 -> SimilarityOps.TrainedQuantizer(s.cents, s.cb)),
         fixture._1(7)._2, 3, 5)
         .collect()
     }
@@ -256,7 +256,7 @@ class IvfPqOpqSpec extends AnyFunSuite {
     * into that generation's space, top-k by (adc, vec_id). */
   private def replay(
       codes: Seq[(Int, Long, Long, Int, Seq[Byte])],
-      gens: Map[Int, IvfPqIngest.GenStructs],
+      gens: Map[Int, SimilarityOps.TrainedQuantizer],
       deleted: Set[Long],
       pv: Array[Double], nprobe: Int, k: Int): Seq[(Long, Double)] = {
     val batchGens = codes.groupBy(_._2).map { case (b, rs) => b -> rs.map(_._1).max }

@@ -1,6 +1,7 @@
 package org.apache.spark
 
 import graft.{QuantizerTraining, TestSpark}
+import graft.operators.SimilarityOps
 import org.apache.spark.storage.BroadcastBlockId
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
@@ -36,9 +37,22 @@ class BroadcastLeakSpec extends AnyFunSuite {
     val before = valueBroadcasts()
     QuantizerTraining.kmCentroids(e, 40, 2)
     QuantizerTraining.pqTrain(e, 4, 8, 2)
+    assertReleased(before)
+  }
+
+  test("unrotated trainQuantizer leaves no broadcast behind") {
+    import spark.implicits._
+    val e = (0L until 300L).map { i =>
+      (i, Array.tabulate(64)(j => math.cos(i * 5 + j * 2) * 10))
+    }.toDF("vec_id", "v")
+    val before = valueBroadcasts()
+    SimilarityOps.trainQuantizer(e, nlist = 8, nSub = 8, ksub = 8)
+    assertReleased(before)
+  }
+
+  private def assertReleased(before: Set[Long]): Unit =
     eventually(timeout(Span(10, Seconds)), interval(Span(50, Millis))) {
       val left = valueBroadcasts() -- before
       assert(left.isEmpty, s"training left broadcasts ${left.toSeq.sorted}")
     }
-  }
 }
